@@ -1,12 +1,10 @@
 package graft
 
 import graft.corpus.Turn
-import graft.pipeline.{GraphSink, KgPipeline, NerTraining}
+import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-
-import java.nio.charset.StandardCharsets
 
 /** Incremental KG maintenance — the production shape at 10^12 turns,
   * where re-running the full job for each day of new transcripts would
@@ -30,9 +28,10 @@ import java.nio.charset.StandardCharsets
   *      contribution) instead of re-aggregating the whole table;
   *   5. entities and link state are alias-scale — rewritten outright.
   *
-  * Crash safety follows the repo's one protocol (stage → rename-commit
-  * marker → mutate → swap), with every read the tail needs staged
-  * under `<output>/_incr/` BEFORE the first live-directory mutation:
+  * Crash safety follows the repo's one protocol (stage → commit marker
+  * → mutate → swap, all through `pipeline.Commit`), with every read the
+  * tail needs staged under `<output>/_incr/` BEFORE the first
+  * live-directory mutation:
   *
   *   marker.json                intent: batch token, bucket set, layout
   *   linkstate_new/             staged merged nodes+labels (committed)
@@ -59,6 +58,8 @@ object KgIncrementalJob {
 
   private val knownFlags = Set("--input", "--model", "--output")
   private val RAW = Seq("conv_id", "turn_idx", "ts", "subj", "pred", "obj", "subj_tag", "obj_tag")
+  /** Format prefix of every batch token (see `batchToken`). */
+  private[graft] val TokenFormat = "v2-"
 
   def main(args: Array[String]): Unit = {
     if (args.length % 2 != 0)
@@ -86,27 +87,13 @@ object KgIncrementalJob {
 
   // ------------------------------------------------------------- helpers
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Write-once: a marker that already exists is left alone (resume paths
     * re-traverse commit points; delete-then-rename would open a window
     * where `manifests_invalidated` is absent while the table IS mutated,
     * and the next invocation would mistake that for untouched state).
     */
-  private def writeMarker(f: FileSystem, path: String, json: String): Unit = {
-    if (f.exists(new Path(path))) return
-    val tmp = new Path(path + ".tmp")
-    val out = f.create(tmp, true)
-    out.write(json.getBytes(StandardCharsets.UTF_8))
-    out.close()
-    require(f.rename(tmp, new Path(path)), s"marker commit rename failed: $path")
-  }
-
-  private def readJson(f: FileSystem, path: String): String = {
-    val in = f.open(new Path(path))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
+  private def writeMarker(f: FileSystem, path: String, json: String): Unit =
+    if (!f.exists(new Path(path))) Commit.write(f, new Path(path), json)
 
   private def deleteManifests(f: FileSystem, output: String, buckets: Seq[Int]): Unit =
     for (b <- buckets) f.delete(new Path(s"$output/_manifests/bucket-$b.json"), false)
@@ -116,6 +103,12 @@ object KgIncrementalJob {
     * for any other batch — the key for both mid-write resume (only the
     * same batch may continue an interrupted rewrite) and the
     * exactly-once ledger.
+    *
+    * The token carries its format version ([[TokenFormat]]): a token
+    * computed by another formula can never equal the current one, so a
+    * ledger holding it would silently re-admit the batch it recorded.
+    * Ledgers and staging markers holding unversioned tokens (the formula
+    * before `ts`/`role`/`tool` joined the fingerprint) are refused.
     */
   private def batchToken(turns: DataFrame): (Long, String) = {
     // every tagging-relevant Turn field participates (ADVICE r5): two
@@ -126,7 +119,7 @@ object KgIncrementalJob {
       expr("bit_xor(xxhash64(conv_id, turn_idx, role, text, tool, ts))").as("fp")).first()
     val n = r.getLong(0)
     require(n > 0, "empty input batch — nothing to apply")
-    (n, f"b$n%d-${r.getLong(1)}%016x")
+    (n, f"${TokenFormat}b$n%d-${r.getLong(1)}%016x")
   }
 
   // ------------------------------------------------------------ the job
@@ -139,7 +132,7 @@ object KgIncrementalJob {
       failAfter: Option[String] = None): IncrMetrics = {
     import spark.implicits._
     val incr = s"$output/_incr"
-    val f = fsOf(spark, output)
+    val f = Commit.fs(spark, output)
     def exists(p: String) = f.exists(new Path(p))
     // phase walls to stderr, mirroring KgJob: the apply's cost story at
     // scale is "batch-proportional + fixed planning" — the walls make the
@@ -159,9 +152,14 @@ object KgIncrementalJob {
 
     // ---- recovery: an _incr staging area from a previous invocation
     if (exists(s"$incr/marker.json")) {
-      val mj = readJson(f, s"$incr/marker.json")
+      val mj = Commit.read(f, new Path(s"$incr/marker.json"))
       val mToken = """"token":"([^"]+)"""".r.findFirstMatchIn(mj)
         .map(_.group(1)).getOrElse(sys.error(s"malformed $incr/marker.json: $mj"))
+      require(mToken.startsWith(TokenFormat),
+        s"$incr/marker.json records batch token $mToken, written before the $TokenFormat " +
+          "token format: it cannot be compared with the current input's token. Finish the " +
+          "interrupted run with the release that started it, then rebuild the output with " +
+          "the full graft.KgJob over every batch applied so far")
       if (!exists(s"$incr/manifests_invalidated.json")) {
         // intent was staged but nothing live was mutated — prior state
         // is fully intact; discard and start over
@@ -209,6 +207,13 @@ object KgIncrementalJob {
     val st = GraphSink.readLinkState(spark, s"$output/_linkstate").getOrElse(
       sys.error(s"$output holds no committed link state — run the full graft.KgJob against " +
         "it first (outputs written before link state existed must be rebuilt once)"))
+    val oldTokens = st.appliedTokens.filterNot(_.startsWith(TokenFormat))
+    require(oldTokens.isEmpty,
+      s"the applied-batch ledger of $output/_linkstate holds ${oldTokens.size} token(s) written " +
+        s"before the $TokenFormat token format (e.g. ${oldTokens.head}): a batch applied under " +
+        "them would not be recognised and could be applied twice. Migrate by rebuilding the " +
+        "output with the full graft.KgJob over every batch applied so far; its ledger starts " +
+        "empty in the current format")
     require(!st.appliedTokens.contains(token),
       s"input batch $token was already applied to $output — a batch must be applied exactly " +
         "once (re-applying would double its mention counts, triples, and edge weights)")
@@ -366,16 +371,10 @@ object KgIncrementalJob {
       .getOrElse(sys.error(s"no committed link state under $incr/linkstate_new or " +
         s"$output/_linkstate — the output is torn; restore from backup or re-run the full job"))
     GraphSink.writeEntities(KgPipeline.entitiesTable(state.nodes, state.labels), output)
-    if (exists(s"$incr/edges_new.done.json") && exists(s"$incr/edges_new")) {
-      f.delete(new Path(s"$output/edges"), true)
-      require(f.rename(new Path(s"$incr/edges_new"), new Path(s"$output/edges")),
-        s"edges swap rename failed under $output")
-    }
-    if (exists(s"$incr/linkstate_new/_committed.json")) {
-      f.delete(new Path(s"$output/_linkstate"), true)
-      require(f.rename(new Path(s"$incr/linkstate_new"), new Path(s"$output/_linkstate")),
-        s"link-state swap rename failed under $output")
-    }
+    if (exists(s"$incr/edges_new.done.json") && exists(s"$incr/edges_new"))
+      Commit.swapDir(f, new Path(s"$incr/edges_new"), new Path(s"$output/edges"))
+    if (exists(s"$incr/linkstate_new/_committed.json"))
+      Commit.swapDir(f, new Path(s"$incr/linkstate_new"), new Path(s"$output/_linkstate"))
     f.delete(new Path(incr), true)
     // every live dir this method mutates in place: drop the cached file
     // listings (the global FileStatusCache has no TTL)

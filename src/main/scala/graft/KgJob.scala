@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.Turn
-import graft.pipeline.{GraphSink, KgPipeline, NerTraining}
+import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining}
 import org.apache.spark.sql.SparkSession
 
 /** Production spark-submit entry point for the full KG-construction job
@@ -120,7 +120,7 @@ object KgJob {
     // the node-set fingerprint guard even after clearing triples +
     // _manifests (ADVICE r4). Delete it at the success point.
     val ccDir = new org.apache.hadoop.fs.Path(s"$output/_cc_checkpoints")
-    val hfs = ccDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hfs = Commit.fs(spark, output)
     if (hfs.exists(ccDir)) hfs.delete(ccDir, true)
     JobMetrics(nTurns, nTriples, nEntities, nEdges, wm.buckets, wm.skippedBuckets)
   }

@@ -718,7 +718,7 @@ object SparkEntry {
       // buckets) and make the returned manifest table nondeterministic
       val outDir = s"/tmp/graft_kg_out/${new java.io.File(d).getName}"
       val p = new org.apache.hadoop.fs.Path(outDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val fs = graft.pipeline.Commit.fs(s, outDir)
       if (fs.exists(p)) fs.delete(p, true)
       graft.pipeline.GraphSink.writeTriples(s, b.out.resolvedTriples, outDir, 16)
       graft.pipeline.GraphSink.writeEntities(b.out.entities, outDir)
@@ -737,7 +737,7 @@ object SparkEntry {
       val b = Kg.built(s, d)
       val outDir = s"/tmp/graft_kg_day/${new java.io.File(d).getName}"
       val p = new org.apache.hadoop.fs.Path(outDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val fs = graft.pipeline.Commit.fs(s, outDir)
       if (fs.exists(p)) fs.delete(p, true)
       // day-partition ONE MONTH of the corpus, not all of it: the
       // synthetic generator spaces conversations 1 h apart, so sf0.1

@@ -46,9 +46,21 @@ object Gazetteer {
     * Computing each side's set once before the join leaves only cheap
     * native set arithmetic on the pair stream.
     */
-  private def trigramSet(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private[graft] def trigramSet(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     array_distinct(coalesce(graft.functions.NativeFunctions.char_trigrams(c),
       typedLit(Array.empty[String])))
+
+  /** Jaccard over two precomputed trigram sets: |∩| / (|a| + |b| - |∩|),
+    * with the both-empty case = 1.0 — exactly Similarity.jaccard. The
+    * division is the same IEEE double op on the same exact ints, so
+    * scores are bit-identical to the old UDF (oracle-pinned).
+    */
+  private[graft] def trigramJaccard(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    val inter = size(array_intersect(a, b))
+    when(size(a) === 0 && size(b) === 0, lit(1.0))
+      .otherwise(inter.cast("double") / (size(a) + size(b) - inter).cast("double"))
+  }
 
   /** Gazetteer side projected to exactly what scoring consumes, with
     * the trigram set replacing `alias_norm` (guide §2.3: the table
@@ -67,16 +79,8 @@ object Gazetteer {
     * `ga` (alias norm) on the candidate rows.
     */
   private def bestPerSurface(cands: DataFrame): DataFrame = {
-    // Jaccard over the precomputed sets: |∩| / (|a| + |b| - |∩|), with
-    // the both-empty case = 1.0 — exactly Similarity.jaccard. The
-    // division is the same IEEE double op on the same exact ints, so
-    // scores are bit-identical to the old UDF (oracle-pinned).
-    val inter = size(array_intersect(col("gn"), col("ga")))
     val scored = cands
-      .withColumn("sim",
-        when(size(col("gn")) === 0 && size(col("ga")) === 0, lit(1.0))
-          .otherwise(inter.cast("double") /
-            (size(col("gn")) + size(col("ga")) - inter).cast("double")))
+      .withColumn("sim", trigramJaccard(col("gn"), col("ga")))
       .where(col("sim") >= 0.3) // residual theta predicate after equi-join
       .withColumn("score",
         round(col("sim") * 0.6 +

@@ -1,10 +1,8 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
-
-import java.nio.charset.StandardCharsets
 
 /** Graph materialization with per-partition lineage manifests and
   * checkpointed resumability (SURVEY.md §7.5, north rule: "resumable from
@@ -18,7 +16,7 @@ import java.nio.charset.StandardCharsets
   *   1. triples for pending buckets are written via
   *      partitionBy(conv_bucket) (directory-atomic per partition),
   *   2. a manifest JSON {bucket, rows, fingerprint, config} is written
-  *      AFTER the data via temp-file + rename (the commit point).
+  *      AFTER the data through [[Commit.write]] (the commit point).
   * Resume = list manifests, anti-join done buckets, process the rest.
   * The fingerprint is an order-independent sum of xxhash64 over the
   * partition's logical content, so a resumed run can verify integrity
@@ -44,17 +42,9 @@ object GraphSink {
     resolvedTriples.withColumn("conv_bucket",
       pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int"))
 
-  /** FS resolved from the target path, not the default filesystem — a
-    * non-default-FS outDir (hdfs://, s3a://) would otherwise be checked
-    * against the wrong filesystem (same fix as StreamingIngest.writeBatch,
-    * ADVICE r2).
-    */
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   def doneBuckets(spark: SparkSession, outDir: String): Set[Int] = {
     val dir = new Path(s"$outDir/_manifests")
-    val f = fs(spark, outDir)
+    val f = Commit.fs(spark, outDir)
     if (!f.exists(dir)) Set.empty
     else f.listStatus(dir).toSeq
       .map(_.getPath.getName)
@@ -90,7 +80,7 @@ object GraphSink {
     // ones (readers then fail on conflicting directory structures) —
     // refuse loudly instead
     if (done.nonEmpty) validateResumeConfig(spark, outDir, nBuckets, configHash, dayPartition)
-    val f = fs(spark, outDir)
+    val f = Commit.fs(spark, outDir)
     // whole-bucket replace on resume (ADVICE r4): dynamic overwrite only
     // replaces the LEAF partitions present in the resumed data. Under the
     // day layout, if a pending (uncommitted) bucket's resumed rows split
@@ -198,15 +188,10 @@ object GraphSink {
       val json =
         s"""{"bucket":$bucket,"rows":${r.getLong(1)},"fingerprint":${r.getLong(2)},""" +
           s""""config":"$configHash","n_buckets":$nBuckets,"day_partition":$dayPartition}"""
-      val tmp = new Path(s"$outDir/_manifests/.bucket-$bucket.json.tmp")
-      val dst = new Path(s"$outDir/_manifests/bucket-$bucket.json")
-      val out = f.create(tmp, true)
-      out.write(json.getBytes(StandardCharsets.UTF_8))
-      out.close()
-      // rename IS the commit point: fail loudly rather than leave the
-      // bucket data committed but unmanifested (the resume protocol would
-      // then re-process it — idempotent, but the failure must surface)
-      require(f.rename(tmp, dst), s"manifest commit rename failed: $tmp -> $dst")
+      // fails loudly rather than leave the bucket data committed but
+      // unmanifested (the resume protocol would then re-process it —
+      // idempotent, but the failure must surface)
+      Commit.write(f, new Path(s"$outDir/_manifests/bucket-$bucket.json"), json)
     }
     WriteMetrics(perBucket.length, done.size, rows, convs)
   }
@@ -218,13 +203,12 @@ object GraphSink {
     */
   private def validateResumeConfig(spark: SparkSession, outDir: String,
       nBuckets: Int, configHash: String, dayPartition: Boolean = false): Unit = {
-    val f = fs(spark, outDir)
+    val f = Commit.fs(spark, outDir)
     val dir = new Path(s"$outDir/_manifests")
     val sample = f.listStatus(dir).toSeq
       .map(_.getPath).find(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
     for (p <- sample) {
-      val in = f.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val json = Commit.read(f, p)
       for (m <- """"n_buckets":(\d+)""".r.findFirstMatchIn(json)) {
         require(m.group(1).toInt == nBuckets,
           s"resume with nBuckets=$nBuckets against a table committed with " +
@@ -252,7 +236,7 @@ object GraphSink {
     * its component labels, plus the identity tokens of every input batch
     * already applied (the double-apply guard — re-merging a batch would
     * double its mention counts and duplicate its triples). Committed via
-    * the usual tmp+rename marker; a directory without `_committed.json`
+    * a [[Commit.write]] marker; a directory without `_committed.json`
     * is not link state (a crash mid-write must read as "absent", with
     * the full job as the remediation).
     */
@@ -263,7 +247,7 @@ object GraphSink {
 
   def writeLinkState(spark: SparkSession, nodes: DataFrame, labels: DataFrame,
       dir: String, appliedTokens: Seq[String] = Nil): Unit = {
-    val f = fs(spark, dir)
+    val f = Commit.fs(spark, dir)
     // invalidate first: a crash below leaves no marker, not a stale one
     f.delete(linkStateMarker(dir), false)
     nodes.select(col("norm"), col("tag"), col("n_mentions"), col("surface"), col("node_id"))
@@ -272,11 +256,7 @@ object GraphSink {
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/labels")
     val n = spark.read.parquet(s"$dir/nodes").count()
     val json = s"""{"n_nodes":$n,"applied":[${appliedTokens.map("\"" + _ + "\"").mkString(",")}]}"""
-    val tmp = new Path(s"$dir/._committed.json.tmp")
-    val out = f.create(tmp, true)
-    out.write(json.getBytes(StandardCharsets.UTF_8))
-    out.close()
-    require(f.rename(tmp, linkStateMarker(dir)), s"link-state commit rename failed in $dir")
+    Commit.write(f, linkStateMarker(dir), json)
   }
 
   /** None when the directory holds no COMMITTED link state. The node
@@ -285,15 +265,14 @@ object GraphSink {
     * loudly instead of silently merging against partial state.
     */
   def readLinkState(spark: SparkSession, dir: String): Option[LinkState] = {
-    val f = fs(spark, dir)
+    val f = Commit.fs(spark, dir)
     if (!f.exists(linkStateMarker(dir))) return None
     // the dir is swapped IN PLACE by incremental runs; Spark's global
     // FileStatusCache has no TTL, so a listing cached before the swap
     // would resolve to deleted part files
     spark.catalog.refreshByPath(s"$dir/nodes")
     spark.catalog.refreshByPath(s"$dir/labels")
-    val in = f.open(linkStateMarker(dir))
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val json = Commit.read(f, linkStateMarker(dir))
     val nRecorded = """"n_nodes":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
       .getOrElse(sys.error(s"malformed link-state marker in $dir: $json"))
     val applied = """"applied":\[([^\]]*)\]""".r.findFirstMatchIn(json)
@@ -312,14 +291,13 @@ object GraphSink {
     * manifest has been committed.
     */
   def readCommittedLayout(spark: SparkSession, outDir: String): Option[(Int, String, Boolean)] = {
-    val f = fs(spark, outDir)
+    val f = Commit.fs(spark, outDir)
     val dir = new Path(s"$outDir/_manifests")
     if (!f.exists(dir)) return None
     val sample = f.listStatus(dir).toSeq
       .map(_.getPath).find(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
     sample.map { p =>
-      val in = f.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val json = Commit.read(f, p)
       val nb = """"n_buckets":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
         .getOrElse(sys.error(s"manifest $p lacks n_buckets — table predates the layout record"))
       val cfg = """"config":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1)).getOrElse("v1")
@@ -335,6 +313,12 @@ object GraphSink {
     * edges table — paying file-open and commit-rename overhead per
     * fragment and leaving a small-files layout for readers. One
     * partition value per task ⇒ one file per directory.
+    *
+    * Both tables are dimension-sized (one row per entity, one per
+    * (src, dst, pred) edge), so repartitioning by `entity_type`/`pred`
+    * alone is intended: write parallelism is capped at the number of
+    * distinct values, and the largest value's rows land on one task.
+    * A fact-sized table here would need a salt in the partition key.
     */
   def writeEntities(entities: DataFrame, outDir: String): Unit =
     entities.repartition(col("entity_type")).write.mode(SaveMode.Overwrite)

@@ -8,8 +8,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 
-import java.nio.charset.StandardCharsets
-
 /** The flagship KG-construction job (SURVEY.md §3.3, BASELINE.json
   * north_star): transcripts → stable turn ordering → batched
   * mapPartitions NER + triple assembly with a broadcast model → mention
@@ -297,7 +295,7 @@ object KgPipeline {
     val spark = nodes.sparkSession
     import spark.implicits._
     val dirPath = new Path(checkpointDir)
-    val f = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = Commit.fs(spark, checkpointDir)
 
     // identity of the input node set — one tiny agg over the (small)
     // alias-node table, NOT the corpus
@@ -324,11 +322,7 @@ object KgPipeline {
       if (!f.exists(dirPath)) Nil
       else f.listStatus(dirPath).toSeq.map(_.getPath)
         .filter(p => p.getName.startsWith("iter-") && p.getName.endsWith(".done.json"))
-        .flatMap { p =>
-          val in = f.open(p)
-          val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          parseMarker(json)
-        }
+        .flatMap(p => parseMarker(Commit.read(f, p)))
     val last = committed.sortBy(_.iter).lastOption
     for (m <- last) require(m.n == nNodes && m.fp == nodesFp,
       s"CC checkpoint at $checkpointDir (iter ${m.iter}) was written for a different " +
@@ -381,12 +375,7 @@ object KgPipeline {
       val json =
         s"""{"iter":$iter,"changed":$changed,"converged":$converged,""" +
           s""""nodes":$nNodes,"nodes_fp":$nodesFp}"""
-      val tmp = new Path(s"$checkpointDir/.iter-$iter.done.json.tmp")
-      val dst = new Path(s"$checkpointDir/iter-$iter.done.json")
-      val out = f.create(tmp, true)
-      out.write(json.getBytes(StandardCharsets.UTF_8))
-      out.close()
-      require(f.rename(tmp, dst), s"CC checkpoint commit rename failed: $tmp -> $dst")
+      Commit.write(f, new Path(s"$checkpointDir/iter-$iter.done.json"), json)
       // prune the superseded frontier AFTER the new commit (a crash in
       // between leaves two markers; resume takes the max)
       if (iter > 1) {

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.corpus.Turn
-import graft.pipeline.{MentionRow, TaggedRow, TripleRow}
+import graft.pipeline.{Commit, MentionRow, TaggedRow, TripleRow}
 import graft.semantics.{NerModel, TripleAssembler}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -18,11 +19,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object StreamingIngest {
 
-  final case class ConvState(maxTurn: Int, nMentions: Long)
-  /** Expiring-variant state: adds the lifetime max event time (timeout
-    * monotonicity — see BucketState.maxTsMs) and the turn indexes already
-    * counted (in-horizon re-delivery dedup; bounded by the conversation
-    * length, which transcripts bound by construction).
+  /** Conversation state: running max turn and mention count, the
+    * lifetime max event time (timeout monotonicity — see
+    * BucketState.maxTsMs) and the turn indexes already counted
+    * (in-horizon re-delivery dedup; bounded by the conversation length,
+    * which transcripts bound by construction).
     */
   final case class ConvStateX(maxTurn: Int, nMentions: Long, maxTsMs: Long, seen: Seq[Int])
   final case class ConvUpdate(conv_id: String, max_turn: Int, n_mentions: Long)
@@ -113,7 +114,6 @@ object StreamingIngest {
   }
 
   // ----------------------------------------------- streaming near-dup
-  final case class DocBand(doc_id: Long, band: Int, bucket: Long)
   final case class DocBandT(doc_id: Long, band: Int, bucket: Long, ts: java.sql.Timestamp)
   final case class DupCandidate(da: Long, db: Long, band: Int)
   /** Per-(band,bucket) state: member doc ids seen so far (bounded),
@@ -124,13 +124,6 @@ object StreamingIngest {
     */
   final case class BucketState(members: List[Long], overflowed: Boolean,
       maxTsMs: Long = Long.MinValue)
-
-  /** Signature+banding projection — DELEGATES to the batch path's single
-    * definition (CatalogText.minhashBandsOf), so stream/batch banding
-    * parity holds by construction rather than by copy.
-    */
-  private def bandProjection(docs: DataFrame, extra: Seq[String]): DataFrame =
-    graft.relational.CatalogText.minhashBandsOf(docs, extra)
 
   /** Streaming MinHash near-duplicate detection (the approximate-dedup
     * family's streaming twin of t_minhash_lsh): each arriving document is
@@ -143,46 +136,28 @@ object StreamingIngest {
     * id list — a bucket that exceeds `maxBucket` members flips to
     * overflowed (members dropped, nothing further emitted for it), so a
     * degenerate hot bucket can never make state or output quadratic.
-    *
-    * This ts-less overload has NO event-time column, so state cannot be
-    * expired and the key count grows with the distinct-bucket count —
-    * acceptable only for bounded replays (the memory-sink test harness
-    * and batch-parity gates feed (doc_id, text) with no timestamp). The
-    * PRODUCTION path is [[nearDupCandidatesExpiring]]: watermark +
-    * EventTimeTimeout keep total state bounded on an infinite stream
-    * (VERDICT r2 next-round #5).
-    *
-    * Input: (doc_id bigint, text string). Output: candidate pairs
-    * (da < db, band) — downstream exact-Jaccard verification is the same
-    * residual join as batch.
-    */
-  def nearDupCandidates(docs: DataFrame, maxBucket: Int = 64): Dataset[DupCandidate] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    bandProjection(docs, Seq.empty).as[DocBand]
-      .groupByKey(b => (b.band, b.bucket))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: (Int, Long), rows: Iterator[DocBand], state: GroupState[BucketState]) => {
-          emitPairs(key._1, rows.map(_.doc_id), state, maxBucket)
-        })
-  }
-
-  /** Production streaming near-dup: same banding/state/cap semantics as
-    * [[nearDupCandidates]], plus event-time state EXPIRY — input rows
-    * carry a `ts` event-time column, the stream is watermarked, and each
-    * bucket's state carries an event-time timeout `idleGapMs` past the
-    * newest member. A bucket idle longer than the gap (by watermark time,
-    * i.e. guaranteed no straggler can still join it) is REMOVED, so total
+    * Event-time state EXPIRY bounds the key count: input rows carry a
+    * `ts` event-time column, the stream is watermarked, and each bucket's
+    * state carries an event-time timeout `idleGapMs` past the newest
+    * member. A bucket idle longer than the gap (by watermark time, i.e.
+    * guaranteed no straggler can still join it) is REMOVED, so total
     * state is bounded by the buckets active within the horizon — not by
     * the lifetime distinct-bucket count. Two docs more than the gap apart
     * are by definition not in the same dedup horizon; the batch path over
     * a full corpus remains the completeness baseline.
+    *
+    * Input: (doc_id bigint, text string, ts timestamp). Output: candidate
+    * pairs (da < db, band) — downstream exact-Jaccard verification is the
+    * same residual join as batch.
     */
   def nearDupCandidatesExpiring(docs: DataFrame, maxBucket: Int = 64,
       watermarkDelay: String = "1 hour", idleGapMs: Long = 3600000L): Dataset[DupCandidate] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val bands = bandProjection(docs.withWatermark("ts", watermarkDelay), Seq("ts"))
+    // signature+banding DELEGATES to the batch path's single definition,
+    // so stream/batch banding parity holds by construction, not by copy
+    val bands = graft.relational.CatalogText
+      .minhashBandsOf(docs.withWatermark("ts", watermarkDelay), Seq("ts"))
       .select(col("doc_id"), col("band"), col("bucket"), col("ts")).as[DocBandT]
     bands
       .groupByKey(b => (b.band, b.bucket))
@@ -228,31 +203,7 @@ object StreamingIngest {
   }
 
   /** Conversation assembly across micro-batches: custom state per conv
-    * (flatMapGroupsWithState) emitting running (max_turn, n_mentions).
-    * Ts-less bounded-replay variant (test harness); the production path
-    * is [[conversationStateExpiring]] — same unbounded-state caveat as
-    * the ts-less near-dup overload.
-    */
-  def conversationState(tagged: Dataset[TaggedRow]): Dataset[ConvUpdate] = {
-    val spark = tagged.sparkSession
-    import spark.implicits._
-    tagged
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (convId: String, rows: Iterator[TaggedRow], state: GroupState[ConvState]) => {
-          val prev = state.getOption.getOrElse(ConvState(-1, 0L))
-          var maxTurn = prev.maxTurn
-          var nMentions = prev.nMentions
-          rows.foreach { r =>
-            if (r.turn_idx > maxTurn) maxTurn = r.turn_idx
-            nMentions += r.mentions.size
-          }
-          state.update(ConvState(maxTurn, nMentions))
-          Iterator.single(ConvUpdate(convId, maxTurn, nMentions))
-        })
-  }
-
-  /** Production conversation assembly: same running state, plus
+    * (flatMapGroupsWithState) tracking (max_turn, n_mentions), with
     * event-time expiry — a conversation idle past `idleGapMs` (by
     * watermark, so no straggler can still arrive) emits one FINAL
     * ConvUpdate and its state is removed. Total state is bounded by the
@@ -310,73 +261,14 @@ object StreamingIngest {
   }
 
   // -------------------------------------------- streaming graph sink
-  /** Streaming triple materialization with exactly-once micro-batches:
-    * foreachBatch writes each batch's triples to a batch-scoped
-    * directory (directory-atomic) and then commits a manifest JSON
-    * {batch, rows, fingerprint} via temp-file rename — the GraphSink
-    * protocol applied to the stream. Structured Streaming replays a
-    * failed batch WITH THE SAME batchId, so the manifest check makes
-    * re-delivery a no-op: a batch is either fully committed (manifest
-    * present) or fully re-written (directory overwritten), never
-    * duplicated. The triples table is the union of batch=* directories;
-    * per-batch manifests are the stream's lineage/metrics channel.
-    */
-  def sinkTriples(tagged: Dataset[TaggedRow], outDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    // the explode/projection is KgPipeline.tripleRows — ONE definition
-    // shared with the batch path (and with sinkResolvedTriples below),
-    // so a schema change there cannot silently diverge the stream sink
-    graft.pipeline.KgPipeline.tripleRows(tagged)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        writeBatch(batch, outDir, batchId)
-      }
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .start()
-  }
-
-  /** Streaming CANONICAL resolution + exactly-once sink — the streaming
-    * completion of the KG job (r4): triples exploded from the tagged
-    * stream are resolved against a STATIC canonical map via
-    * stream-static broadcast joins. The resolution is literally
-    * [[graft.pipeline.KgPipeline.resolveTriplesBroadcast]] — the batch
-    * function applied to the streaming plan (its joins/projections are
-    * stateless, so they compose in append mode) — stream == batch
-    * semantics hold by construction rather than by copy. Batches commit
-    * through the same manifest protocol as [[sinkTriples]].
-    *
-    * Deploy shape: the canonical map is the entity table of the last
-    * batch linking run — batch linking refreshes the map, the stream
-    * resolves arriving turns against the latest snapshot (entity
-    * discovery/merging stays a batch responsibility; a surface unseen
-    * by the last linking run resolves to null ids and its canonical
-    * falls back to its own normalized form, exactly as in batch).
-    */
-  def sinkResolvedTriples(tagged: Dataset[TaggedRow], canonMap: DataFrame,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val triples = graft.pipeline.KgPipeline.tripleRows(tagged)
-    val resolved = graft.pipeline.KgPipeline.resolveTriplesBroadcast(triples, canonMap)
-    // own table dir, manifest prefix, and checkpoint: sharing an outDir
-    // with sinkTriples must not collide (a shared checkpoint would
-    // resume the OTHER query's offsets, and a shared stream-batch-<id>
-    // manifest namespace would silently skip this sink's batches as
-    // "already committed")
-    resolved.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        writeBatch(batch, outDir, batchId,
-          table = "resolved_triples", manifestPrefix = "stream-resolved-batch")
-      }
-      .option("checkpointLocation", s"$outDir/_checkpoint_resolved")
-      .start()
-  }
-
   /** Commit point for a canonical-map snapshot: parquet first, then a
-    * `_canon_version` marker via temp-file rename (the same protocol as
-    * every other commit in the repo). The version token is DERIVED from
-    * the map content (count + order-independent xxhash64 fingerprint),
-    * so re-publishing an identical map is a no-op for running streams
-    * and a changed map always bumps the token. This is the producer half
-    * of the refresh contract: the batch linking job publishes here,
-    * [[sinkResolvedTriplesRefreshing]] consumes.
+    * `_canon_version` marker through [[graft.pipeline.Commit.write]]
+    * (deleted first: a re-publish replaces it). The version token is
+    * DERIVED from the map content (count + order-independent xxhash64
+    * fingerprint), so re-publishing an identical map is a no-op for
+    * running streams and a changed map always bumps the token. This is
+    * the producer half of the refresh contract: the batch linking job
+    * publishes here, [[sinkResolvedTriplesRefreshing]] consumes.
     */
   def publishCanonMap(canonMap: DataFrame, canonDir: String): String = {
     val spark = canonMap.sparkSession
@@ -387,15 +279,10 @@ object StreamingIngest {
         expr("bit_xor(xxhash64(norm, tag, entity_id, canonical_norm))").as("fp"))
       .collect()(0)
     val version = s"${r.getLong(0)}-${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-    val hfs = new org.apache.hadoop.fs.Path(canonDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$canonDir/._canon_version.tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"$canonDir/_canon_version")
+    val hfs = Commit.fs(spark, canonDir)
+    val dst = new Path(s"$canonDir/_canon_version")
     if (hfs.exists(dst)) hfs.delete(dst, false)
-    val out = hfs.create(tmp, true)
-    out.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    require(hfs.rename(tmp, dst), s"canon version commit rename failed: $tmp -> $dst")
+    Commit.write(hfs, dst, version)
     version
   }
 
@@ -405,13 +292,11 @@ object StreamingIngest {
     * refresh on any rewrite.
     */
   def canonSnapshotVersion(spark: SparkSession, canonDir: String): String = {
-    val dir = new org.apache.hadoop.fs.Path(canonDir)
-    val hfs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$canonDir/_canon_version")
-    if (hfs.exists(marker)) {
-      val in = hfs.open(marker)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-    } else if (!hfs.exists(dir)) "absent"
+    val dir = new Path(canonDir)
+    val hfs = Commit.fs(spark, canonDir)
+    val marker = new Path(s"$canonDir/_canon_version")
+    if (hfs.exists(marker)) Commit.read(hfs, marker).trim
+    else if (!hfs.exists(dir)) "absent"
     else hfs.listStatus(dir).toSeq
       .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
       .sorted.mkString("|").hashCode.toString
@@ -445,15 +330,25 @@ object StreamingIngest {
     }
   }
 
-  /** Streaming canonical resolution with BETWEEN-BATCH canon-map refresh
-    * (VERDICT r4 "what's missing" #3): unlike [[sinkResolvedTriples]],
-    * whose stream-static join pins the snapshot read at plan time for
-    * the life of the query, the resolution here runs INSIDE foreachBatch
-    * — each micro-batch is a plain DataFrame, so the broadcast join
-    * re-plans per batch against whatever snapshot [[CanonMapCache]]
-    * currently holds. A long-running stream picks up a re-published
-    * canonical map (new entities from the latest batch linking run) at
-    * the next micro-batch boundary, without restart.
+  /** The streaming graph sink: triples exploded from the tagged stream
+    * are resolved against the latest published canonical map and
+    * committed exactly-once, one batch-scoped directory plus one
+    * manifest per micro-batch ([[writeBatch]]). The resolution is
+    * literally [[graft.pipeline.KgPipeline.resolveTriplesBroadcast]] —
+    * the batch function applied to each micro-batch — so stream == batch
+    * semantics hold by construction rather than by copy.
+    *
+    * The canonical map REFRESHES between batches (VERDICT r4 "what's
+    * missing" #3): the resolution runs INSIDE foreachBatch — each
+    * micro-batch is a plain DataFrame, so the broadcast join re-plans
+    * per batch against whatever snapshot [[CanonMapCache]] currently
+    * holds. A long-running stream picks up a re-published canonical map
+    * (new entities from the latest batch linking run) at the next
+    * micro-batch boundary, without restart; a map that is never
+    * re-published is a static one. Entity discovery/merging stays a
+    * batch responsibility: a surface unseen by the last linking run
+    * resolves to null ids and its canonical falls back to its own
+    * normalized form, exactly as in batch.
     *
     * Exactly-once interplay: a batch replayed after a crash may resolve
     * against a NEWER map than the original attempt — harmless, because
@@ -472,9 +367,7 @@ object StreamingIngest {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         val (canon, version) = cache.current(batch.sparkSession)
         val resolved = graft.pipeline.KgPipeline.resolveTriplesBroadcast(batch, canon)
-        writeBatch(resolved, outDir, batchId,
-          table = "resolved_triples", manifestPrefix = "stream-resolved-batch",
-          extraManifest = s""","canon_version":"$version"""")
+        writeBatch(resolved, outDir, batchId, version)
       }
       .option("checkpointLocation", s"$outDir/_checkpoint_resolved")
     trigger.fold(writer)(writer.trigger).start()
@@ -482,48 +375,55 @@ object StreamingIngest {
 
   /** One batch commit (factored out so the idempotence spec can replay
     * a batchId directly): skip if manifested, else overwrite the batch
-    * directory and rename-commit the manifest.
+    * directory and commit the manifest {batch, rows, fingerprint,
+    * canon_version}. Structured Streaming replays a failed batch WITH
+    * THE SAME batchId, so the manifest check makes re-delivery a no-op:
+    * a batch is either fully committed (manifest present) or fully
+    * re-written (directory overwritten), never duplicated. The table is
+    * the union of batch=* directories.
     */
-  def writeBatch(batch: org.apache.spark.sql.DataFrame, outDir: String, batchId: Long,
-      table: String = "triples", manifestPrefix: String = "stream-batch",
-      extraManifest: String = ""): Unit = {
-    val spark = batch.sparkSession
-    // resolve the filesystem FROM outDir (not the default FS): on an
-    // hdfs://... or s3a://... sink the default-FS handle would check
-    // manifest existence on the wrong filesystem (ADVICE r2)
-    val hfs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = new org.apache.hadoop.fs.Path(
-      s"$outDir/_manifests/$manifestPrefix-$batchId.json")
+  def writeBatch(batch: DataFrame, outDir: String, batchId: Long,
+      canonVersion: String): Unit = {
+    val hfs = Commit.fs(batch.sparkSession, outDir)
+    val manifest = new Path(s"$outDir/_manifests/stream-resolved-batch-$batchId.json")
     if (hfs.exists(manifest)) return // already committed — replay is a no-op
-    // manifest stats observed ON the write pass (r6, guide §1/§5): the
-    // former separate stats agg executed the batch's ENTIRE lineage a
-    // second time — for the resolved sink that is the NLP tagging +
-    // resolve join run twice per micro-batch. Observation rides the
-    // write job's single execution (same pattern as GraphSink's
-    // written-buckets metrics); rows/fingerprint values are unchanged.
+    // manifest stats observed ON the write pass (r6, guide §1/§5): a
+    // separate stats agg would execute the batch's ENTIRE lineage — the
+    // NLP tagging + resolve join — a second time per micro-batch
     val obs = org.apache.spark.sql.Observation(
       s"stream_write_${batchId}_${System.nanoTime()}")
     val observed = batch.observe(obs,
       count(lit(1)).as("rows"),
       expr("bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj))").as("fp"))
-    observed.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outDir/$table/batch=$batchId")
-    val rows = scala.util.Try(obs.get("rows").asInstanceOf[Long]).getOrElse(0L)
-    val fp = scala.util.Try(obs.get("fp").asInstanceOf[Long]).getOrElse(0L)
-    val json = s"""{"batch":$batchId,"rows":$rows,"fingerprint":$fp$extraManifest}"""
+    val batchDir = new Path(s"$outDir/resolved_triples/batch=$batchId")
+    observed.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(batchDir.toString)
+    val (rows, fp) = observedStats(obs.get, hfs, batchDir)
+    val json = s"""{"batch":$batchId,"rows":$rows,"fingerprint":$fp,"canon_version":"$canonVersion"}"""
     hfs.mkdirs(manifest.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$outDir/_manifests/.$manifestPrefix-$batchId.json.tmp")
-    val out = hfs.create(tmp, true)
-    out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    // rename IS the commit point — a silent false return would leave the
-    // batch uncommitted while its parquet exists (ADVICE r2); failing
-    // loudly lets Structured Streaming retry the batch idempotently
-    require(hfs.rename(tmp, manifest),
-      s"manifest commit rename failed for batch $batchId: $tmp -> $manifest")
+    // a failed commit throws, so Structured Streaming retries the batch
+    // idempotently instead of leaving its parquet unmanifested
+    Commit.write(hfs, manifest, json)
   }
+
+  /** (rows, fingerprint) for a batch manifest. A plan that processed no
+    * rows may report no metrics at all; 0 is committed only then, and
+    * only when the batch directory holds no data files (one listing, no
+    * Spark job). Any other missing or mistyped metric throws rather than
+    * commit a silent zero for a batch that wrote data.
+    */
+  private[graft] def observedStats(metrics: Map[String, Any], hfs: FileSystem,
+      batchDir: Path): (Long, Long) =
+    if (metrics.nonEmpty) {
+      // bit_xor over zero rows is NULL: the empty batch's fingerprint is 0
+      val fp = metrics("fp") match { case null => 0L; case v: Long => v }
+      (metrics("rows").asInstanceOf[Long], fp)
+    } else {
+      val data = hfs.listStatus(batchDir).map(_.getPath.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+      require(data.isEmpty, s"batch $batchDir wrote ${data.length} data file(s) but the " +
+        "write reported no metrics — refusing to commit a manifest with zero rows")
+      (0L, 0L)
+    }
 
   /** Run one synchronous pass over whatever files exist (memory sink) —
     * the local smoke path; production would use a real sink + trigger.

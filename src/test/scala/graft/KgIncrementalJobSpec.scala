@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{GraphSink, NerTraining, Transcripts}
+import graft.pipeline.{Commit, GraphSink, NerTraining, Transcripts}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -180,5 +180,53 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     val want = s"$dir/g3_full"
     KgJob.run(spark, s"$dir/in_abc", model, want, buckets = 8)
     assertGraphsEqual(out, want, "A then C then B vs full A+B+C")
+  }
+
+  /** A batch token in the format written before tokens were versioned. */
+  private val preV2Token = "b12-00000000deadbeef"
+
+  test("a ledger holding pre-v2 batch tokens is refused with a migration message") {
+    import spark.implicits._
+    val (dir, model) = staged
+    val out = s"$dir/g_old_ledger"
+    // a committed link state whose ledger an earlier release wrote
+    val nodes = Seq(("acme", "ORG", 2L, "Acme", 1L)).toDF("norm", "tag", "n_mentions", "surface", "node_id")
+    val labels = Seq((1L, 1L)).toDF("node_id", "component")
+    GraphSink.writeLinkState(spark, nodes, labels, s"$out/_linkstate", Seq(preV2Token))
+    val e = intercept[IllegalArgumentException] {
+      KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
+    }
+    assert(e.getMessage.contains(preV2Token) && e.getMessage.contains("graft.KgJob"), e.getMessage)
+  }
+
+  test("a staging marker with a pre-v2 token is refused with a migration message") {
+    val (dir, model) = staged
+    val out = s"$dir/g_old_marker"
+    // an earlier release crashed mid-rewrite: intent + invalidation committed
+    val f = Commit.fs(spark, out)
+    Commit.write(f, new org.apache.hadoop.fs.Path(s"$out/_incr/marker.json"),
+      s"""{"token":"$preV2Token","buckets":[1],"n_buckets":8,"config":"v1","day_partition":false}""")
+    Commit.write(f, new org.apache.hadoop.fs.Path(s"$out/_incr/manifests_invalidated.json"), "{}")
+    val e = intercept[IllegalArgumentException] {
+      KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
+    }
+    assert(e.getMessage.contains(preV2Token) && e.getMessage.contains("release that started it"),
+      e.getMessage)
+    assert(!e.getMessage.contains("INCOMPLETE"), "must not blame a different batch")
+  }
+
+  test("an empty ledger, identical in every release, stays valid and records a v2 token") {
+    val (dir, model) = staged
+    val out = s"$dir/g_empty_ledger"
+    KgJob.run(spark, s"$dir/in_a", model, out, buckets = 8)
+    def ledger(): String = {
+      val src = scala.io.Source.fromFile(s"$out/_linkstate/_committed.json", "UTF-8")
+      try src.mkString finally src.close()
+    }
+    assert(ledger().contains(""""applied":[]"""), ledger())
+    KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
+    val applied = """"applied":\[([^\]]*)\]""".r.findFirstMatchIn(ledger()).get.group(1)
+      .split(",").toSeq
+    assert(applied.size == 1 && applied.head.startsWith("\"" + KgIncrementalJob.TokenFormat), ledger())
   }
 }

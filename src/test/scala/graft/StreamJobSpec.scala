@@ -237,4 +237,35 @@ class StreamJobSpec extends AnyFunSuite {
     assert(manifest(victim).contains(s""""canon_version":"$v2""""), manifest(victim))
     assert(manifest(keep).contains(s""""canon_version":"$v1""""), manifest(keep))
   }
+
+  test("a batch that wrote data but reported no metrics is never committed as zero rows") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("streamjob_zero").toString
+    val hfs = graft.pipeline.Commit.fs(spark, dir)
+    val cols = Seq("conv_id", "turn_idx", "subj", "pred", "obj")
+    // a genuinely empty micro-batch still commits rows=0 end to end
+    StreamingIngest.writeBatch(Seq.empty[(String, Int, String, String, String)].toDF(cols: _*),
+      dir, 0L, "v0")
+    val src = scala.io.Source.fromFile(s"$dir/_manifests/stream-resolved-batch-0.json")
+    val m0 = try src.mkString finally src.close()
+    assert(m0 == """{"batch":0,"rows":0,"fingerprint":0,"canon_version":"v0"}""", m0)
+
+    // no metrics reported: zero only for a batch directory without data
+    val empty = new Path(s"$dir/resolved_triples/batch=1")
+    hfs.mkdirs(empty)
+    assert(StreamingIngest.observedStats(Map.empty, hfs, empty) == ((0L, 0L)))
+    val written = s"$dir/resolved_triples/batch=2"
+    Seq(("c1", 0, "Acme", "works_at", "Zed")).toDF(cols: _*).write.parquet(written)
+    val e = intercept[IllegalArgumentException] {
+      StreamingIngest.observedStats(Map.empty, hfs, new Path(written))
+    }
+    assert(e.getMessage.contains("batch=2"), e.getMessage)
+    // a mistyped metric propagates (Structured Streaming retries the batch)
+    intercept[RuntimeException] {
+      StreamingIngest.observedStats(Map("rows" -> 1L, "fp" -> "?"), hfs, new Path(written))
+    }
+    assert(StreamingIngest.observedStats(Map("rows" -> 1L, "fp" -> 42L), hfs, new Path(written)) ==
+      ((1L, 42L)))
+  }
 }

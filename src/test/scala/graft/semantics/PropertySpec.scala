@@ -106,4 +106,32 @@ object PropertySpec extends Properties("semantics") {
       a.map(_.turn) == b.map(_.turn) &&
         a.flatMap(_.gold.toSeq) == b.flatMap(_.gold.toSeq)
     }
+
+  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
+    .master("local[1]")
+    .appName("properties")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  /** Surfaces mixing BMP text with supplementary (non-BMP) characters. */
+  private val nonBmpSurface: Gen[String] =
+    Gen.listOfN(4, Gen.oneOf("acme", "Zoë", "😀", "𝔘𝔫𝔦𝔱", "𠀋x", "data", "a😀b", "labs", "𝟙𝟚𝟛"))
+      .map(_.mkString(" "))
+
+  // the gazetteer scores candidates with column arithmetic over
+  // code-point trigrams; Similarity.ngramSim uses UTF-16 char trigrams.
+  // They agree only because normalizeSurface leaves no surrogate pair
+  // behind — pinned here on the non-BMP input where they could differ
+  property("gazetteer trigram Jaccard == ngramSim on normalized non-BMP surfaces") =
+    forAll(nonBmpSurface, nonBmpSurface) { (a, b) =>
+      import org.apache.spark.sql.functions.col
+      import graft.pipeline.Gazetteer.{trigramJaccard, trigramSet}
+      val (na, nb) = (StringOps.normalizeSurface(a), StringOps.normalizeSurface(b))
+      val session = spark
+      import session.implicits._
+      val sim = Seq((na, nb)).toDF("a", "b")
+        .select(trigramJaccard(trigramSet(col("a")), trigramSet(col("b"))))
+        .first().getDouble(0)
+      Prop(sim == Similarity.ngramSim(na, nb)) :| s"'$na' vs '$nb': column $sim"
+    }
 }

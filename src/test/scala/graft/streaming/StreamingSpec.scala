@@ -22,6 +22,11 @@ class StreamingSpec extends AnyFunSuite {
 
   private val N = 20L
 
+  /** One event time for every near-dup doc: the watermark never passes a
+    * bucket's timeout, so nothing expires and every pair is emitted.
+    */
+  private val constTs = org.apache.spark.sql.functions.lit(new java.sql.Timestamp(1700000000000L))
+
   test("streaming tag over file drops equals batch tagging") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("stream_in").toString
@@ -121,7 +126,8 @@ class StreamingSpec extends AnyFunSuite {
       .schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", "1") // force one micro-batch per drop
       .parquet(s"$dir/drop*")
-    val q = StreamingIngest.nearDupCandidates(stream)
+      .withColumn("ts", constTs)
+    val q = StreamingIngest.nearDupCandidatesExpiring(stream)
       .writeStream.outputMode(OutputMode.Append).format("memory").queryName("nd").start()
     q.processAllAvailable(); q.stop()
     val rows = spark.table("nd").collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -152,7 +158,8 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val stream = spark.readStream.schema("doc_id LONG, text STRING")
       .parquet(s"$dir/documents.parquet")
-    val q = StreamingIngest.nearDupCandidates(stream)
+      .withColumn("ts", constTs)
+    val q = StreamingIngest.nearDupCandidatesExpiring(stream)
       .writeStream.outputMode(OutputMode.Append).format("memory").queryName("ndpar").start()
     q.processAllAvailable(); q.stop()
     val streamed = spark.table("ndpar").collect()
@@ -169,7 +176,8 @@ class StreamingSpec extends AnyFunSuite {
     Seq((1L, t), (2L, t), (3L, t), (4L, t)).toDF("doc_id", "text")
       .write.parquet(s"$dir/drop1")
     val stream = spark.readStream.schema("doc_id LONG, text STRING").parquet(s"$dir/drop*")
-    val q = StreamingIngest.nearDupCandidates(stream, maxBucket = 2)
+      .withColumn("ts", constTs)
+    val q = StreamingIngest.nearDupCandidatesExpiring(stream, maxBucket = 2)
       .writeStream.outputMode(OutputMode.Append).format("memory").queryName("ndcap").start()
     q.processAllAvailable(); q.stop()
     val pairs = spark.table("ndcap").collect()
@@ -221,13 +229,19 @@ class StreamingSpec extends AnyFunSuite {
     val all = Transcripts.generate(spark, N).cache()
     all.where($"conv_id" < "c0000010").write.parquet(s"$inDir/drop1")
     all.where($"conv_id" >= "c0000010").write.parquet(s"$inDir/drop2")
+    // an EMPTY published map: nothing resolves, so the sink writes the
+    // plain triples
+    val canonDir = java.nio.file.Files.createTempDirectory("stream_sink_canon").toString
+    val version = StreamingIngest.publishCanonMap(
+      Seq.empty[(String, String, Long, String)].toDF("norm", "tag", "entity_id", "canonical_norm"),
+      canonDir)
     val stream = StreamingIngest.tagStream(
       StreamingIngest.readTurns(spark, s"$inDir/drop*").repartition(2), model)
-    val q = StreamingIngest.sinkTriples(stream, outDir)
+    val q = StreamingIngest.sinkResolvedTriplesRefreshing(stream, canonDir, outDir)
     q.processAllAvailable(); q.stop()
 
     // written triples == the batch pipeline's triples on the same input
-    val got = spark.read.parquet(s"$outDir/triples")
+    val got = spark.read.parquet(s"$outDir/resolved_triples")
       .select("conv_id", "turn_idx", "subj", "pred", "obj").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getString(4)))
     val want = graft.pipeline.KgPipeline.tripleRows(
@@ -244,11 +258,11 @@ class StreamingSpec extends AnyFunSuite {
       == got.length.toLong)
 
     // replaying a committed batchId is a no-op (exactly-once on retry)
-    val before = spark.read.parquet(s"$outDir/triples").count()
+    val before = spark.read.parquet(s"$outDir/resolved_triples").count()
     val someBatch = manifests.select($"batch").orderBy($"batch").first().getLong(0)
-    val replay = spark.read.parquet(s"$outDir/triples/batch=$someBatch")
-    StreamingIngest.writeBatch(replay, outDir, someBatch)
-    assert(spark.read.parquet(s"$outDir/triples").count() == before,
+    val replay = spark.read.parquet(s"$outDir/resolved_triples/batch=$someBatch")
+    StreamingIngest.writeBatch(replay, outDir, someBatch, version)
+    assert(spark.read.parquet(s"$outDir/resolved_triples").count() == before,
       "replaying a manifested batch must not change the table")
   }
 
@@ -267,9 +281,12 @@ class StreamingSpec extends AnyFunSuite {
     val batchOut = graft.pipeline.KgPipeline.run(spark, all, model)
     val canonMap = graft.pipeline.KgPipeline.canonicalize(batchOut.nodes, batchOut.components)
 
+    val canonDir = java.nio.file.Files.createTempDirectory("stream_res_canon").toString
+    StreamingIngest.publishCanonMap(canonMap, canonDir)
+
     val stream = StreamingIngest.tagStream(
       StreamingIngest.readTurns(spark, s"$inDir/drop*").repartition(2), model)
-    val q = StreamingIngest.sinkResolvedTriples(stream, canonMap, outDir)
+    val q = StreamingIngest.sinkResolvedTriplesRefreshing(stream, canonDir, outDir)
     q.processAllAvailable(); q.stop()
 
     val cols = Seq("conv_id", "turn_idx", "subj", "pred", "obj",
@@ -327,13 +344,34 @@ class StreamingSpec extends AnyFunSuite {
     val labeled = Transcripts.generateLabeled(spark, N)
     val model = NerTraining.trainAndBroadcast(spark, Transcripts.trainSplit(labeled))
     val dir = java.nio.file.Files.createTempDirectory("stream_s").toString
-    Transcripts.generate(spark, N).write.parquet(s"$dir/d")
-    val q = StreamingIngest.conversationState(
-        StreamingIngest.tagStream(StreamingIngest.readTurns(spark, s"$dir/d"), model))
+    // every conversation's turns split across two drops (even turn
+    // indexes, then odd), one micro-batch each: a conversation's max
+    // turn is only right if its state crosses the batch boundary. The
+    // 100-hour watermark delay keeps the second drop's earlier turns
+    // from being dropped as late; two far-future sentinel drops then
+    // push the watermark past every conversation's idle gap and give
+    // the timeouts a batch to fire in
+    val all = Transcripts.generate(spark, N).cache()
+    all.where($"turn_idx" % 2 === 0).coalesce(1).write.parquet(s"$dir/drop1")
+    all.where($"turn_idx" % 2 === 1).coalesce(1).write.parquet(s"$dir/drop2")
+    val maxTs = all.agg(org.apache.spark.sql.functions.max($"ts")).first()
+      .getTimestamp(0).getTime
+    Seq(graft.corpus.Turn("zz_sentinel", 0, "user", "closing sentinel turn", "",
+        new java.sql.Timestamp(maxTs + 200L * 3600 * 1000)))
+      .toDS().write.parquet(s"$dir/drop3")
+    Seq(graft.corpus.Turn("zz_sentinel", 1, "user", "second sentinel turn", "",
+        new java.sql.Timestamp(maxTs + 300L * 3600 * 1000)))
+      .toDS().write.parquet(s"$dir/drop4")
+    val stream = spark.readStream
+      .schema(spark.createDataset(Seq.empty[graft.corpus.Turn]).schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$dir/drop*")
+      .as[graft.corpus.Turn]
+    val q = StreamingIngest.conversationStateExpiring(stream, model, watermarkDelay = "100 hours")
       .writeStream.outputMode(OutputMode.Append).format("memory").queryName("cs").start()
     q.processAllAvailable(); q.stop()
     val updates = spark.table("cs").collect()
-      .map(r => (r.getString(0), r.getInt(1))).toMap
+      .map(r => (r.getString(0), r.getInt(1))).filter(_._1 != "zz_sentinel").toMap
     val expected = (0L until N).map(i => (f"c$i%07d", TranscriptGen.convLength(i) - 1)).toMap
     assert(updates == expected)
   }
