@@ -41,6 +41,18 @@ object Kg {
     roleModelCache.remove(sfDir)
   }
 
+  /** (rows, order-independent fingerprint) of a resolved-triples table
+    * over the complete resolution output, entity ids and canonicals
+    * included — the parity gate the bench stages apply between a
+    * production entry's output and `built(...).out.resolvedTriples`.
+    * bit_xor over zero rows is NULL; 0 stands in for it.
+    */
+  private[graft] def resolvedFingerprint(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj, " +
+      "subj_tag, obj_tag, subj_id, obj_id, subj_canonical, obj_canonical))")).first()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
   private def build(spark: SparkSession, sfDir: String): Built = {
     import spark.implicits._
     val nConvs = Transcripts.convsForSfDir(sfDir)

@@ -8,59 +8,21 @@ import java.nio.file.{Files, Paths}
 /** Two-parallelism scaling evidence (BASELINE.json north rule: throughput
   * scaling efficiency >= 0.8 from N to 4N executors; sandbox proxy per
   * the driver instruction: identical input at two `local[k]` levels).
+  * The one scaling runner, two modes:
   *
-  * Primary pair: local[4] → local[16] — both inside the box's PHYSICAL
-  * cores. The box advertises 32 CPUs but calibration (see
-  * BENCH/BASELINE.md) shows 8→32 threads yields only ~2.9× on embarrass-
-  * ingly-parallel non-JVM work, i.e. 16 physical cores + SMT — a real
-  * cluster gives each executor physical cores, so 4→16 is the honest
-  * proxy. The 8→32 pair is also run and reported with the calibration.
+  *   stage [lo] [hi]          (default) the NLP stage in one JVM, pooled
+  *                            into BENCH/stage_scaling.json
+  *   job prep <dir> [mult]    generate transcripts parquet + NER model once
+  *   job run <cores> <dir>    one timed KgJob at local[cores] (fresh JVM,
+  *                            fresh output dir), appended to
+  *                            BENCH/job_scaling_runs.jsonl
+  *   job report               pool runs (byte-identical protocol only),
+  *                            min per level, write BENCH/job_scaling.json
   *
-  * Writes BENCH/BASELINE.md and prints one JSON line.
+  * Host calibration and the recorded numbers: BENCH/BASELINE.md.
   */
 object ScalingBench {
 
-  final case class RunResult(cores: Int, turns: Long, seconds: Double) {
-    def throughput: Double = turns / seconds
-  }
-
-  def runAt(cores: Int, nConvs: Long): RunResult = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      import spark.implicits._
-      val t0 = System.nanoTime()
-      val labeled = Transcripts.generateLabeled(spark, nConvs).cache()
-      val model = NerTraining.trainAndBroadcast(spark, Transcripts.trainSplit(labeled))
-      val turns = labeled.map(r =>
-        graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
-      val out = KgPipeline.run(spark, turns, model)
-      val nTurns = out.tagged.count()
-      val nTriples = out.resolvedTriples.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(nTriples > 0)
-      System.err.println(f"[scaling] cores=$cores wall=$sec%.2f s turns/s=${nTurns / sec}%.0f")
-      RunResult(cores, nTurns, sec)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-  }
-
-  /** One measurement per JVM: `runMain graft.ScalingBench <cores>` runs a
-    * single level and appends a JSON line to BENCH/scaling_runs.jsonl;
-    * `runMain graft.ScalingBench report` composes BENCH/BASELINE.md from
-    * the collected lines. Sequential same-JVM measurements are NOT
-    * comparable (JIT warmup + GC/heap history contaminate later runs).
-    */
   /** Stage-mode scaling: the throughput-dominant NLP stage (window +
     * tag + triple assembly) measured in ONE local[16] session at
     * effective parallelism 4 vs 16 (spark.sql.shuffle.partitions), 3×
@@ -181,110 +143,158 @@ object ScalingBench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 2x the sf corpus so fixed costs (JVM, session, driver actions)
-    // amortize — scaling measurements need enough parallel work
-    val nConvs = Transcripts.convsForSfDir(sfDir) * 2
-    Files.createDirectories(Paths.get("BENCH"))
-    val runsFile = Paths.get("BENCH/scaling_runs.jsonl")
+  /** Job-level corpus size = multiplier x the sf conv count. The job
+    * carries a ~24 s FIXED cost (model load/broadcast ~4 s, Catalyst
+    * planning + whole-stage codegen across ~15 actions, manifest commits)
+    * that is corpus-size-invariant — measuring at two corpus sizes
+    * separates that fixed term from the scalable work (see
+    * BENCH/BASELINE.md).
+    */
+  private def jobConvs(multiplier: Long): Long = Transcripts.convsForSfDir(
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")) * multiplier
 
-    // DEFAULT mode is the interleaved min-of-k stage protocol — the
-    // number it writes to BENCH/stage_scaling.json IS the recorded
-    // scaling artifact (VERDICT r1 item 2)
-    if (args.isEmpty || args(0) == "stage") {
-      // 4× more work than the full-job runs: the stage measurement needs
-      // the parallel fraction to dominate the ~1.4 s fixed per-job cost
-      // (scheduler + final agg), which otherwise caps measurable speedup
-      // at this corpus size regardless of the engine's scaling.
-      // Optional "stage <lo> <hi>" overrides the parallelism pair.
+  private val JOB_BUCKETS = 32 // constant across levels: identical job, identical output layout
+
+  /** Job-mode protocol: the FULL production entry — `graft.KgJob.run` end
+    * to end, parquet transcripts in, materialized graph + manifests out —
+    * one measurement per fresh JVM, interleaved min-of-k across runs.
+    * Complements stage mode: this measures the whole job, serial
+    * fractions (driver-side model collect, sub-threshold CC union-find,
+    * manifest read-back) included. The string is the pooling token.
+    */
+  def jobProtocol(turns: Long): String =
+    s"graft.KgJob.run end-to-end (read parquet transcripts -> tag -> link " +
+      s"-> CC -> resolve -> GraphSink materialize w/ manifests, $JOB_BUCKETS buckets) " +
+      s"on $turns turns, fresh JVM + fresh output dir per measurement, " +
+      "interleaved rounds pooled across runs, min per level"
+
+  private def jobSession(cores: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName(s"job-scaling-$cores")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  private def jobPrep(workDir: String, multiplier: Long): Unit = {
+    val spark = jobSession(8)
+    try {
+      import spark.implicits._
+      val convs = jobConvs(multiplier)
+      val labeled = Transcripts.generateLabeled(spark, convs).cache()
+      val n = labeled.count()
+      labeled.map(r => graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+        .write.mode("overwrite").parquet(s"$workDir/input")
+      val model = NerTraining.trainModel(Transcripts.trainSplit(labeled))
+      NerTraining.save(model, spark, s"$workDir/model")
+      println(s"""{"prep":"done","convs":$convs,"rows":$n,"input":"$workDir/input"}""")
+    } finally spark.stop()
+  }
+
+  private def jobRun(cores: Int, workDir: String): Unit = {
+    val out = s"$workDir/out_$cores"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    val spark = jobSession(cores)
+    try {
+      val t0 = System.nanoTime()
+      val m = graft.KgJob.run(spark, s"$workDir/input", s"$workDir/model", out, JOB_BUCKETS)
+      val sec = (System.nanoTime() - t0) / 1e9
+      val line =
+        s"""{"cores":$cores,"sec":${"%.3f".formatLocal(java.util.Locale.ROOT, sec)},""" +
+          s""""turns":${m.turns},"triples":${m.triples},"buckets":${m.bucketsWritten},""" +
+          s""""protocol":"${jobProtocol(m.turns)}"}"""
+      Files.createDirectories(Paths.get("BENCH"))
+      // true O(1) append — a read+truncate+rewrite would destroy the
+      // accumulated run history on a crash mid-write
+      Files.writeString(Paths.get("BENCH/job_scaling_runs.jsonl"), line + "\n",
+        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+      println(line)
+    } finally spark.stop()
+  }
+
+  /** BENCH/job_scaling.json from the lines of BENCH/job_scaling_runs.jsonl:
+    * one entry per corpus size, pooling only runs whose protocol string
+    * is byte-identical to the current one (it embeds the turn count),
+    * min wall per level.
+    */
+  def jobReport(lines: Seq[String]): String = {
+    case class Run(cores: Int, sec: Double, turns: Long, protocol: String)
+    def parse(l: String): Option[Run] = for {
+      c <- """"cores":(\d+)""".r.findFirstMatchIn(l)
+      s <- """"sec":([0-9.]+)""".r.findFirstMatchIn(l)
+      t <- """"turns":(\d+)""".r.findFirstMatchIn(l)
+      p <- """"protocol":"([^"]*)"""".r.findFirstMatchIn(l)
+    } yield Run(c.group(1).toInt, s.group(1).toDouble, t.group(1).toLong, p.group(1))
+    val runs = lines.filter(_.nonEmpty).flatMap(parse)
+    require(runs.nonEmpty, "no parseable runs in BENCH/job_scaling_runs.jsonl")
+    def pct(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    val perCorpus = runs.groupBy(_.turns).toSeq.sortBy(_._1).map { case (turns, rs) =>
+      val pooled = rs.filter(_.protocol == jobProtocol(turns))
+      val byCores = pooled.groupBy(_.cores).map { case (c, cs) =>
+        c -> (cs.map(_.sec).min, cs.length)
+      }
+      def pair(lo: Int, hi: Int): Option[String] =
+        for { (wLo, kLo) <- byCores.get(lo); (wHi, kHi) <- byCores.get(hi) } yield {
+          val speedup = wLo / wHi
+          s""""local${lo}_to_${hi}":{"speedup":${pct(speedup)},""" +
+            s""""efficiency":${pct(speedup / (hi.toDouble / lo))},""" +
+            s""""runs_n":$kLo,"runs_n4":$kHi}"""
+        }
+      val walls = byCores.toSeq.sortBy(_._1).map { case (c, (w, k)) =>
+        s""""local$c":{"wall_min":$w,"runs":$k}""" }
+      // fixed-vs-scalable decomposition from the (2, 8) mins:
+      // T(p) = S + W/p  =>  W = (T2 - T8)/(1/2 - 1/8), S = T2 - W/2
+      val model = for { (w2, _) <- byCores.get(2); (w8, _) <- byCores.get(8) } yield {
+        val work = (w2 - w8) / 0.375
+        val fixed = w2 - work / 2
+        s""""fixed_cost_sec":${pct(fixed)},"parallel_work_core_sec":${pct(work)}"""
+      }
+      // assemble from only the fields that exist — a corpus measured at
+      // other core pairs must not produce dangling commas (invalid JSON)
+      val fields = Seq(s""""turns":$turns""") ++ walls ++
+        Seq(pair(2, 8), pair(8, 32), model).flatten :+
+        s""""protocol":"${jobProtocol(turns)}""""
+      fields.mkString("{", ",", "}")
+    }
+    s"""{"metric":"job_scaling_efficiency","unit":"ratio",""" +
+      s""""corpora":[${perCorpus.mkString(",")}]}"""
+  }
+
+  private def jobMode(args: List[String]): Unit = args match {
+    case "prep" :: workDir :: Nil         => jobPrep(workDir, 2L)
+    case "prep" :: workDir :: m :: Nil    => jobPrep(workDir, m.toLong)
+    case "run" :: cores :: workDir :: Nil => jobRun(cores.toInt, workDir)
+    case "report" :: Nil =>
+      val json = jobReport(Files.readString(Paths.get("BENCH/job_scaling_runs.jsonl")).split('\n').toSeq)
+      println(json)
+      Files.writeString(Paths.get("BENCH/job_scaling.json"), json + "\n")
+    case other => sys.error(s"usage: job prep <dir> [mult] | job run <cores> <dir> | job report (got: $other)")
+  }
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case "job" :: rest => jobMode(rest)
+    case Nil | "stage" :: _ =>
+      val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+      // 2x the sf corpus so fixed costs (JVM, session, driver actions)
+      // amortize — scaling measurements need enough parallel work; the
+      // stage measurement then takes 4× more: its parallel fraction must
+      // dominate the ~1.4 s fixed per-job cost (scheduler + final agg),
+      // which otherwise caps measurable speedup at this corpus size
+      // regardless of the engine's scaling.
+      val nConvs = Transcripts.convsForSfDir(sfDir) * 2
+      Files.createDirectories(Paths.get("BENCH"))
       // Default 2 vs 8: stays inside the box's physical-core envelope
       // (see BENCH/BASELINE.md calibration) and matches the recorded
       // artifact's documented protocol.
       val lo = if (args.length > 1) args(1).toInt else 2
       val hi = if (args.length > 2) args(2).toInt else lo * 4
       stageMode(nConvs * 4, lo, hi)
-      return
-    }
-
-    if (args.nonEmpty && args(0) != "report") {
-      val cores = args(0).toInt
-      val r = runAt(cores, nConvs)
-      val line = s"""{"cores":${r.cores},"sec":${r.seconds},"turns":${r.turns}}"""
-      Files.writeString(runsFile,
-        (if (Files.exists(runsFile)) Files.readString(runsFile) else "") + line + "\n")
-      println(line)
-      return
-    }
-
-    // report mode: latest measurement per core count
-    val lines = Files.readString(runsFile).split('\n').filter(_.nonEmpty)
-    def parse(l: String): RunResult = {
-      val m = """"cores":(\d+),"sec":([0-9.Ee+-]+),"turns":(\d+)""".r.findFirstMatchIn(l).get
-      RunResult(m.group(1).toInt, m.group(3).toLong, m.group(2).toDouble)
-    }
-    // minimum wall per level: least host interference (this sandbox host
-    // exhibits intermittent CPU stealing; see the variance table)
-    val byCores = lines.map(parse).groupBy(_.cores).map { case (c, rs) => c -> rs.minBy(_.seconds) }
-    val phys = Seq(byCores(4), byCores(16))
-    val smt = Seq(byCores(8), byCores(32))
-    def eff(pair: Seq[RunResult]): (Double, Double) = {
-      val sp = pair(1).throughput / pair(0).throughput
-      (sp, sp / (pair(1).cores.toDouble / pair(0).cores))
-    }
-    val (spP, effP) = eff(phys)
-    val (spS, effS) = eff(smt)
-    val json =
-      s"""{"metric":"scaling_efficiency","value":$effP,"unit":"ratio","sf":"$sfDir",""" +
-        s""""turns":${phys(0).turns},""" +
-        s""""local4":{"sec":${phys(0).seconds},"turns_per_sec":${phys(0).throughput}},""" +
-        s""""local16":{"sec":${phys(1).seconds},"turns_per_sec":${phys(1).throughput}},""" +
-        s""""local8":{"sec":${smt(0).seconds},"turns_per_sec":${smt(0).throughput}},""" +
-        s""""local32":{"sec":${smt(1).seconds},"turns_per_sec":${smt(1).throughput}},""" +
-        s""""speedup_4_16":$spP,"efficiency_4_16":$effP,""" +
-        s""""speedup_8_32":$spS,"efficiency_8_32":$effS}"""
-    println(json)
-
-    Files.createDirectories(Paths.get("BENCH"))
-    val md =
-      s"""# BENCH — measured scaling + throughput (flagship KG job)
-         |
-         |Protocol (driver-mandated sandbox proxy for the N→4N executor
-         |criterion in BASELINE.json): the SAME flagship job — generate
-         |transcripts → train NER (1 shuffle) → tag + assemble triples
-         |(mapPartitions, broadcast model) → blocking join → connected
-         |components → canonical resolve — on IDENTICAL input
-         |(${phys(0).turns} turns), at two parallelism levels with
-         |spark.sql.shuffle.partitions matched to cores, fresh
-         |SparkSession per run, wall-clock covering the full job.
-         |
-         || pair | N | 4N | wall N (s) | wall 4N (s) | turns/s N | turns/s 4N | speedup | efficiency |
-         ||---|---|---|---|---|---|---|---|---|
-         || physical cores | local[4] | local[16] | ${f"${phys(0).seconds}%.1f"} | ${f"${phys(1).seconds}%.1f"} | ${f"${phys(0).throughput}%.0f"} | ${f"${phys(1).throughput}%.0f"} | ${f"$spP%.2f"}× | **${f"$effP%.3f"}** |
-         || SMT-oversubscribed | local[8] | local[32] | ${f"${smt(0).seconds}%.1f"} | ${f"${smt(1).seconds}%.1f"} | ${f"${smt(0).throughput}%.0f"} | ${f"${smt(1).throughput}%.0f"} | ${f"$spS%.2f"}× | ${f"$effS%.3f"} |
-         |
-         |Target: efficiency ≥ 0.8 (BASELINE.json).
-         |
-         |## Why local[4]→local[16] is the honest N→4N proxy
-         |
-         |This box advertises 32 CPUs but a JVM-free calibration (32
-         |independent CPU-burn processes, Python multiprocessing) measures
-         |1→1.12 s, 8→1.29 s, 16→1.39 s, 32→1.79 s for constant per-process
-         |work — i.e. 8→32 threads can reach at most ≈2.9× (efficiency
-         |≈0.72) on ANY embarrassingly-parallel workload here: the top 16
-         |"cores" are SMT siblings sharing execution units. A real cluster
-         |gives each executor physical cores, so the physical-core pair is
-         |the representative measurement; the SMT pair is reported for
-         |transparency and sits at its hardware ceiling.
-         |
-         |Design notes for cluster scale: shuffle partitions scale with
-         |cores; AQE + skew-join enabled; the NLP stage is a shuffle-free
-         |mapPartitions after the single stable-ordering exchange; linking
-         |joins are blocking-key-bounded; the canonical-map join broadcasts
-         |when small and salt-shuffles when large.
-         |""".stripMargin
-    // NOTE: BENCH/BASELINE.md is the curated report (incl. host
-    // calibration); auto-generated output goes to a separate file.
-    Files.writeString(Paths.get("BENCH/SCALING_REPORT.md"), md)
+    case other => sys.error(s"usage: [stage [lo] [hi]] | job prep|run|report ... (got: $other)")
   }
 }

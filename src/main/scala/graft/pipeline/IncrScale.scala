@@ -30,64 +30,19 @@ object IncrScale {
   /** Hash-split on conv_id: ~1/batchMod of conversations form the batch.
     * 256 graph buckets make the untouched population measurable (a ~50
     * conv batch at sf0.1 touches ≲50 of 256 buckets plus the changed-
-    * surface blast radius). batchMod is overridable so IncrProbe can
-    * measure apply cost at several batch FRACTIONS (the
-    * batch-proportionality evidence); Bench pins the default.
+    * surface blast radius). batchMod is overridable so
+    * `BenchOne kg_incr_job:<batchMod>` can measure apply cost at several
+    * batch FRACTIONS (the batch-proportionality evidence); Bench pins the
+    * default.
     */
   private val BATCH_MOD = 1024
   private val BUCKETS = 256
 
-  def run(spark: SparkSession, sfDir: String, batchMod: Int = BATCH_MOD,
-      requireMostlyUntouched: Boolean = true): Result = {
-    import spark.implicits._
-    val b = graft.Kg.built(spark, sfDir)
-    val base = java.nio.file.Files.createTempDirectory("incr_scale_").toString
-    try {
-      val turns = b.labeled
-        .map(r => graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
-      val isBatch = pmod(xxhash64(col("conv_id")), lit(batchMod)) === 0
-      turns.where(!isBatch).write.parquet(s"$base/prior")
-      turns.where(isBatch).write.parquet(s"$base/batch")
-      NerTraining.save(b.model, spark, s"$base/model")
-
-      val t0 = System.nanoTime()
-      graft.KgJob.run(spark, s"$base/prior", s"$base/model", s"$base/graph",
-        buckets = BUCKETS)
-      val priorJobSec = (System.nanoTime() - t0) / 1e9
-
-      val t1 = System.nanoTime()
-      val m = graft.KgIncrementalJob.run(spark, s"$base/graph", s"$base/batch",
-        s"$base/model")
-      val applySec = (System.nanoTime() - t1) / 1e9
-
-      if (requireMostlyUntouched)
-        require(m.untouchedBuckets > m.rewrittenBuckets,
-          s"incremental apply rewrote ${m.rewrittenBuckets} of $BUCKETS buckets and left only " +
-            s"${m.untouchedBuckets} untouched — the apply cost is no longer batch-proportional")
-
-      // incremental(prior) ∘ apply(batch) == flagship(full corpus), by
-      // count + order-independent fingerprint over the complete
-      // resolution output (entity ids and canonicals included). The
-      // flagship side reads Bench's cache — run BEFORE Kg.evict.
-      val fpExpr = "bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj, " +
-        "subj_tag, obj_tag, subj_id, obj_id, subj_canonical, obj_canonical))"
-      def fingerprint(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), expr(fpExpr)).first()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-      val got = fingerprint(spark.read.parquet(s"$base/graph/triples"))
-      val want = fingerprint(b.out.resolvedTriples)
-      require(got == want,
-        s"incrementally maintained graph diverged from the full-corpus build at bench " +
-          s"scale: incremental (rows, fp) = $got vs flagship $want")
-
-      Result(b.out.tagged.count() - m.newTurns, m.newTurns, priorJobSec, applySec,
-        m.rewrittenBuckets, m.untouchedBuckets, m.changedSurfaces, got._1)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(base)).deleteRecursively()
-      ()
-    }
+  def run(spark: SparkSession, sfDir: String, batchMod: Int = BATCH_MOD): Result = {
+    val (priorJobSec, applies, triples) = applySlices(spark, sfDir, batchMod, nBatches = 1)
+    val (applySec, m) = applies.head
+    Result(graft.Kg.built(spark, sfDir).out.tagged.count() - m.newTurns, m.newTurns,
+      priorJobSec, applySec, m.rewrittenBuckets, m.untouchedBuckets, m.changedSurfaces, triples)
   }
 
   /** Sequential multi-batch maintenance (the daily-batch production
@@ -99,13 +54,25 @@ object IncrScale {
     */
   def runSequential(spark: SparkSession, sfDir: String,
       nBatches: Int = 3): (Double, Seq[Double]) = {
+    val (priorJobSec, applies, _) = applySlices(spark, sfDir, BATCH_MOD, nBatches)
+    (priorJobSec, applies.map(_._1))
+  }
+
+  /** Slices 0 until `nBatches` of `batchMod` are the batches, the rest is
+    * the prior corpus: one timed KgJob over the prior, then each batch
+    * applied in order, then the parity gate against the flagship build
+    * (read from Kg's cache — Bench runs this BEFORE Kg.evict). Returns
+    * (priorJobSec, (applySec, metrics) per batch, final triple count).
+    */
+  private def applySlices(spark: SparkSession, sfDir: String, batchMod: Int,
+      nBatches: Int): (Double, Seq[(Double, graft.KgIncrementalJob.IncrMetrics)], Long) = {
     import spark.implicits._
     val b = graft.Kg.built(spark, sfDir)
-    val base = java.nio.file.Files.createTempDirectory("incr_seq_").toString
+    val base = java.nio.file.Files.createTempDirectory("incr_scale_").toString
     try {
       val turns = b.labeled
         .map(r => graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
-      val slice = pmod(xxhash64(col("conv_id")), lit(BATCH_MOD))
+      val slice = pmod(xxhash64(col("conv_id")), lit(batchMod))
       turns.where(slice >= nBatches).write.parquet(s"$base/prior")
       for (i <- 0 until nBatches)
         turns.where(slice === i).write.parquet(s"$base/batch$i")
@@ -116,25 +83,27 @@ object IncrScale {
         buckets = BUCKETS)
       val priorJobSec = (System.nanoTime() - t0) / 1e9
 
-      val walls = (0 until nBatches).map { i =>
+      val applies = (0 until nBatches).map { i =>
         val t = System.nanoTime()
-        graft.KgIncrementalJob.run(spark, s"$base/graph", s"$base/batch$i",
+        val m = graft.KgIncrementalJob.run(spark, s"$base/graph", s"$base/batch$i",
           s"$base/model")
-        (System.nanoTime() - t) / 1e9
+        val sec = (System.nanoTime() - t) / 1e9
+        // a batch of at least 1/BUCKETS of the corpus may legitimately
+        // touch most buckets; anything smaller must leave most untouched
+        if (batchMod >= BUCKETS)
+          require(m.untouchedBuckets > m.rewrittenBuckets,
+            s"incremental apply rewrote ${m.rewrittenBuckets} of $BUCKETS buckets and left only " +
+              s"${m.untouchedBuckets} untouched — the apply cost is no longer batch-proportional")
+        (sec, m)
       }
 
-      val fpExpr = "bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj, " +
-        "subj_tag, obj_tag, subj_id, obj_id, subj_canonical, obj_canonical))"
-      def fingerprint(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), expr(fpExpr)).first()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-      val got = fingerprint(spark.read.parquet(s"$base/graph/triples"))
-      val want = fingerprint(b.out.resolvedTriples)
+      // incremental(prior) ∘ apply(batches) == flagship(full corpus)
+      val got = graft.Kg.resolvedFingerprint(spark.read.parquet(s"$base/graph/triples"))
+      val want = graft.Kg.resolvedFingerprint(b.out.resolvedTriples)
       require(got == want,
-        s"after $nBatches sequential applies the graph diverged from the full-corpus " +
-          s"build: (rows, fp) = $got vs flagship $want")
-      (priorJobSec, walls)
+        s"after $nBatches incremental apply(s) the graph diverged from the full-corpus build " +
+          s"at bench scale: incremental (rows, fp) = $got vs flagship $want")
+      (priorJobSec, applies, got._1)
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(base)).deleteRecursively()

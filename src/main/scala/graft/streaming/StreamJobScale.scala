@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Bench-scale exercise of the PRODUCTION streaming entry point
   * (`graft.StreamJob`): the full bench corpus is staged as parquet
@@ -40,16 +39,8 @@ object StreamJobScale {
       val sec = (System.nanoTime() - t0) / 1e9
 
       // stream == batch at bench scale: same multiset of resolved triples
-      // (count + bit_xor(xxhash64) over the full resolution output —
-      // order-independent, entity ids and canonicals included)
-      val fpExpr = "bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj, " +
-        "subj_tag, obj_tag, subj_id, obj_id, subj_canonical, obj_canonical))"
-      def fingerprint(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), expr(fpExpr)).first()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-      val got = fingerprint(spark.read.parquet(s"$base/out/resolved_triples"))
-      val want = fingerprint(b.out.resolvedTriples)
+      val got = graft.Kg.resolvedFingerprint(spark.read.parquet(s"$base/out/resolved_triples"))
+      val want = graft.Kg.resolvedFingerprint(b.out.resolvedTriples)
       require(got == want,
         s"StreamJob output diverged from the batch resolve at bench scale: " +
           s"stream (rows, fp) = $got vs batch $want")

@@ -35,21 +35,6 @@ object StreamingScale {
       statePeak: Long, stateAfterExpiry: Long, wallSec: Double,
       batches: Int = 0, medianBatchMs: Long = 0L)
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val r = run(spark)
-    println(s"""{"stream_docs":${r.docs},"stream_pairs":${r.pairs},""" +
-      s""""stream_hot_pairs":${r.hotPairs},"stream_state_peak":${r.statePeak},""" +
-      s""""stream_state_after_expiry":${r.stateAfterExpiry},"stream_wall_sec":${r.wallSec}}""")
-    spark.stop()
-  }
-
   def run(spark: SparkSession, nFamilies: Int = 100000, hotCopies: Int = 5000): Result = {
     import spark.implicits._
     val dirPath = java.nio.file.Files.createTempDirectory("stream_scale")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import java.nio.file.{Files, Paths}
@@ -19,16 +18,7 @@ object PlanDump {
     val names = if (args.length > 1) args.tail.toSeq else Seq(
       "kg_gazetteer_disambig", "kg_gazetteer_salted", "t_lang_ngram")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchOne.session()
     Files.createDirectories(Paths.get("plans/r06"))
     for (name <- names) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
