@@ -1,6 +1,8 @@
 package graft
 
 import graft.corpus.Turn
+import graft.obs.PhaseRecorder
+import graft.pipeline.Records.{IncrMarker, Layout}
 import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
@@ -62,14 +64,7 @@ object KgIncrementalJob {
   private[graft] val TokenFormat = "v2-"
 
   def main(args: Array[String]): Unit = {
-    if (args.length % 2 != 0)
-      sys.error(s"odd argument list ${args.mkString(" ")}; expected --flag value pairs " +
-        s"from ${knownFlags.mkString(", ")}")
-    val pairs = args.grouped(2).map { case Array(k, v) => k -> v }.toSeq
-    val unknown = pairs.map(_._1).filterNot(knownFlags)
-    if (unknown.nonEmpty)
-      sys.error(s"unknown option(s) ${unknown.mkString(", ")}; accepted: ${knownFlags.mkString(", ")}")
-    val opts = pairs.toMap
+    val opts = Cli.flags(args, knownFlags)
     val input = opts.getOrElse("--input", sys.error("--input <new transcripts parquet> required"))
     val modelPath = opts.getOrElse("--model", sys.error("--model <ner model parquet> required"))
     val output = opts.getOrElse("--output", sys.error("--output <existing KgJob graph dir> required"))
@@ -137,12 +132,7 @@ object KgIncrementalJob {
     // phase walls to stderr, mirroring KgJob: the apply's cost story at
     // scale is "batch-proportional + fixed planning" — the walls make the
     // split attributable (IncrScale reports the total as kg_incr_job)
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      System.err.println(f"[kgincr] $name: ${(now - tPhase) / 1e9}%.2f s")
-      tPhase = now
-    }
+    val phase = new PhaseRecorder("kgincr")
     def crashPoint(phase: String): Unit =
       if (failAfter.contains(phase))
         throw new RuntimeException(s"[test hook] injected crash after phase '$phase'")
@@ -152,21 +142,19 @@ object KgIncrementalJob {
 
     // ---- recovery: an _incr staging area from a previous invocation
     if (exists(s"$incr/marker.json")) {
-      val mj = Commit.read(f, new Path(s"$incr/marker.json"))
-      val mToken = """"token":"([^"]+)"""".r.findFirstMatchIn(mj)
-        .map(_.group(1)).getOrElse(sys.error(s"malformed $incr/marker.json: $mj"))
-      require(mToken.startsWith(TokenFormat),
-        s"$incr/marker.json records batch token $mToken, written before the $TokenFormat " +
+      val marker = IncrMarker.read(f, new Path(s"$incr/marker.json"))
+      require(marker.token.startsWith(TokenFormat),
+        s"$incr/marker.json records batch token ${marker.token}, written before the $TokenFormat " +
           "token format: it cannot be compared with the current input's token. Finish the " +
           "interrupted run with the release that started it, then rebuild the output with " +
           "the full graft.KgJob over every batch applied so far")
       if (!exists(s"$incr/manifests_invalidated.json")) {
         // intent was staged but nothing live was mutated — prior state
         // is fully intact; discard and start over
-        System.err.println(s"[kgincr] discarding stale staging for batch $mToken (nothing was mutated)")
+        System.err.println(s"[kgincr] discarding stale staging for batch ${marker.token} (nothing was mutated)")
         f.delete(new Path(incr), true)
       } else if (exists(s"$incr/triples.done.json")) {
-        System.err.println(s"[kgincr] finishing the committed tail of interrupted batch $mToken")
+        System.err.println(s"[kgincr] finishing the committed tail of interrupted batch ${marker.token}")
         finishTail(spark, f, output)
         // fall through: the current batch then applies normally (the
         // ledger rejects it if it IS the one just finished)
@@ -174,13 +162,11 @@ object KgIncrementalJob {
         // manifests are gone and the rewrite is incomplete: the triples
         // table is mid-mutation. Only the SAME batch may rebuild it —
         // its staged snapshot + link state carry everything needed.
-        require(token == mToken,
-          s"output $output holds an INCOMPLETE incremental run of batch $mToken (manifests " +
+        require(token == marker.token,
+          s"output $output holds an INCOMPLETE incremental run of batch ${marker.token} (manifests " +
             s"invalidated, rewrite unfinished) but the current input is batch $token — re-run " +
             "with the original batch's input to complete it before applying a new batch")
-        System.err.println(s"[kgincr] resuming interrupted rewrite of batch $mToken")
-        val layout = markerLayout(mj)
-        val buckets = markerBuckets(mj)
+        System.err.println(s"[kgincr] resuming interrupted rewrite of batch ${marker.token}")
         val staged = GraphSink.readLinkState(spark, s"$incr/linkstate_new").getOrElse(
           sys.error(s"$incr/linkstate_new lost its commit marker — staging is torn; " +
             "restore the output from backup or re-run the full KgJob"))
@@ -191,7 +177,7 @@ object KgIncrementalJob {
           .unionByName(newRaw)
         val (wm, nNewTriples) = writeTail(spark, f, output,
           KgPipeline.resolveTriples(combined, canonNew), newRaw,
-          layout, buckets, crashPoint)
+          marker.layout, marker.buckets, crashPoint)
         val (nEntities, nEdges) = finishTail(spark, f, output)
         return IncrMetrics(nTurns, nNewTriples, -1L, wm.buckets, wm.skippedBuckets,
           nEntities, nEdges)
@@ -217,9 +203,8 @@ object KgIncrementalJob {
     require(!st.appliedTokens.contains(token),
       s"input batch $token was already applied to $output — a batch must be applied exactly " +
         "once (re-applying would double its mention counts, triples, and edge weights)")
-    val layout @ (nBuckets, cfg, dayPartition) =
-      GraphSink.readCommittedLayout(spark, output).getOrElse(
-        sys.error(s"$output has no committed manifests — not a completed KgJob output"))
+    val layout = GraphSink.committedLayout(spark, output).getOrElse(
+      sys.error(s"$output has no committed manifests — not a completed KgJob output"))
     phase("read_state")
 
     val model = spark.sparkContext.broadcast(NerTraining.load(spark, modelPath))
@@ -257,7 +242,7 @@ object KgIncrementalJob {
     val oldTriples = spark.read.parquet(s"$output/triples")
     import graft.functions.NativeFunctions.normalize_surface
     val newBucketsDf = turns.toDF()
-      .select(pmod(xxhash64($"conv_id"), lit(nBuckets)).cast("int").as("conv_bucket"))
+      .select(pmod(xxhash64($"conv_id"), lit(layout.nBuckets)).cast("int").as("conv_bucket"))
     val changedBuckets =
       if (nChanged == 0) spark.emptyDataset[Int].toDF("conv_bucket")
       else oldTriples
@@ -310,9 +295,7 @@ object KgIncrementalJob {
 
     // commit the intent: token + bucket set + layout (the resume path
     // must not depend on re-reading manifests it is about to delete)
-    writeMarker(f, s"$incr/marker.json",
-      s"""{"token":"$token","buckets":[${bucketsB.mkString(",")}],""" +
-        s""""n_buckets":$nBuckets,"config":"$cfg","day_partition":$dayPartition}""")
+    writeMarker(f, s"$incr/marker.json", IncrMarker(token, bucketsB, layout).json)
     crashPoint("staged")
 
     val (wm, nNewTriples) = writeTail(spark, f, output, resolvedCombined, newRaw,
@@ -326,17 +309,6 @@ object KgIncrementalJob {
       nEntities, nEdges)
   }
 
-  private def markerLayout(mj: String): (Int, String, Boolean) = (
-    """"n_buckets":(\d+)""".r.findFirstMatchIn(mj).map(_.group(1).toInt)
-      .getOrElse(sys.error(s"marker lacks n_buckets: $mj")),
-    """"config":"([^"]*)"""".r.findFirstMatchIn(mj).map(_.group(1)).getOrElse("v1"),
-    """"day_partition":(true|false)""".r.findFirstMatchIn(mj).exists(_.group(1).toBoolean))
-
-  private def markerBuckets(mj: String): Seq[Int] =
-    """"buckets":\[([^\]]*)\]""".r.findFirstMatchIn(mj)
-      .map(_.group(1)).getOrElse(sys.error(s"marker lacks buckets: $mj"))
-      .split(",").filter(_.nonEmpty).map(_.trim.toInt).toSeq
-
   /** The live triples mutation: invalidate affected manifests, rewrite
     * exactly those buckets from the combined (snapshot + new) rows, and
     * commit `triples.done`. Idempotent under same-batch re-invocation —
@@ -345,14 +317,13 @@ object KgIncrementalJob {
     */
   private def writeTail(spark: SparkSession, f: FileSystem, output: String,
       resolved: DataFrame, newRaw: DataFrame,
-      layout: (Int, String, Boolean), bucketsB: Seq[Int],
+      layout: Layout, bucketsB: Seq[Int],
       crashPoint: String => Unit): (GraphSink.WriteMetrics, Long) = {
-    val (nBuckets, cfg, dayPartition) = layout
     val incr = s"$output/_incr"
     writeMarker(f, s"$incr/manifests_invalidated.json", "{}")
     deleteManifests(f, output, bucketsB)
     crashPoint("invalidated")
-    val wm = GraphSink.writeTriples(spark, resolved, output, nBuckets, cfg, dayPartition)
+    val wm = GraphSink.writeTriples(spark, resolved, output, layout.nBuckets, layout.dayPartition)
     writeMarker(f, s"$incr/triples.done.json", "{}")
     crashPoint("triples")
     (wm, newRaw.count())

@@ -1,6 +1,7 @@
 package graft
 
 import graft.corpus.Turn
+import graft.obs.PhaseRecorder
 import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining}
 import org.apache.spark.sql.SparkSession
 
@@ -36,17 +37,7 @@ object KgJob {
   private val knownFlags = Set("--input", "--model", "--output", "--buckets", "--day-partition")
 
   def main(args: Array[String]): Unit = {
-    // Strict parse (ADVICE r3): a misspelled flag or dangling token must
-    // fail loudly, not silently fall back to a default that the resume
-    // guard only catches on a later re-run against the same output dir.
-    if (args.length % 2 != 0)
-      sys.error(s"odd argument list ${args.mkString(" ")}; expected --flag value pairs " +
-        s"from ${knownFlags.mkString(", ")}")
-    val pairs = args.grouped(2).map { case Array(k, v) => k -> v }.toSeq
-    val unknown = pairs.map(_._1).filterNot(knownFlags)
-    if (unknown.nonEmpty)
-      sys.error(s"unknown option(s) ${unknown.mkString(", ")}; accepted: ${knownFlags.mkString(", ")}")
-    val opts = pairs.toMap
+    val opts = Cli.flags(args, knownFlags)
     val input = opts.getOrElse("--input", sys.error("--input <transcripts parquet> required"))
     val modelPath = opts.getOrElse("--model", sys.error("--model <ner model parquet> required"))
     val output = opts.getOrElse("--output", sys.error("--output <graph dir> required"))
@@ -73,12 +64,7 @@ object KgJob {
   def run(spark: SparkSession, input: String, modelPath: String, output: String,
       buckets: Int = 16, dayPartition: Boolean = false): JobMetrics = {
     import spark.implicits._
-    var t = System.nanoTime()
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      System.err.println(f"[kgjob] $name: ${(now - t) / 1e9}%.2f s")
-      t = now
-    }
+    val phase = new PhaseRecorder("kgjob")
     val turns = spark.read.parquet(input).as[Turn]
     val model = spark.sparkContext.broadcast(NerTraining.load(spark, modelPath))
     phase("load_model_broadcast")
@@ -112,7 +98,7 @@ object KgJob {
     val nEdges = out.edges.count()
     val nTriples = out.resolvedTriples.count()
     phase("metrics_counts")
-    out.resolvedTriples.unpersist()
+    out.resolvedTriples.unpersist(); out.tagged.unpersist(); out.nodes.unpersist()
     // the CC frontier checkpoint exists only to resume a KILLED linking
     // phase; once the job's final manifests are committed it is dead
     // weight — O(|nodes|) parquet left under every successful output,

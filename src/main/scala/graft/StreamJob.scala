@@ -45,16 +45,7 @@ object StreamJob {
     "--watermark", "--once")
 
   def main(args: Array[String]): Unit = {
-    // strict parse, same contract as KgJob: a misspelled flag must fail
-    // loudly, never silently fall back to a default
-    if (args.length % 2 != 0)
-      sys.error(s"odd argument list ${args.mkString(" ")}; expected --flag value pairs " +
-        s"from ${knownFlags.mkString(", ")}")
-    val pairs = args.grouped(2).map { case Array(k, v) => k -> v }.toSeq
-    val unknown = pairs.map(_._1).filterNot(knownFlags)
-    if (unknown.nonEmpty)
-      sys.error(s"unknown option(s) ${unknown.mkString(", ")}; accepted: ${knownFlags.mkString(", ")}")
-    val opts = pairs.toMap
+    val opts = Cli.flags(args, knownFlags)
     val input = opts.getOrElse("--input", sys.error("--input <transcript drops dir> required"))
     val modelPath = opts.getOrElse("--model", sys.error("--model <ner model parquet> required"))
     val canonDir = opts.getOrElse("--canon", sys.error("--canon <canonical map parquet> required"))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import graft.pipeline.Records.{BucketManifest, Layout, LinkStateMarker}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 
@@ -15,8 +16,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSess
   * Protocol per conv-bucket partition:
   *   1. triples for pending buckets are written via
   *      partitionBy(conv_bucket) (directory-atomic per partition),
-  *   2. a manifest JSON {bucket, rows, fingerprint, config} is written
-  *      AFTER the data through [[Commit.write]] (the commit point).
+  *   2. a [[Records.BucketManifest]] is written AFTER the data through
+  *      [[Commit.write]] (the commit point).
   * Resume = list manifests, anti-join done buckets, process the rest.
   * The fingerprint is an order-independent sum of xxhash64 over the
   * partition's logical content, so a resumed run can verify integrity
@@ -42,16 +43,23 @@ object GraphSink {
     resolvedTriples.withColumn("conv_bucket",
       pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int"))
 
-  def doneBuckets(spark: SparkSession, outDir: String): Set[Int] = {
+  def doneBuckets(spark: SparkSession, outDir: String): Set[Int] =
+    bucketManifests(spark, outDir)
+      .map(_.getName.stripPrefix("bucket-").stripSuffix(".json").toInt).toSet
+
+  private def bucketManifests(spark: SparkSession, outDir: String): Seq[Path] = {
     val dir = new Path(s"$outDir/_manifests")
     val f = Commit.fs(spark, outDir)
-    if (!f.exists(dir)) Set.empty
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case name if name.startsWith("bucket-") && name.endsWith(".json") =>
-        name.stripPrefix("bucket-").stripSuffix(".json").toInt
-      }.toSet
+    if (!f.exists(dir)) Nil
+    else f.listStatus(dir).toSeq.map(_.getPath)
+      .filter(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
   }
+
+  /** The layout of a committed table, read from one of its bucket
+    * manifests; None when no bucket manifest has been committed. */
+  def committedLayout(spark: SparkSession, outDir: String): Option[Layout] =
+    bucketManifests(spark, outDir).headOption
+      .map(p => BucketManifest.read(Commit.fs(spark, outDir), p).layout)
 
   /** Write triples for all buckets not yet committed; returns metrics
     * observed on the actual write pass (`Observation` — executor→driver
@@ -70,22 +78,22 @@ object GraphSink {
       resolvedTriples: DataFrame,
       outDir: String,
       nBuckets: Int = 16,
-      configHash: String = "v1",
       dayPartition: Boolean = false): WriteMetrics = {
+    val layout = Layout(nBuckets, dayPartition)
     val done = doneBuckets(spark, outDir)
-    // a resume is only meaningful under the SAME bucketing/config/layout:
-    // with a different nBuckets the done-bucket ids index a different
-    // partition function, and with a different dayPartition the pending
-    // buckets land at a different directory depth than the committed
-    // ones (readers then fail on conflicting directory structures) —
-    // refuse loudly instead
-    if (done.nonEmpty) validateResumeConfig(spark, outDir, nBuckets, configHash, dayPartition)
+    // a resume under another layout would mix partition functions or
+    // directory depths (readers then fail on conflicting structures)
+    for (c <- committedLayout(spark, outDir))
+      require(c == layout, s"resume with n_buckets=$nBuckets, day_partition=$dayPartition " +
+        s"against $outDir, committed with n_buckets=${c.nBuckets}, day_partition=" +
+        s"${c.dayPartition}: the bucket ids or partition depths are incompatible — keep the " +
+        "original layout or use a fresh output directory")
     val f = Commit.fs(spark, outDir)
     // whole-bucket replace on resume (ADVICE r4): dynamic overwrite only
     // replaces the LEAF partitions present in the resumed data. Under the
     // day layout, if a pending (uncommitted) bucket's resumed rows split
-    // into a different day set than the crashed run's (input drift not
-    // captured by configHash), a stale day dir would survive inside the
+    // into a different day set than the crashed run's (input drift the
+    // manifests cannot detect), a stale day dir would survive inside the
     // "replaced" bucket and the read-back fingerprint would bless it into
     // the manifest. Deleting every UNCOMMITTED bucket directory up front
     // restores the flat layout's whole-bucket-replace guarantee — the
@@ -95,14 +103,8 @@ object GraphSink {
     // bucket manifests leaves every bucket dir uncommitted — a resume
     // with drifted input would otherwise keep pre-drift day dirs inside
     // rewritten buckets and the read-back fingerprint would bless them
-    val triplesDir0 = new Path(s"$outDir/triples")
-    if (f.exists(triplesDir0)) {
-      for (st <- f.listStatus(triplesDir0)
-           if st.isDirectory && st.getPath.getName.startsWith("conv_bucket=")) {
-        val bucket = st.getPath.getName.stripPrefix("conv_bucket=").toInt
-        if (!done.contains(bucket)) f.delete(st.getPath, true)
-      }
-    }
+    val triplesDir = new Path(s"$outDir/triples")
+    uncommittedBuckets(f, triplesDir, done).foreach(f.delete(_, true))
     val all = bucketed(resolvedTriples, nBuckets)
     val pending = if (done.isEmpty) all else all.where(!col("conv_bucket").isin(done.toSeq: _*))
 
@@ -145,19 +147,9 @@ object GraphSink {
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCols: _*)
-      .parquet(s"$outDir/triples")
+      .parquet(triplesDir.toString)
 
-    // an all-buckets-done resume writes zero partitions: the observed
-    // plan then reports no metrics at all — treat as 0, don't throw
-    val rows = scala.util.Try(obs.get("rows").asInstanceOf[Long]).getOrElse(0L)
-    val convs = scala.util.Try(obs.get("convs").asInstanceOf[Long]).getOrElse(0L)
-    // only the legitimate zero-row resume may default to the empty set: a
-    // cast/metric failure on a NON-empty write must propagate, or a
-    // successful data write silently commits with no manifests and every
-    // later run reprocesses all of it (ADVICE r3)
-    val written: Set[Int] =
-      if (rows == 0L) Set.empty
-      else obs.get("written_buckets").asInstanceOf[Seq[Int]].toSet
+    val (rows, convs, written) = observedWrite(obs.get, f, triplesDir, done)
 
     // per-bucket manifest: rows + order-independent content fingerprint,
     // computed by READING BACK the just-written partition files — NOT by
@@ -171,7 +163,6 @@ object GraphSink {
     // restrict to the buckets this run wrote (see the observe above) —
     // this also makes a zero-row write skip the scan entirely (a triples
     // dir holding only _SUCCESS would fail schema inference)
-    val triplesDir = new Path(s"$outDir/triples")
     val perBucket =
       if (written.isEmpty || !f.exists(triplesDir)) Array.empty[org.apache.spark.sql.Row]
       else spark.read.parquet(triplesDir.toString)
@@ -184,51 +175,37 @@ object GraphSink {
 
     f.mkdirs(new Path(s"$outDir/_manifests"))
     for (r <- perBucket) {
-      val bucket = r.getInt(0)
-      val json =
-        s"""{"bucket":$bucket,"rows":${r.getLong(1)},"fingerprint":${r.getLong(2)},""" +
-          s""""config":"$configHash","n_buckets":$nBuckets,"day_partition":$dayPartition}"""
+      val m = BucketManifest(r.getInt(0), r.getLong(1), r.getLong(2), layout)
       // fails loudly rather than leave the bucket data committed but
       // unmanifested (the resume protocol would then re-process it —
       // idempotent, but the failure must surface)
-      Commit.write(f, new Path(s"$outDir/_manifests/bucket-$bucket.json"), json)
+      Commit.write(f, new Path(s"$outDir/_manifests/bucket-${m.bucket}.json"), m.json)
     }
     WriteMetrics(perBucket.length, done.size, rows, convs)
   }
 
-  /** Refuse to resume under a different partition function or config:
-    * reads one committed manifest and compares its recorded n_buckets /
-    * config against the current run's. Manifests written before these
-    * fields existed are accepted (no recorded value to contradict).
-    */
-  private def validateResumeConfig(spark: SparkSession, outDir: String,
-      nBuckets: Int, configHash: String, dayPartition: Boolean = false): Unit = {
-    val f = Commit.fs(spark, outDir)
-    val dir = new Path(s"$outDir/_manifests")
-    val sample = f.listStatus(dir).toSeq
-      .map(_.getPath).find(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
-    for (p <- sample) {
-      val json = Commit.read(f, p)
-      for (m <- """"n_buckets":(\d+)""".r.findFirstMatchIn(json)) {
-        require(m.group(1).toInt == nBuckets,
-          s"resume with nBuckets=$nBuckets against a table committed with " +
-            s"n_buckets=${m.group(1)} ($p): the bucket ids are incompatible — " +
-            "use the original bucket count or a fresh output directory")
-      }
-      for (m <- """"config":"([^"]*)"""".r.findFirstMatchIn(json)) {
-        require(m.group(1) == configHash,
-          s"resume with config=$configHash against a table committed with " +
-            s"config=${m.group(1)} ($p): clear the output or keep the config stable")
-      }
-      // manifests written before the field existed were all flat layout
-      val committedDay = """"day_partition":(true|false)""".r.findFirstMatchIn(json)
-        .exists(_.group(1).toBoolean)
-      require(committedDay == dayPartition,
-        s"resume with dayPartition=$dayPartition against a table committed with " +
-          s"day_partition=$committedDay ($p): the partition depths are incompatible — " +
-          "keep the layout or use a fresh output directory")
+  /** (rows, convs, buckets written) observed on the write pass. No
+    * metrics reads as zero only when no `conv_bucket=` dir outside `done`
+    * exists (one listing); any other missing or mistyped metric throws
+    * rather than leave written data unmanifested (ADVICE r3). */
+  private[graft] def observedWrite(metrics: Map[String, Any], f: FileSystem,
+      triplesDir: Path, done: Set[Int]): (Long, Long, Set[Int]) =
+    if (metrics.nonEmpty)
+      (metrics("rows").asInstanceOf[Long], metrics("convs").asInstanceOf[Long],
+        metrics("written_buckets").asInstanceOf[Seq[Any]].map(_.asInstanceOf[Int]).toSet)
+    else {
+      val uncommitted = uncommittedBuckets(f, triplesDir, done).map(_.getName)
+      require(uncommitted.isEmpty, s"$triplesDir holds uncommitted bucket dir(s) " +
+        s"${uncommitted.mkString(", ")} but the write reported no metrics — refusing to " +
+        "commit with zero rows")
+      (0L, 0L, Set.empty)
     }
-  }
+
+  /** The `conv_bucket=<b>` dirs under `triplesDir` whose bucket is not in `done`. */
+  private def uncommittedBuckets(f: FileSystem, triplesDir: Path, done: Set[Int]): Seq[Path] =
+    if (!f.exists(triplesDir)) Nil
+    else f.listStatus(triplesDir).toSeq.filter(_.isDirectory).map(_.getPath).filter(p =>
+      p.getName.startsWith("conv_bucket=") && !done(p.getName.stripPrefix("conv_bucket=").toInt))
 
   // ------------------------------------------------------- link state
 
@@ -255,8 +232,7 @@ object GraphSink {
     labels.select(col("node_id"), col("component"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/labels")
     val n = spark.read.parquet(s"$dir/nodes").count()
-    val json = s"""{"n_nodes":$n,"applied":[${appliedTokens.map("\"" + _ + "\"").mkString(",")}]}"""
-    Commit.write(f, linkStateMarker(dir), json)
+    Commit.write(f, linkStateMarker(dir), LinkStateMarker(n, appliedTokens).json)
   }
 
   /** None when the directory holds no COMMITTED link state. The node
@@ -272,39 +248,12 @@ object GraphSink {
     // would resolve to deleted part files
     spark.catalog.refreshByPath(s"$dir/nodes")
     spark.catalog.refreshByPath(s"$dir/labels")
-    val json = Commit.read(f, linkStateMarker(dir))
-    val nRecorded = """"n_nodes":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
-      .getOrElse(sys.error(s"malformed link-state marker in $dir: $json"))
-    val applied = """"applied":\[([^\]]*)\]""".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\"")))
-      .getOrElse(Nil)
+    val marker = LinkStateMarker.read(f, linkStateMarker(dir))
     val nodes = spark.read.parquet(s"$dir/nodes")
-    require(nodes.count() == nRecorded,
+    require(nodes.count() == marker.nNodes,
       s"link state in $dir holds ${nodes.count()} nodes but its marker recorded " +
-        s"$nRecorded — the table is torn; re-run the full KgJob to rebuild it")
-    Some(LinkState(nodes, spark.read.parquet(s"$dir/labels"), applied))
-  }
-
-  /** The layout a committed table was written with, read from one
-    * manifest: (n_buckets, configHash, day_partition). None when no
-    * manifest has been committed.
-    */
-  def readCommittedLayout(spark: SparkSession, outDir: String): Option[(Int, String, Boolean)] = {
-    val f = Commit.fs(spark, outDir)
-    val dir = new Path(s"$outDir/_manifests")
-    if (!f.exists(dir)) return None
-    val sample = f.listStatus(dir).toSeq
-      .map(_.getPath).find(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
-    sample.map { p =>
-      val json = Commit.read(f, p)
-      val nb = """"n_buckets":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-        .getOrElse(sys.error(s"manifest $p lacks n_buckets — table predates the layout record"))
-      val cfg = """"config":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1)).getOrElse("v1")
-      val day = """"day_partition":(true|false)""".r.findFirstMatchIn(json)
-        .exists(_.group(1).toBoolean)
-      (nb, cfg, day)
-    }
+        s"${marker.nNodes} — the table is torn; re-run the full KgJob to rebuild it")
+    Some(LinkState(nodes, spark.read.parquet(s"$dir/labels"), marker.applied))
   }
 
   /** Both dimension-table writes repartition by their partition column

@@ -308,25 +308,16 @@ object KgPipeline {
     // not return silent empty output
     val nodesFp = if (idRow.isNullAt(1)) 0L else idRow.getLong(1)
 
-    case class Marker(iter: Int, changed: Long, converged: Boolean, n: Long, fp: Long)
-    def parseMarker(json: String): Option[Marker] = for {
-      it <- """"iter":(\d+)""".r.findFirstMatchIn(json)
-      ch <- """"changed":(-?\d+)""".r.findFirstMatchIn(json)
-      cv <- """"converged":(true|false)""".r.findFirstMatchIn(json)
-      n <- """"nodes":(\d+)""".r.findFirstMatchIn(json)
-      fp <- """"nodes_fp":(-?\d+)""".r.findFirstMatchIn(json)
-    } yield Marker(it.group(1).toInt, ch.group(1).toLong,
-      cv.group(1).toBoolean, n.group(1).toLong, fp.group(1).toLong)
-
-    val committed: Seq[Marker] =
+    // an unreadable marker fails here, naming its file: skipping it would skip the guard below
+    val committed: Seq[Records.CcMarker] =
       if (!f.exists(dirPath)) Nil
       else f.listStatus(dirPath).toSeq.map(_.getPath)
         .filter(p => p.getName.startsWith("iter-") && p.getName.endsWith(".done.json"))
-        .flatMap(p => parseMarker(Commit.read(f, p)))
+        .map(p => Records.CcMarker.read(f, p))
     val last = committed.sortBy(_.iter).lastOption
-    for (m <- last) require(m.n == nNodes && m.fp == nodesFp,
+    for (m <- last) require(m.nodes == nNodes && m.nodesFp == nodesFp,
       s"CC checkpoint at $checkpointDir (iter ${m.iter}) was written for a different " +
-        s"node set (${m.n} nodes, fp ${m.fp}; current: $nNodes, fp $nodesFp) — " +
+        s"node set (${m.nodes} nodes, fp ${m.nodesFp}; current: $nNodes, fp $nodesFp) — " +
         s"delete the checkpoint directory (`rm -r $checkpointDir`, for a KgJob output " +
         "that is `<output>/_cc_checkpoints`) or point the job at its original input")
     // sweep frontiers superseded before a crash landed in the
@@ -372,10 +363,8 @@ object KgPipeline {
       // point; a crash between the two leaves an uncommitted directory
       // that the overwrite below simply replaces on resume
       next.write.mode(SaveMode.Overwrite).parquet(s"$checkpointDir/iter-$iter")
-      val json =
-        s"""{"iter":$iter,"changed":$changed,"converged":$converged,""" +
-          s""""nodes":$nNodes,"nodes_fp":$nodesFp}"""
-      Commit.write(f, new Path(s"$checkpointDir/iter-$iter.done.json"), json)
+      Commit.write(f, new Path(s"$checkpointDir/iter-$iter.done.json"),
+        Records.CcMarker(iter, changed, converged, nNodes, nodesFp).json)
       // prune the superseded frontier AFTER the new commit (a crash in
       // between leaves two markers; resume takes the max)
       if (iter > 1) {

@@ -148,15 +148,7 @@ object ScaleLinking {
     // leak hundreds of MB into /tmp per bench run
     val ccDir = java.nio.file.Files.createTempDirectory("cc_ckpt_").toString
     val gazDir = java.nio.file.Files.createTempDirectory("gaz_scale_").toString
-    var t = System.nanoTime()
-    val walls = scala.collection.mutable.ListBuffer.empty[(String, Double)]
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      val sec = (now - t) / 1e9
-      System.err.println(f"[scale-linking] $name: $sec%.2f s")
-      walls += name -> sec
-      t = now
-    }
+    val phase = new graft.obs.PhaseRecorder("scale-linking")
     val nodes = syntheticNodes(spark, nEntities).cache()
     try {
       val nNodes = nodes.count()
@@ -202,7 +194,7 @@ object ScaleLinking {
         // a reader separate steal windows from plan changes without a
         // controlled re-run (the r5 90 s driver wall vs 9.7 s durable-CC
         // floor measured the same session is exactly that split)
-        lastPhaseWalls = walls.toList
+        lastPhaseWalls = phase.walls
         Result(nNodes, nEdges, nComponents, KgPipeline.lastIterations,
           overflowBlocks, nTriples, withId, gazAliases, gazResolved)
       } finally edgesC.unpersist()

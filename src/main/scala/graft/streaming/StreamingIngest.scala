@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.corpus.Turn
+import graft.pipeline.Records.{CanonVersion, StreamManifest}
 import graft.pipeline.{Commit, MentionRow, TaggedRow, TripleRow}
 import graft.semantics.{NerModel, TripleAssembler}
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -278,7 +279,7 @@ object StreamingIngest {
       .agg(count(lit(1)).as("n"),
         expr("bit_xor(xxhash64(norm, tag, entity_id, canonical_norm))").as("fp"))
       .collect()(0)
-    val version = s"${r.getLong(0)}-${if (r.isNullAt(1)) 0L else r.getLong(1)}"
+    val version = CanonVersion(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)).token
     val hfs = Commit.fs(spark, canonDir)
     val dst = new Path(s"$canonDir/_canon_version")
     if (hfs.exists(dst)) hfs.delete(dst, false)
@@ -295,7 +296,7 @@ object StreamingIngest {
     val dir = new Path(canonDir)
     val hfs = Commit.fs(spark, canonDir)
     val marker = new Path(s"$canonDir/_canon_version")
-    if (hfs.exists(marker)) Commit.read(hfs, marker).trim
+    if (hfs.exists(marker)) CanonVersion.read(hfs, marker).token
     else if (!hfs.exists(dir)) "absent"
     else hfs.listStatus(dir).toSeq
       .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
@@ -398,11 +399,10 @@ object StreamingIngest {
     val batchDir = new Path(s"$outDir/resolved_triples/batch=$batchId")
     observed.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(batchDir.toString)
     val (rows, fp) = observedStats(obs.get, hfs, batchDir)
-    val json = s"""{"batch":$batchId,"rows":$rows,"fingerprint":$fp,"canon_version":"$canonVersion"}"""
     hfs.mkdirs(manifest.getParent)
     // a failed commit throws, so Structured Streaming retries the batch
     // idempotently instead of leaving its parquet unmanifested
-    Commit.write(hfs, manifest, json)
+    Commit.write(hfs, manifest, StreamManifest(batchId, rows, fp, canonVersion).json)
   }
 
   /** (rows, fingerprint) for a batch manifest. A plan that processed no

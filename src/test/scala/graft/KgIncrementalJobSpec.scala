@@ -215,6 +215,40 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     assert(!e.getMessage.contains("INCOMPLETE"), "must not blame a different batch")
   }
 
+  test("a link-state marker without its applied-batch ledger is refused") {
+    import spark.implicits._
+    val (dir, model) = staged
+    val out = s"$dir/g_no_ledger"
+    val nodes = Seq(("acme", "ORG", 2L, "Acme", 1L)).toDF("norm", "tag", "n_mentions", "surface", "node_id")
+    val labels = Seq((1L, 1L)).toDF("node_id", "component")
+    GraphSink.writeLinkState(spark, nodes, labels, s"$out/_linkstate")
+    // read as an empty ledger, it would re-admit every batch ever applied
+    val f = Commit.fs(spark, out)
+    val marker = new org.apache.hadoop.fs.Path(s"$out/_linkstate/_committed.json")
+    f.delete(marker, false)
+    Commit.write(f, marker, """{"n_nodes":1}""")
+    val e = intercept[IllegalArgumentException] {
+      KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
+    }
+    assert(e.getMessage.contains("_committed.json") && e.getMessage.contains("'applied'"),
+      e.getMessage)
+  }
+
+  test("a staging marker without day_partition is refused") {
+    val (dir, model) = staged
+    val out = s"$dir/g_marker_no_layout"
+    val f = Commit.fs(spark, out)
+    Commit.write(f, new org.apache.hadoop.fs.Path(s"$out/_incr/marker.json"),
+      s"""{"token":"${KgIncrementalJob.TokenFormat}b1-0000000000000001","buckets":[1],""" +
+        """"n_buckets":8,"config":"v1"}""")
+    Commit.write(f, new org.apache.hadoop.fs.Path(s"$out/_incr/manifests_invalidated.json"), "{}")
+    val e = intercept[IllegalArgumentException] {
+      KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
+    }
+    assert(e.getMessage.contains("marker.json") && e.getMessage.contains("'day_partition'"),
+      e.getMessage)
+  }
+
   test("an empty ledger, identical in every release, stays valid and records a v2 token") {
     val (dir, model) = staged
     val out = s"$dir/g_empty_ledger"

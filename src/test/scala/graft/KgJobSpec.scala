@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{GraphSink, KgPipeline, NerTraining, Transcripts}
+import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining, Transcripts}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,7 +35,12 @@ class KgJobSpec extends AnyFunSuite {
       .write.parquet(input)
     NerTraining.save(NerTraining.trainModel(Transcripts.trainSplit(labeled)), spark, modelPath)
 
+    // a finished job holds nothing cached: in-process callers (tests,
+    // benches) would otherwise keep its tagged set and nodes alive
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
     val m1 = KgJob.run(spark, input, modelPath, output, buckets = 8)
+    assert(spark.sparkContext.getPersistentRDDs.size <= persistedBefore,
+      s"KgJob.run left ${spark.sparkContext.getPersistentRDDs.size - persistedBefore} RDD(s) cached")
     assert(m1.turns > 0 && m1.triples > 0 && m1.entities > 0 && m1.edges > 0)
     assert(m1.bucketsWritten > 0 && m1.bucketsSkipped == 0)
 
@@ -79,6 +84,29 @@ class KgJobSpec extends AnyFunSuite {
       KgJob.run(spark, input, modelPath, output, buckets = 4)
     }
     assert(e.getMessage.contains("n_buckets"), e.getMessage)
+
+    // the committed layout is read strictly: a manifest without n_buckets
+    // (written before the layout was recorded) or with another config is
+    // refused on resume, never defaulted
+    val manifests = GraphSink.doneBuckets(spark, output).toSeq
+      .map(b => new org.apache.hadoop.fs.Path(s"$output/_manifests/bucket-$b.json"))
+    def rewriteManifests(from: String, to: String): Unit = manifests.foreach { p =>
+      val json = Commit.read(fs, p)
+      assert(json.contains(from), json)
+      fs.delete(p, false)
+      Commit.write(fs, p, json.replace(from, to))
+    }
+    rewriteManifests(""","n_buckets":8""", "")
+    val eOld = intercept[IllegalArgumentException] {
+      KgJob.run(spark, input, modelPath, output, buckets = 8)
+    }
+    assert(eOld.getMessage.contains("'n_buckets'") && eOld.getMessage.contains("fresh output"),
+      eOld.getMessage)
+    rewriteManifests(""""config":"v1"""", """"config":"v2","n_buckets":8""")
+    val eCfg = intercept[IllegalArgumentException] {
+      KgJob.run(spark, input, modelPath, output, buckets = 8)
+    }
+    assert(eCfg.getMessage.contains("'config'"), eCfg.getMessage)
 
     // day-partitioned job run to a fresh output: same triples, day dirs
     // under every bucket, layout recorded for the resume guard. A

@@ -5,8 +5,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The durable-commit module: write-temp-then-rename semantics, crash
-  * leftovers, read-back, directory swaps — and a source guard that keeps
-  * it the ONLY place in the program that renames or builds temp paths.
+  * leftovers, read-back, directory swaps — and source guards that keep
+  * it the ONLY place in the program that renames or builds temp paths,
+  * and keep [[Records]] the only reader of what it commits.
   */
 class CommitSpec extends AnyFunSuite {
 
@@ -58,18 +59,32 @@ class CommitSpec extends AnyFunSuite {
     assert(!f.exists(new Path(dst, "edges_new")), "the source must not land inside the destination")
   }
 
-  test("no program source outside Commit.scala renames or builds a .tmp path") {
+  /** `file:line: text` of every program source line outside `allowed`
+    * that contains one of `needles`.
+    */
+  private def sourceLines(allowed: Set[String], needles: String*): Seq[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    val offenders = for {
-      file <- walk(root) if file.getName.endsWith(".scala") && file.getName != "Commit.scala"
+    for {
+      file <- walk(root) if file.getName.endsWith(".scala") && !allowed(file.getName)
       src = scala.io.Source.fromFile(file, "UTF-8")
       (line, i) <- (try src.getLines().toList finally src.close()).zipWithIndex
-      if line.contains(".rename(") || line.contains(".tmp")
+      if needles.exists(line.contains)
     } yield s"${file.getPath}:${i + 1}: ${line.trim}"
+  }
+
+  test("no program source outside Commit.scala renames or builds a .tmp path") {
+    val offenders = sourceLines(Set("Commit.scala"), ".rename(", ".tmp")
     assert(offenders.isEmpty,
       s"commit protocol bypassed — route these through graft.pipeline.Commit:\n${offenders.mkString("\n")}")
+  }
+
+  test("no program source outside Records.scala and Commit.scala reads a durable file") {
+    val offenders = sourceLines(Set("Records.scala", "Commit.scala"),
+      "Commit.read(", "FileSystem.get(", ".open(")
+    assert(offenders.isEmpty,
+      s"record format bypassed — read through graft.pipeline.Records:\n${offenders.mkString("\n")}")
   }
 }

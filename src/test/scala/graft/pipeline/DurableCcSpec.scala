@@ -107,4 +107,24 @@ class DurableCcSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("different"))
   }
+
+  test("a committed marker with a missing field fails loudly, naming the file") {
+    val (nodes, edges) = chainGraph()
+    val dir = Files.createTempDirectory("cc_spec_").toString
+    intercept[RuntimeException] {
+      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir, failAfterIters = 2)
+    }
+    // a marker without its node-set fingerprint: skipping it would also
+    // skip the node-set guard and restart or resume unchecked
+    val f = Commit.fs(spark, dir)
+    val marker = new org.apache.hadoop.fs.Path(s"$dir/iter-2.done.json")
+    val json = Commit.read(f, marker)
+    f.delete(marker, false)
+    Commit.write(f, marker, json.replaceAll(",\"nodes_fp\":-?\\d+", ""))
+    val e = intercept[IllegalArgumentException] {
+      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+    }
+    assert(e.getMessage.contains("iter-2.done.json") && e.getMessage.contains("nodes_fp"),
+      e.getMessage)
+  }
 }

@@ -165,4 +165,28 @@ class GraphSinkCrashSpec extends AnyFunSuite {
     val m2 = GraphSink.writeTriples(spark, triples, dir, 8)
     assert(m2.buckets == 0 && m2.skippedBuckets == 8 && m2.rows == 0L)
   }
+
+  test("a write that reports no metrics commits zero only when no uncommitted bucket dir exists") {
+    val base = java.nio.file.Files.createTempDirectory("graft_sink_obs")
+    val triplesDir = new org.apache.hadoop.fs.Path(base.resolve("triples").toUri)
+    val f = triplesDir.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    // nothing written at all, then only committed buckets on disk
+    assert(GraphSink.observedWrite(Map.empty, f, triplesDir, Set.empty) == ((0L, 0L, Set.empty[Int])))
+    f.mkdirs(new org.apache.hadoop.fs.Path(triplesDir, "conv_bucket=1"))
+    assert(GraphSink.observedWrite(Map.empty, f, triplesDir, Set(1)) == ((0L, 0L, Set.empty[Int])))
+    // an uncommitted bucket dir holds data this write may have produced
+    f.mkdirs(new org.apache.hadoop.fs.Path(triplesDir, "conv_bucket=2"))
+    val e = intercept[IllegalArgumentException] {
+      GraphSink.observedWrite(Map.empty, f, triplesDir, Set(1))
+    }
+    assert(e.getMessage.contains("conv_bucket=2"), e.getMessage)
+    // a reported metric is used as is; a missing or mistyped one throws
+    val good = Map[String, Any]("rows" -> 5L, "convs" -> 2L, "written_buckets" -> Seq(1, 2))
+    assert(GraphSink.observedWrite(good, f, triplesDir, Set.empty) == ((5L, 2L, Set(1, 2))))
+    intercept[RuntimeException](GraphSink.observedWrite(good - "convs", f, triplesDir, Set.empty))
+    intercept[RuntimeException](GraphSink.observedWrite(good + ("rows" -> 5), f, triplesDir, Set.empty))
+    intercept[RuntimeException] {
+      GraphSink.observedWrite(good + ("written_buckets" -> Seq("1")), f, triplesDir, Set.empty)
+    }
+  }
 }
