@@ -60,8 +60,7 @@ object Kg {
     val model = NerTraining.trainModel(Transcripts.trainSplit(labeled))
     val bc = spark.sparkContext.broadcast(model)
     // derive turns from the cached labeled set: one generation pass total
-    val turns = labeled.map(r =>
-      graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+    val turns = LabeledRow.turns(labeled)
     val out = KgPipeline.run(spark, turns, bc)
     out.resolvedTriples.cache()
     // mentions is DERIVED (explode over the cached tagged set) — ~8
@@ -93,10 +92,8 @@ object Kg {
     */
   def roleModel(spark: SparkSession, sfDir: String): graft.semantics.DictModel =
     roleModelCache.getOrElseUpdate(sfDir, {
-      import spark.implicits._
       val b = built(spark, sfDir)
-      val turns = b.labeled.map(r =>
-        graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+      val turns = LabeledRow.turns(b.labeled)
       pipeline.ClassifyStage.train(turns)
     })
 
@@ -105,13 +102,11 @@ object Kg {
     */
   def roleScored(spark: SparkSession, sfDir: String): DataFrame =
     roleCache.getOrElseUpdate(sfDir, {
-      import spark.implicits._
       val b = built(spark, sfDir)
       // derive turns from the ALREADY-CACHED labeled set — r1 regenerated
       // the whole corpus here (three extra generation passes: train term
       // agg, doc counts, score), which dominated kg_role_accuracy's 14.6 s
-      val turns = b.labeled.map(r =>
-        graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+      val turns = LabeledRow.turns(b.labeled)
       pipeline.ClassifyStage.score(turns, roleModel(spark, sfDir),
         graft.semantics.BayesScorer).cache()
     })

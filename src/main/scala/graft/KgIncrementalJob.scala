@@ -2,7 +2,7 @@ package graft
 
 import graft.corpus.Turn
 import graft.obs.PhaseRecorder
-import graft.pipeline.Records.{IncrMarker, Layout}
+import graft.pipeline.Records.IncrMarker
 import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
@@ -31,25 +31,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   5. entities and link state are alias-scale — rewritten outright.
   *
   * Crash safety follows the repo's one protocol (stage → commit marker
-  * → mutate → swap, all through `pipeline.Commit`), with every read the
-  * tail needs staged under `<output>/_incr/` BEFORE the first
-  * live-directory mutation:
+  * → roll forward, all through `pipeline.Commit`). Everything the live
+  * mutation needs is staged under `<output>/_incr/` first:
   *
-  *   marker.json                intent: batch token, bucket set, layout
-  *   linkstate_new/             staged merged nodes+labels (committed)
-  *   edges_new/ (+.done.json)   staged delta-merged edge table
-  *   old_raw/                   snapshot of the affected buckets' rows
-  *   manifests_invalidated.json live mutation begins (manifests gone)
-  *   triples.done.json          affected buckets rewritten + manifested
+  *   linkstate_new/   merged nodes+labels (its own `_committed.json`)
+  *   edges_new/       delta-merged edge table
+  *   rewrite/         the affected buckets' rows, resolved against the new map
+  *   marker.json      THE commit point: batch token, bucket set, layout
   *
-  * A killed run resumes: before `manifests_invalidated` nothing was
-  * mutated (stale staging is discarded); between it and `triples.done`
-  * only the SAME batch may resume (enforced by token) and rebuilds the
-  * rewrite from the snapshot — never from the half-mutated table;
-  * after `triples.done` any invocation first finishes the tail
-  * (entities/edges/link-state swaps are idempotent). The link-state
-  * ledger records every applied batch token, so re-applying a batch
-  * (which would double its counts) refuses loudly.
+  * Without a marker nothing live was mutated, and staging is discarded.
+  * With one, any invocation first rolls the committed apply forward from
+  * staging alone (invalidate the bucket set's manifests, rewrite those
+  * buckets from `rewrite/`, swap entities/edges/link state: every step
+  * idempotent, no model load or re-tag), then applies its own batch. The
+  * link-state ledger records every applied batch token, so re-applying a
+  * batch (which would double its counts) refuses loudly.
   */
 object KgIncrementalJob {
 
@@ -82,22 +78,9 @@ object KgIncrementalJob {
 
   // ------------------------------------------------------------- helpers
 
-  /** Write-once: a marker that already exists is left alone (resume paths
-    * re-traverse commit points; delete-then-rename would open a window
-    * where `manifests_invalidated` is absent while the table IS mutated,
-    * and the next invocation would mistake that for untouched state).
-    */
-  private def writeMarker(f: FileSystem, path: String, json: String): Unit =
-    if (!f.exists(new Path(path))) Commit.write(f, new Path(path), json)
-
-  private def deleteManifests(f: FileSystem, output: String, buckets: Seq[Int]): Unit =
-    for (b <- buckets) f.delete(new Path(s"$output/_manifests/bucket-$b.json"), false)
-
   /** Batch identity: order-independent content fingerprint of the input
     * turns. Stable across re-invocations of the same batch, different
-    * for any other batch — the key for both mid-write resume (only the
-    * same batch may continue an interrupted rewrite) and the
-    * exactly-once ledger.
+    * for any other batch — the key of the exactly-once ledger.
     *
     * The token carries its format version ([[TokenFormat]]): a token
     * computed by another formula can never equal the current one, so a
@@ -108,8 +91,7 @@ object KgIncrementalJob {
   private def batchToken(turns: DataFrame): (Long, String) = {
     // every tagging-relevant Turn field participates (ADVICE r5): two
     // batches differing only in ts/role/tool must not collide — a
-    // collision wrongly refuses the second as already-applied, and the
-    // mid-write resume check could miss drifted input
+    // collision wrongly refuses the second as already-applied
     val r = turns.agg(count(lit(1)).as("n"),
       expr("bit_xor(xxhash64(conv_id, turn_idx, role, text, tool, ts))").as("fp")).first()
     val n = r.getLong(0)
@@ -121,7 +103,8 @@ object KgIncrementalJob {
 
   /** `failAfter` is a crash-injection hook for the resume specs: throw
     * AFTER the named phase commits ("staged" | "invalidated" |
-    * "triples"). Production callers leave it None.
+    * "triples"), in whichever apply the run is rolling forward.
+    * Production callers leave it None.
     */
   def run(spark: SparkSession, output: String, input: String, modelPath: String,
       failAfter: Option[String] = None): IncrMetrics = {
@@ -137,10 +120,27 @@ object KgIncrementalJob {
       if (failAfter.contains(phase))
         throw new RuntimeException(s"[test hook] injected crash after phase '$phase'")
 
+    /** Everything after the marker, from staging alone and idempotent, so
+      * any later invocation can finish an interrupted apply: a rewritten
+      * bucket is replaced whole, and the swaps skip what already moved. */
+    def rollForward(marker: IncrMarker): (GraphSink.WriteMetrics, Long, Long) = {
+      // staged link state is either committed or already swapped in
+      require(!exists(s"$incr/linkstate_new") || exists(s"$incr/linkstate_new/_committed.json"),
+        s"$incr/linkstate_new lost its commit marker — staging is torn; restore the output " +
+          "from backup or re-run the full KgJob")
+      GraphSink.invalidateBuckets(spark, output, marker.buckets)
+      crashPoint("invalidated")
+      val wm = GraphSink.writeTriples(spark, spark.read.parquet(s"$incr/rewrite"), output,
+        marker.layout.nBuckets, marker.layout.dayPartition)
+      crashPoint("triples")
+      val (nEntities, nEdges) = finishTail(spark, f, output)
+      (wm, nEntities, nEdges)
+    }
+
     val turns = spark.read.parquet(input).as[Turn]
     val (nTurns, token) = batchToken(turns.toDF())
 
-    // ---- recovery: an _incr staging area from a previous invocation
+    // ---- recovery: a committed apply is finished before this batch starts
     if (exists(s"$incr/marker.json")) {
       val marker = IncrMarker.read(f, new Path(s"$incr/marker.json"))
       require(marker.token.startsWith(TokenFormat),
@@ -148,40 +148,14 @@ object KgIncrementalJob {
           "token format: it cannot be compared with the current input's token. Finish the " +
           "interrupted run with the release that started it, then rebuild the output with " +
           "the full graft.KgJob over every batch applied so far")
-      if (!exists(s"$incr/manifests_invalidated.json")) {
-        // intent was staged but nothing live was mutated — prior state
-        // is fully intact; discard and start over
-        System.err.println(s"[kgincr] discarding stale staging for batch ${marker.token} (nothing was mutated)")
-        f.delete(new Path(incr), true)
-      } else if (exists(s"$incr/triples.done.json")) {
-        System.err.println(s"[kgincr] finishing the committed tail of interrupted batch ${marker.token}")
-        finishTail(spark, f, output)
-        // fall through: the current batch then applies normally (the
-        // ledger rejects it if it IS the one just finished)
-      } else {
-        // manifests are gone and the rewrite is incomplete: the triples
-        // table is mid-mutation. Only the SAME batch may rebuild it —
-        // its staged snapshot + link state carry everything needed.
-        require(token == marker.token,
-          s"output $output holds an INCOMPLETE incremental run of batch ${marker.token} (manifests " +
-            s"invalidated, rewrite unfinished) but the current input is batch $token — re-run " +
-            "with the original batch's input to complete it before applying a new batch")
-        System.err.println(s"[kgincr] resuming interrupted rewrite of batch ${marker.token}")
-        val staged = GraphSink.readLinkState(spark, s"$incr/linkstate_new").getOrElse(
-          sys.error(s"$incr/linkstate_new lost its commit marker — staging is torn; " +
-            "restore the output from backup or re-run the full KgJob"))
-        val canonNew = KgPipeline.canonicalize(staged.nodes, staged.labels)
-        val model = spark.sparkContext.broadcast(NerTraining.load(spark, modelPath))
-        val newRaw = KgPipeline.tripleRows(KgPipeline.tagTurns(turns, model)).select(RAW.map(col): _*)
-        val combined = spark.read.parquet(s"$incr/old_raw").select(RAW.map(col): _*)
-          .unionByName(newRaw)
-        val (wm, nNewTriples) = writeTail(spark, f, output,
-          KgPipeline.resolveTriples(combined, canonNew), newRaw,
-          marker.layout, marker.buckets, crashPoint)
-        val (nEntities, nEdges) = finishTail(spark, f, output)
-        return IncrMetrics(nTurns, nNewTriples, -1L, wm.buckets, wm.skippedBuckets,
-          nEntities, nEdges)
-      }
+      require(exists(s"$incr/rewrite"),
+        s"$incr/marker.json commits batch ${marker.token} but $incr/rewrite does not exist: an " +
+          "earlier release staged this apply. Finish the interrupted run with the release that " +
+          "started it, or restore the output and rebuild it with the full graft.KgJob")
+      System.err.println(s"[kgincr] rolling the committed apply of batch ${marker.token} forward")
+      rollForward(marker)
+      // the current batch then applies normally; the ledger refuses it
+      // if it IS the one just finished
     }
 
     // ---- fresh path
@@ -257,31 +231,31 @@ object KgIncrementalJob {
       .distinct().as[Int].collect().toSeq.sorted
     phase("bucket_select")
 
-    // snapshot the affected buckets' rows BEFORE any mutation: the
-    // rewrite and any resume read this copy, never the live table
-    oldTriples.where($"conv_bucket".isin(bucketsB: _*)).select(RAW.map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(s"$incr/old_raw")
-    val snapshot = spark.read.parquet(s"$incr/old_raw").select(RAW.map(col): _*)
+    // the affected buckets' rows come from the live table: nothing live
+    // changes before the marker
+    val affected = oldTriples.where($"conv_bucket".isin(bucketsB: _*)).select(RAW.map(col): _*)
     // conv-disjointness guard — complete, because an overlapping conv's
-    // bucket is in B by construction, so its old rows are in the snapshot
-    val overlap = snapshot.select($"conv_id")
+    // bucket is in B by construction, so its old rows are in `affected`
+    val overlap = affected.select($"conv_id")
       .join(turns.toDF().select($"conv_id"), Seq("conv_id"), "left_semi")
       .distinct().count()
     require(overlap == 0,
       s"$overlap conversation(s) of the new batch already exist in $output — incremental " +
         "batches must be conversation-disjoint from the corpus already applied")
-    phase("snapshot_guard")
+    // stage the bucket rewrite: every row the affected buckets will hold,
+    // resolved against the new map. It feeds BOTH the added-edges term and
+    // the rewrite, and lets a recovery roll forward without re-tagging
+    KgPipeline.resolveTriples(affected.unionByName(newRaw), canonNew)
+      .write.mode(SaveMode.Overwrite).parquet(s"$incr/rewrite")
+    val rewrite = spark.read.parquet(s"$incr/rewrite")
+    phase("guard_stage_rewrite")
 
-    // delta-merged edges, staged (reads prior edges BEFORE any mutation).
-    // The combined rows' resolution feeds BOTH the added-edges term and
-    // the bucket rewrite — resolve once, cache (affected-bucket-sized)
-    val combined = snapshot.unionByName(newRaw)
-    val resolvedCombined = KgPipeline.resolveTriples(combined, canonNew).cache()
+    // delta-merged edges, staged (reads prior edges BEFORE any mutation)
     val oldE = spark.read.parquet(s"$output/edges")
       .select($"src", $"dst", $"pred", $"weight".as("w_old"))
-    val removed = KgPipeline.edgesTable(KgPipeline.resolveTriples(snapshot, canonOld))
+    val removed = KgPipeline.edgesTable(KgPipeline.resolveTriples(affected, canonOld))
       .select($"src", $"dst", $"pred", $"weight".as("w_rm"))
-    val added = KgPipeline.edgesTable(resolvedCombined)
+    val added = KgPipeline.edgesTable(rewrite)
       .select($"src", $"dst", $"pred", $"weight".as("w_add"))
     oldE.join(removed, Seq("src", "dst", "pred"), "full_outer")
       .join(added, Seq("src", "dst", "pred"), "full_outer")
@@ -290,49 +264,26 @@ object KgIncrementalJob {
           + coalesce($"w_add", lit(0.0))).as("weight"))
       .where($"weight" > 0)
       .write.mode(SaveMode.Overwrite).partitionBy("pred").parquet(s"$incr/edges_new")
-    writeMarker(f, s"$incr/edges_new.done.json", "{}")
+    val nNewTriples = newRaw.count()
+    tagged.unpersist(); changed.unpersist(); canonNew.unpersist()
     phase("edges_delta")
 
-    // commit the intent: token + bucket set + layout (the resume path
+    // commit the intent: token + bucket set + layout (the roll-forward
     // must not depend on re-reading manifests it is about to delete)
-    writeMarker(f, s"$incr/marker.json", IncrMarker(token, bucketsB, layout).json)
+    val marker = IncrMarker(token, bucketsB, layout)
+    Commit.write(f, new Path(s"$incr/marker.json"), marker.json)
     crashPoint("staged")
-
-    val (wm, nNewTriples) = writeTail(spark, f, output, resolvedCombined, newRaw,
-      layout, bucketsB, crashPoint)
-    phase("rewrite_triples")
-    tagged.unpersist(); changed.unpersist(); resolvedCombined.unpersist()
-    val (nEntities, nEdges) = finishTail(spark, f, output)
-    canonNew.unpersist()
-    phase("tail_swap")
+    val (wm, nEntities, nEdges) = rollForward(marker)
+    phase("roll_forward")
     IncrMetrics(nTurns, nNewTriples, nChanged, wm.buckets, wm.skippedBuckets,
       nEntities, nEdges)
   }
 
-  /** The live triples mutation: invalidate affected manifests, rewrite
-    * exactly those buckets from the combined (snapshot + new) rows, and
-    * commit `triples.done`. Idempotent under same-batch re-invocation —
-    * manifest deletion re-runs, and GraphSink skips whatever buckets a
-    * previous attempt already committed.
-    */
-  private def writeTail(spark: SparkSession, f: FileSystem, output: String,
-      resolved: DataFrame, newRaw: DataFrame,
-      layout: Layout, bucketsB: Seq[Int],
-      crashPoint: String => Unit): (GraphSink.WriteMetrics, Long) = {
-    val incr = s"$output/_incr"
-    writeMarker(f, s"$incr/manifests_invalidated.json", "{}")
-    deleteManifests(f, output, bucketsB)
-    crashPoint("invalidated")
-    val wm = GraphSink.writeTriples(spark, resolved, output, layout.nBuckets, layout.dayPartition)
-    writeMarker(f, s"$incr/triples.done.json", "{}")
-    crashPoint("triples")
-    (wm, newRaw.count())
-  }
-
-  /** Everything after `triples.done`: idempotent overwrites + swaps, so
-    * ANY later invocation can finish an interrupted tail. Entities are
-    * rebuilt from whichever committed link state survives (staged if
-    * the swap hasn't happened, live if it has).
+  /** The swaps after the triples rewrite: idempotent overwrites + swaps.
+    * Entities are rebuilt from whichever committed link state survives
+    * (staged if the swap hasn't happened, live if it has). The marker is
+    * deleted before the rest of the staging, so a crash mid-cleanup
+    * reads as "no marker" and the leftovers are discarded.
     */
   private def finishTail(spark: SparkSession, f: FileSystem, output: String): (Long, Long) = {
     val incr = s"$output/_incr"
@@ -342,10 +293,11 @@ object KgIncrementalJob {
       .getOrElse(sys.error(s"no committed link state under $incr/linkstate_new or " +
         s"$output/_linkstate — the output is torn; restore from backup or re-run the full job"))
     GraphSink.writeEntities(KgPipeline.entitiesTable(state.nodes, state.labels), output)
-    if (exists(s"$incr/edges_new.done.json") && exists(s"$incr/edges_new"))
+    if (exists(s"$incr/edges_new"))
       Commit.swapDir(f, new Path(s"$incr/edges_new"), new Path(s"$output/edges"))
     if (exists(s"$incr/linkstate_new/_committed.json"))
       Commit.swapDir(f, new Path(s"$incr/linkstate_new"), new Path(s"$output/_linkstate"))
+    f.delete(new Path(s"$incr/marker.json"), false)
     f.delete(new Path(incr), true)
     // every live dir this method mutates in place: drop the cached file
     // listings (the global FileStatusCache has no TTL)

@@ -2,6 +2,7 @@ package graft
 
 import graft.corpus.Turn
 import graft.obs.PhaseRecorder
+import graft.pipeline.Records.Layout
 import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining}
 import org.apache.spark.sql.SparkSession
 
@@ -64,6 +65,8 @@ object KgJob {
   def run(spark: SparkSession, input: String, modelPath: String, output: String,
       buckets: Int = 16, dayPartition: Boolean = false): JobMetrics = {
     import spark.implicits._
+    // an incompatible resume is refused before the model load and tagging
+    GraphSink.resumableBuckets(spark, output, Layout(buckets, dayPartition))
     val phase = new PhaseRecorder("kgjob")
     val turns = spark.read.parquet(input).as[Turn]
     val model = spark.sparkContext.broadcast(NerTraining.load(spark, modelPath))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{KgPipeline, NerTraining, Transcripts}
+import graft.pipeline.{KgPipeline, LabeledRow, NerTraining, Transcripts}
 import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths}
@@ -55,8 +55,7 @@ object ScalingBench {
       val labeled = Transcripts.generateLabeled(spark, nConvs).cache()
       val nTurns = labeled.count()
       val model = NerTraining.trainAndBroadcast(spark, Transcripts.trainSplit(labeled))
-      val turns = labeled.map(r =>
-        graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+      val turns = LabeledRow.turns(labeled)
       // pre-partition ONCE per level, OUTSIDE the timer: the exchange's
       // map side runs at the executor's full thread count at BOTH levels
       // in this local proxy (on a real cluster it scales with executors),
@@ -189,7 +188,7 @@ object ScalingBench {
       val convs = jobConvs(multiplier)
       val labeled = Transcripts.generateLabeled(spark, convs).cache()
       val n = labeled.count()
-      labeled.map(r => graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+      LabeledRow.turns(labeled)
         .write.mode("overwrite").parquet(s"$workDir/input")
       val model = NerTraining.trainModel(Transcripts.trainSplit(labeled))
       NerTraining.save(model, spark, s"$workDir/model")

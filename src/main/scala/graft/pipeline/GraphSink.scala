@@ -31,8 +31,8 @@ object GraphSink {
   /** THE day definition — UTC epoch-day arithmetic, never `to_date(ts)`:
     * to_date applies spark.sql.session.timeZone, so the same row could
     * land in different days under different session TZs. One shared
-    * expression keeps the physical partition layout, the metrics rollup,
-    * and every day-keyed query in agreement by construction (VERDICT r4
+    * expression keeps the physical partition layout and every day-keyed
+    * query in agreement by construction (VERDICT r4
     * "what's wrong" #3 / ADVICE r4: two day definitions coexisted).
     */
   def utcDay(ts: Column): Column =
@@ -43,23 +43,60 @@ object GraphSink {
     resolvedTriples.withColumn("conv_bucket",
       pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int"))
 
+  /** The buckets whose manifest is committed. */
   def doneBuckets(spark: SparkSession, outDir: String): Set[Int] =
-    bucketManifests(spark, outDir)
-      .map(_.getName.stripPrefix("bucket-").stripSuffix(".json").toInt).toSet
+    committed(spark, outDir).map(_.bucket).toSet
 
-  private def bucketManifests(spark: SparkSession, outDir: String): Seq[Path] = {
-    val dir = new Path(s"$outDir/_manifests")
-    val f = Commit.fs(spark, outDir)
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
+  /** The layout of a committed table; None when no bucket manifest has
+    * been committed. */
+  def committedLayout(spark: SparkSession, outDir: String): Option[Layout] =
+    committed(spark, outDir).headOption.map(_.layout)
+
+  /** The buckets a write under `layout` may skip. A resume under another
+    * layout would mix partition functions or directory depths (readers
+    * then fail on conflicting structures), so it is refused here — before
+    * a caller does any work. */
+  def resumableBuckets(spark: SparkSession, outDir: String, layout: Layout): Set[Int] = {
+    val ms = committed(spark, outDir)
+    for (c <- ms.headOption.map(_.layout))
+      require(c == layout, s"resume with n_buckets=${layout.nBuckets}, day_partition=" +
+        s"${layout.dayPartition} against $outDir, committed with n_buckets=${c.nBuckets}, " +
+        s"day_partition=${c.dayPartition}: the bucket ids or partition depths are " +
+        "incompatible — keep the original layout or use a fresh output directory")
+    ms.map(_.bucket).toSet
   }
 
-  /** The layout of a committed table, read from one of its bucket
-    * manifests; None when no bucket manifest has been committed. */
-  def committedLayout(spark: SparkSession, outDir: String): Option[Layout] =
-    bucketManifests(spark, outDir).headOption
-      .map(p => BucketManifest.read(Commit.fs(spark, outDir), p).layout)
+  /** Withdraws the commit of `buckets`: their manifests are deleted, so the
+    * next write treats them as pending and replaces their directories. */
+  def invalidateBuckets(spark: SparkSession, outDir: String, buckets: Seq[Int]): Unit = {
+    val f = Commit.fs(spark, outDir)
+    for (b <- buckets) f.delete(manifestPath(outDir, b), false)
+  }
+
+  private def manifestPath(outDir: String, bucket: Int) =
+    new Path(s"$outDir/_manifests/bucket-$bucket.json")
+
+  /** Every committed bucket manifest, each parsed by the strict reader.
+    * A manifest that fails to parse, names another bucket than its file,
+    * or records another layout than the rest is refused, naming the file. */
+  private def committed(spark: SparkSession, outDir: String): Seq[BucketManifest] = {
+    val dir = new Path(s"$outDir/_manifests")
+    val f = Commit.fs(spark, outDir)
+    val files =
+      if (!f.exists(dir)) Nil
+      else f.listStatus(dir).toSeq.map(_.getPath)
+        .filter(p => p.getName.startsWith("bucket-") && p.getName.endsWith(".json"))
+    val ms = files.map { p =>
+      val m = BucketManifest.read(f, p)
+      require(p.getName == s"bucket-${m.bucket}.json",
+        s"$p records bucket ${m.bucket} — rebuild the graph into a fresh output with graft.KgJob")
+      p -> m
+    }
+    for ((p0, m0) <- ms.headOption; (p, m) <- ms.find(_._2.layout != m0.layout))
+      throw new IllegalArgumentException(s"$p records layout ${m.layout} but $p0 records " +
+        s"${m0.layout} — rebuild the graph into a fresh output with graft.KgJob")
+    ms.map(_._2)
+  }
 
   /** Write triples for all buckets not yet committed; returns metrics
     * observed on the actual write pass (`Observation` — executor→driver
@@ -80,14 +117,7 @@ object GraphSink {
       nBuckets: Int = 16,
       dayPartition: Boolean = false): WriteMetrics = {
     val layout = Layout(nBuckets, dayPartition)
-    val done = doneBuckets(spark, outDir)
-    // a resume under another layout would mix partition functions or
-    // directory depths (readers then fail on conflicting structures)
-    for (c <- committedLayout(spark, outDir))
-      require(c == layout, s"resume with n_buckets=$nBuckets, day_partition=$dayPartition " +
-        s"against $outDir, committed with n_buckets=${c.nBuckets}, day_partition=" +
-        s"${c.dayPartition}: the bucket ids or partition depths are incompatible — keep the " +
-        "original layout or use a fresh output directory")
+    val done = resumableBuckets(spark, outDir, layout)
     val f = Commit.fs(spark, outDir)
     // whole-bucket replace on resume (ADVICE r4): dynamic overwrite only
     // replaces the LEAF partitions present in the resumed data. Under the
@@ -179,7 +209,7 @@ object GraphSink {
       // fails loudly rather than leave the bucket data committed but
       // unmanifested (the resume protocol would then re-process it —
       // idempotent, but the failure must surface)
-      Commit.write(f, new Path(s"$outDir/_manifests/bucket-${m.bucket}.json"), m.json)
+      Commit.write(f, manifestPath(outDir, m.bucket), m.json)
     }
     WriteMetrics(perBucket.length, done.size, rows, convs)
   }
@@ -278,25 +308,6 @@ object GraphSink {
     edges.repartition(col("pred")).write.mode(SaveMode.Overwrite)
       .partitionBy("pred")
       .parquet(s"$outDir/edges")
-
-  /** Metrics rollup over the materialized graph: triple counts by
-    * (day, pred) with subtotals (SURVEY.md §2 rows 57–58). When the
-    * table was written with dayPartition the PHYSICAL `day` partition
-    * column is used directly (it already holds the utcDay split, and
-    * grouping on the partition column costs no per-row derivation);
-    * otherwise the same shared utcDay expression derives it — either
-    * way the rollup's day agrees with the layout's under any session TZ.
-    */
-  def metricsRollup(spark: SparkSession, outDir: String): DataFrame = {
-    val triples = spark.read.parquet(s"$outDir/triples")
-    val withDay =
-      if (triples.columns.contains("day")) triples
-      else triples.withColumn("day", utcDay(col("ts")))
-    withDay
-      .rollup(col("day"), col("pred"))
-      .agg(count(lit(1)).as("n_triples"),
-        approx_count_distinct(col("conv_id")).as("approx_convs"))
-  }
 
   /** Time-range read over the triples table. On a day-partitioned
     * layout the filter lands on the PARTITION column, so the scan

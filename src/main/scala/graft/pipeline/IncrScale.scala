@@ -70,8 +70,7 @@ object IncrScale {
     val b = graft.Kg.built(spark, sfDir)
     val base = java.nio.file.Files.createTempDirectory("incr_scale_").toString
     try {
-      val turns = b.labeled
-        .map(r => graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+      val turns = LabeledRow.turns(b.labeled)
       val slice = pmod(xxhash64(col("conv_id")), lit(batchMod))
       turns.where(slice >= nBatches).write.parquet(s"$base/prior")
       for (i <- 0 until nBatches)

@@ -53,12 +53,18 @@ object KgPipeline {
     ordered.mapPartitions { it =>
       val m = model.value
       it.map { case (convId, turnIdx, role, text, tool, ts, turnOrd) =>
-        val mentions = NerModel.tag(text, m)
-        val triples = TripleAssembler.assemble(convId, turnIdx, role, text, tool, mentions)
-        TaggedRow(convId, turnIdx, turnOrd, role, tool, ts,
-          mentions.map(MentionRow.of).toSeq, triples.map(TripleRow.of).toSeq)
+        tagTurn(m, Turn(convId, turnIdx, role, text, tool, ts), turnOrd)
       }
     }
+  }
+
+  /** One turn through the NER tagger and triple assembler — the one
+    * tagging step of batch and stream, so both emit the same rows. */
+  def tagTurn(m: NerModel, t: Turn, turnOrd: Int): TaggedRow = {
+    val mentions = NerModel.tag(t.text, m)
+    val triples = TripleAssembler.assemble(t.conv_id, t.turn_idx, t.role, t.text, t.tool, mentions)
+    TaggedRow(t.conv_id, t.turn_idx, turnOrd, t.role, t.tool, t.ts,
+      mentions.map(MentionRow.of).toSeq, triples.map(TripleRow.of).toSeq)
   }
 
   /** One row per mention: (conv_id, turn_idx, start, end, value, tag,

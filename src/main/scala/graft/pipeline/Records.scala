@@ -55,7 +55,7 @@ object Records {
       r.bool("converged"), r.long("nodes"), r.long("nodes_fp"))
   }
 
-  /** `<output>/_incr/marker.json`: an incremental run's committed intent. */
+  /** `<output>/_incr/marker.json`: the one commit point of an incremental apply. */
   final case class IncrMarker(token: String, buckets: Seq[Int], layout: Layout) {
     def json: String = s"""{"token":${quote(token)},"buckets":[${buckets.mkString(",")}],""" +
       s""""n_buckets":${layout.nBuckets},"config":"$Config","day_partition":${layout.dayPartition}}"""

@@ -1,6 +1,8 @@
 package graft.pipeline
 
+import graft.corpus.Turn
 import graft.semantics.{Mention, Triple}
+import org.apache.spark.sql.Dataset
 
 /** Typed Dataset row shapes for the KG pipeline (SURVEY.md §1.1 D3, D13,
   * D14). Kept flat & product-encodable so every stage stays inside
@@ -23,6 +25,15 @@ object TripleRow {
 final case class LabeledRow(
     conv_id: String, turn_idx: Int, role: String, text: String,
     tool: String, ts: java.sql.Timestamp, gold: Seq[MentionRow])
+
+object LabeledRow {
+  /** The labeled corpus without its labels: the turns the jobs read. */
+  def turns(labeled: Dataset[LabeledRow]): Dataset[Turn] = {
+    val spark = labeled.sparkSession
+    import spark.implicits._
+    labeled.map(r => Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+  }
+}
 
 /** Output of the NER/triple mapPartitions stage. */
 final case class TaggedRow(

@@ -23,8 +23,7 @@ object StreamJobScale {
     try {
       // deploy-shape staging (untimed): turn drops, persisted NER model,
       // published canonical map from the latest batch linking run
-      b.labeled
-        .map(r => graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+      graft.pipeline.LabeledRow.turns(b.labeled)
         .write.parquet(s"$base/drops/drop1")
       graft.pipeline.NerTraining.save(b.model, spark, s"$base/model")
       StreamingIngest.publishCanonMap(

@@ -2,8 +2,8 @@ package graft.streaming
 
 import graft.corpus.Turn
 import graft.pipeline.Records.{CanonVersion, StreamManifest}
-import graft.pipeline.{Commit, MentionRow, TaggedRow, TripleRow}
-import graft.semantics.{NerModel, TripleAssembler}
+import graft.pipeline.{Commit, KgPipeline, TaggedRow}
+import graft.semantics.NerModel
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
@@ -55,12 +55,7 @@ object StreamingIngest {
   /** The per-partition tagging closure shared by the streaming stages. */
   private def tagIter(model: Broadcast[NerModel])(it: Iterator[Turn]): Iterator[TaggedRow] = {
     val m = model.value
-    it.map { t =>
-      val mentions = NerModel.tag(t.text, m)
-      val triples = TripleAssembler.assemble(t.conv_id, t.turn_idx, t.role, t.text, t.tool, mentions)
-      TaggedRow(t.conv_id, t.turn_idx, 0, t.role, t.tool, t.ts,
-        mentions.map(MentionRow.of).toSeq, triples.map(TripleRow.of).toSeq)
-    }
+    it.map(KgPipeline.tagTurn(m, _, 0))
   }
 
   /** Tumbling windowed mention counts (watermarked aggregation). Takes

@@ -62,8 +62,7 @@ object DevCheck {
     val model = t("train")(graft.pipeline.NerTraining.trainModel(
       graft.pipeline.Transcripts.trainSplit(labeled)))
     val bc = spark.sparkContext.broadcast(model)
-    val turns = labeled.map(r =>
-      graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+    val turns = graft.pipeline.LabeledRow.turns(labeled)
     val tagged = graft.pipeline.KgPipeline.tagTurns(turns, bc).cache()
     t("tag+cache")(tagged.count())
     val out = t("link+resolve plan")(graft.pipeline.KgPipeline.runTagged(spark, tagged))

@@ -28,20 +28,22 @@ class KgIncrementalJobSpec extends AnyFunSuite {
   /** Inputs staged once for all tests: per-batch turn parquet + the
     * shared persisted model (one model serves every batch, the deploy
     * shape). Batches split by conv index: B = idx%8==0, C = idx%8==4,
-    * A = the rest; every union is conv-disjoint by construction.
+    * A = the rest, D = idx%8==2 (part of A), A2 = A without D; every
+    * union is conv-disjoint by construction.
     */
   private lazy val staged: (String, String) = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("kgincr").toString
     val labeled = Transcripts.generateLabeled(spark, N).cache()
-    val turns = labeled.map(r =>
-      graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+    val turns = graft.pipeline.LabeledRow.turns(labeled)
     val idx = expr("CAST(substring(conv_id, 2) AS BIGINT)")
     turns.where(pmod(idx, lit(8)) =!= 0 && pmod(idx, lit(8)) =!= 4)
       .write.parquet(s"$dir/in_a")
     turns.where(pmod(idx, lit(8)) === 0).write.parquet(s"$dir/in_b")
     turns.where(pmod(idx, lit(8)) === 4).write.parquet(s"$dir/in_c")
     turns.where(pmod(idx, lit(8)) =!= 4).write.parquet(s"$dir/in_ab")
+    turns.where(pmod(idx, lit(8)) === 2).write.parquet(s"$dir/in_d")
+    turns.where(!pmod(idx, lit(8)).isin(0, 2, 4)).write.parquet(s"$dir/in_a2")
     turns.write.parquet(s"$dir/in_abc")
     NerTraining.save(NerTraining.trainModel(Transcripts.trainSplit(labeled)),
       spark, s"$dir/model")
@@ -125,45 +127,46 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     assert(e.getMessage.contains("already applied"), e.getMessage)
   }
 
-  test("kill at every commit point; only the interrupted batch may resume a mid-write") {
+  test("kill at every commit point; the next run of any batch finishes the committed apply first") {
     val (dir, model) = staged
     val out = s"$dir/g2"
-    KgJob.run(spark, s"$dir/in_a", model, out, buckets = 8)
+    KgJob.run(spark, s"$dir/in_a2", model, out, buckets = 8)
+    def turnCount(batch: String): Long = spark.read.parquet(s"$dir/$batch").count()
+    def killedAfter(phase: String, batch: String): Unit = {
+      val e = intercept[RuntimeException] {
+        KgIncrementalJob.run(spark, out, s"$dir/$batch", model, failAfter = Some(phase))
+      }
+      assert(e.getMessage.contains(s"injected crash after phase '$phase'"), e.getMessage)
+    }
 
-    // crash AFTER staging (nothing live mutated): a different batch may
-    // proceed — the stale staging is discarded
-    intercept[RuntimeException] {
-      KgIncrementalJob.run(spark, out, s"$dir/in_b", model, failAfter = Some("staged"))
-    }
-    // crash mid-write (manifests invalidated, rewrite unfinished):
-    intercept[RuntimeException] {
-      KgIncrementalJob.run(spark, out, s"$dir/in_b", model, failAfter = Some("invalidated"))
-    }
-    // ... a DIFFERENT batch must now refuse ...
-    val eCross = intercept[IllegalArgumentException] {
-      KgIncrementalJob.run(spark, out, s"$dir/in_c", model)
-    }
-    assert(eCross.getMessage.contains("INCOMPLETE"), eCross.getMessage)
-    // ... and the ORIGINAL batch resumes from the snapshot and completes
-    val mB = KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
-    assert(mB.rewrittenBuckets > 0)
+    // kill after B's marker commits, before anything live is mutated
+    killedAfter("staged", "in_b")
+    // the next run rolls B forward and is killed mid-write: B's manifests
+    // are invalidated, its buckets not yet rewritten
+    killedAfter("invalidated", "in_c")
+    // a DIFFERENT batch completes the interrupted apply of B from its
+    // staging, then applies its own batch
+    val mC = KgIncrementalJob.run(spark, out, s"$dir/in_c", model)
+    assert(mC.newTurns == turnCount("in_c") && mC.changedSurfaces >= 0 && mC.rewrittenBuckets > 0,
+      s"C must apply as its own batch after B's roll-forward, got $mC")
 
-    // crash after triples committed but before the tail: the NEXT
-    // invocation first FINISHES the tail (entities/edges/link-state
-    // swaps), which publishes C into the applied ledger — so re-running
-    // C is then refused as already applied, proving the killed run's
-    // application completed exactly once
-    intercept[RuntimeException] {
-      KgIncrementalJob.run(spark, out, s"$dir/in_c", model, failAfter = Some("triples"))
+    // kill after D's triples commit, before the entities/edges/link-state
+    // swaps: re-running B finishes D's apply, then refuses B itself
+    killedAfter("triples", "in_d")
+    val eB = intercept[IllegalArgumentException] {
+      KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
     }
-    val eC = intercept[IllegalArgumentException] {
-      KgIncrementalJob.run(spark, out, s"$dir/in_c", model)
+    assert(eB.getMessage.contains("already applied"), eB.getMessage)
+    // ... which published D into the ledger exactly once
+    val eD = intercept[IllegalArgumentException] {
+      KgIncrementalJob.run(spark, out, s"$dir/in_d", model)
     }
-    assert(eC.getMessage.contains("already applied"), eC.getMessage)
+    assert(eD.getMessage.contains("already applied"), eD.getMessage)
+    assert(!new java.io.File(s"$out/_incr").exists(), "a finished apply leaves no staging")
 
     val want = s"$dir/g2_full"
     KgJob.run(spark, s"$dir/in_abc", model, want, buckets = 8)
-    assertGraphsEqual(out, want, "A+B+C after kills vs full")
+    assertGraphsEqual(out, want, "A2+B+C+D after kills vs full")
   }
 
   test("apply order commutes: A+C+B equals A+B+C equals full") {
@@ -215,6 +218,21 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     assert(!e.getMessage.contains("INCOMPLETE"), "must not blame a different batch")
   }
 
+  test("a marker without its staged rewrite, left by an earlier release, is refused") {
+    val (dir, model) = staged
+    val out = s"$dir/g_marker_no_rewrite"
+    // an earlier release crashed mid-rewrite: it staged no rewrite rows
+    val f = Commit.fs(spark, out)
+    val token = s"${KgIncrementalJob.TokenFormat}b1-0000000000000001"
+    Commit.write(f, new org.apache.hadoop.fs.Path(s"$out/_incr/marker.json"),
+      s"""{"token":"$token","buckets":[1],"n_buckets":8,"config":"v1","day_partition":false}""")
+    val e = intercept[IllegalArgumentException] {
+      KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
+    }
+    assert(e.getMessage.contains(token) && e.getMessage.contains("_incr/rewrite") &&
+      e.getMessage.contains("release that started it"), e.getMessage)
+  }
+
   test("a link-state marker without its applied-batch ledger is refused") {
     import spark.implicits._
     val (dir, model) = staged
@@ -241,7 +259,6 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     Commit.write(f, new org.apache.hadoop.fs.Path(s"$out/_incr/marker.json"),
       s"""{"token":"${KgIncrementalJob.TokenFormat}b1-0000000000000001","buckets":[1],""" +
         """"n_buckets":8,"config":"v1"}""")
-    Commit.write(f, new org.apache.hadoop.fs.Path(s"$out/_incr/manifests_invalidated.json"), "{}")
     val e = intercept[IllegalArgumentException] {
       KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
     }

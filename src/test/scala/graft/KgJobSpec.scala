@@ -31,7 +31,7 @@ class KgJobSpec extends AnyFunSuite {
 
     // stage inputs: turn table + persisted model (the deploy-time shape)
     val labeled = Transcripts.generateLabeled(spark, N).cache()
-    labeled.map(r => graft.corpus.Turn(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts))
+    graft.pipeline.LabeledRow.turns(labeled)
       .write.parquet(input)
     NerTraining.save(NerTraining.trainModel(Transcripts.trainSplit(labeled)), spark, modelPath)
 
@@ -77,13 +77,28 @@ class KgJobSpec extends AnyFunSuite {
       .map(_.toSeq).sortBy(_.toString)
     assert(after.sameElements(want), "resume changed the materialized table")
 
+    // an incompatible resume is refused before any work: no tagging
+    // phase runs and nothing is left cached in the caller's session
+    def refusedResume(out: String, buckets: Int, dayPartition: Boolean = false): String = {
+      val persisted = spark.sparkContext.getPersistentRDDs.size
+      val err = new java.io.ByteArrayOutputStream()
+      val stderr = System.err
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      val e = try intercept[IllegalArgumentException] {
+        KgJob.run(spark, input, modelPath, out, buckets, dayPartition)
+      } finally System.setErr(stderr)
+      assert(!err.toString("UTF-8").contains("[kgjob] tag_block_cc"),
+        s"a refused resume tagged, blocked and linked first:\n$err")
+      assert(spark.sparkContext.getPersistentRDDs.size <= persisted,
+        s"a refused resume left ${spark.sparkContext.getPersistentRDDs.size - persisted} RDD(s) cached")
+      e.getMessage
+    }
+
     // resuming under a DIFFERENT bucket count must refuse loudly: the
     // committed manifest ids index another partition function and a
     // silent resume would lose/duplicate rows across the two layouts
-    val e = intercept[IllegalArgumentException] {
-      KgJob.run(spark, input, modelPath, output, buckets = 4)
-    }
-    assert(e.getMessage.contains("n_buckets"), e.getMessage)
+    val e = refusedResume(output, buckets = 4)
+    assert(e.contains("n_buckets"), e)
 
     // the committed layout is read strictly: a manifest without n_buckets
     // (written before the layout was recorded) or with another config is
@@ -97,16 +112,11 @@ class KgJobSpec extends AnyFunSuite {
       Commit.write(fs, p, json.replace(from, to))
     }
     rewriteManifests(""","n_buckets":8""", "")
-    val eOld = intercept[IllegalArgumentException] {
-      KgJob.run(spark, input, modelPath, output, buckets = 8)
-    }
-    assert(eOld.getMessage.contains("'n_buckets'") && eOld.getMessage.contains("fresh output"),
-      eOld.getMessage)
+    val eOld = refusedResume(output, buckets = 8)
+    assert(eOld.contains("'n_buckets'") && eOld.contains("fresh output"), eOld)
     rewriteManifests(""""config":"v1"""", """"config":"v2","n_buckets":8""")
-    val eCfg = intercept[IllegalArgumentException] {
-      KgJob.run(spark, input, modelPath, output, buckets = 8)
-    }
-    assert(eCfg.getMessage.contains("'config'"), eCfg.getMessage)
+    val eCfg = refusedResume(output, buckets = 8)
+    assert(eCfg.contains("'config'"), eCfg)
 
     // day-partitioned job run to a fresh output: same triples, day dirs
     // under every bucket, layout recorded for the resume guard. A
@@ -129,9 +139,7 @@ class KgJobSpec extends AnyFunSuite {
       .filter(f => f.isDirectory && f.getName.startsWith("conv_bucket="))
     assert(bucketDirs.nonEmpty &&
       bucketDirs.forall(_.listFiles().exists(_.getName.startsWith("day="))))
-    val eDay = intercept[IllegalArgumentException] {
-      KgJob.run(spark, input, modelPath, output2, buckets = 8, dayPartition = false)
-    }
-    assert(eDay.getMessage.contains("day_partition"), eDay.getMessage)
+    val eDay = refusedResume(output2, buckets = 8)
+    assert(eDay.contains("day_partition"), eDay)
   }
 }

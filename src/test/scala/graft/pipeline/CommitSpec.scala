@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The durable-commit module: write-temp-then-rename semantics, crash
   * leftovers, read-back, directory swaps — and source guards that keep
   * it the ONLY place in the program that renames or builds temp paths,
-  * and keep [[Records]] the only reader of what it commits.
+  * keep [[Records]] the only reader of what it commits, and keep
+  * [[GraphSink]] the only module that builds a bucket manifest's path.
   */
 class CommitSpec extends AnyFunSuite {
 
@@ -86,5 +87,14 @@ class CommitSpec extends AnyFunSuite {
       "Commit.read(", "FileSystem.get(", ".open(")
     assert(offenders.isEmpty,
       s"record format bypassed — read through graft.pipeline.Records:\n${offenders.mkString("\n")}")
+  }
+
+  test("no program source outside GraphSink.scala builds a bucket manifest path") {
+    val offenders = sourceLines(Set("GraphSink.scala"), "_manifests/bucket-").filterNot { l =>
+      val text = l.split(": ", 2)(1)
+      l.contains("/Records.scala:") && (text.startsWith("/**") || text.startsWith("*"))
+    }
+    assert(offenders.isEmpty,
+      s"bucket manifests addressed outside graft.pipeline.GraphSink:\n${offenders.mkString("\n")}")
   }
 }

@@ -61,6 +61,29 @@ class GraphSinkCrashSpec extends AnyFunSuite {
     assert(m == clean(victimBucket))
   }
 
+  test("every bucket manifest is read strictly: damaging any one refuses the resume, naming it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_strict").toString
+    val triples = sampleTriples()
+    GraphSink.writeTriples(spark, triples, dir, 8)
+    val f = Commit.fs(spark, dir)
+    val buckets = GraphSink.doneBuckets(spark, dir).toSeq.sorted
+    assert(buckets == (0 until 8), s"expected all 8 buckets committed, got $buckets")
+    for (b <- buckets) {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/_manifests/bucket-$b.json")
+      val good = Commit.read(f, p)
+      // a torn record, and a well-formed one under another layout
+      for (bad <- Seq("{torn", good.replace(""""n_buckets":8""", """"n_buckets":4"""))) {
+        f.delete(p, false)
+        Commit.write(f, p, bad)
+        val e = intercept[IllegalArgumentException](GraphSink.writeTriples(spark, triples, dir, 8))
+        assert(e.getMessage.contains(s"bucket-$b.json"), s"damaged bucket-$b.json: ${e.getMessage}")
+      }
+      f.delete(p, false)
+      Commit.write(f, p, good)
+    }
+    assert(GraphSink.writeTriples(spark, triples, dir, 8).skippedBuckets == 8)
+  }
+
   test("day(ts) secondary partition: layout gains day dirs, content and resume unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sink_day").toString
     // spread ts across 3 days so the day split is non-trivial
