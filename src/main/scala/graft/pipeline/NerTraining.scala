@@ -67,13 +67,4 @@ object NerTraining {
       .map { case (d, k, v, n) => ((d, k, v), n) }
     NerModel.assemble(counts)
   }
-
-  /** Gold mentions of the eval split as (turnKey, mention) — for the
-    * Spark-side P/R evaluation query.
-    */
-  def goldMentions(labeled: Dataset[LabeledRow]): Dataset[(String, Int, Int, Int, String)] = {
-    val spark = labeled.sparkSession
-    import spark.implicits._
-    labeled.flatMap(r => r.gold.map(g => (r.conv_id, r.turn_idx, g.start, g.end, g.tag)))
-  }
 }

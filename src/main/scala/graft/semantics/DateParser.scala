@@ -91,8 +91,6 @@ object DateParser {
     None
   }
 
-  def isDate(s: String): Boolean = parse(s).isDefined
-
   private val findPattern: Pattern = Pattern.compile(
     "\\d{4}[-/]\\d{1,2}[-/]\\d{1,2}(?:[T ]\\d{2}:\\d{2}(?::\\d{2})?)?" +
       "|\\d{1,2}[./]\\d{1,2}[./]\\d{4}" +

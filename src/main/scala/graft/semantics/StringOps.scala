@@ -88,8 +88,6 @@ object StringOps {
     dateToks.toDouble / toks.length > 0.5
   }
 
-  def isDateWord(t: String): Boolean = monthsAndDays.contains(t.toLowerCase)
-
   /** Count word-boundary occurrences of `word` in `text` (case-insensitive). */
   def countWordOccurrences(text: String, word: String): Int = {
     if (text == null || word == null || word.isEmpty) return 0

@@ -7,7 +7,9 @@ import graft.semantics.NerModel
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Incremental/streaming ingestion (SURVEY.md §2 row 60, optional M7):
@@ -19,6 +21,45 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * adaptive feed polling; this is its Spark-native re-expression.
   */
 object StreamingIngest {
+
+  /** The one way the program starts a streaming query: `confs` plus the
+    * checkpoint manager are set on `spark` for this query alone, the
+    * query starts, and every previous value comes back (unset stays
+    * unset), so the caller's session is left as found.
+    *
+    * The manager, which creates and renames every checkpoint file (the
+    * offset, commit and file-source logs, the state store's delta and
+    * checksum files), is Spark's [[FileSystemBasedCheckpointFileManager]]
+    * instead of the FileContext one. The on-disk format is the same. On
+    * `file:` without libhadoop each FileContext rename forks `readlink`
+    * twice, a large share of a small micro-batch's fixed cost (NOTES
+    * sharp edge 17). The single-writer guarantee holds as before: both
+    * managers check that the destination does not exist before they
+    * rename (on `file:` the FileContext check is the pair of forks); on
+    * HDFS `FileSystem.rename` itself refuses an existing destination;
+    * object stores rename atomically under neither manager.
+    *
+    * The query clones the session's conf when it is built, which covers
+    * its offset and commit logs and its state store. The file source
+    * builds its log from `spark` itself once the query thread resolves
+    * the plan, so the values stay set until the query has left its
+    * initializing states (or stopped).
+    */
+  def start(spark: SparkSession, writer: DataStreamWriter[_],
+      confs: Map[String, String] = Map.empty): StreamingQuery = {
+    val scoped = confs + ("spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+    val prev = scoped.keys.map(k => k -> spark.conf.getOption(k))
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = writer.start()
+      while (q.isActive && q.status.message.startsWith("Initializing")) Thread.sleep(1)
+      q
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** Conversation state: running max turn and mention count, the
     * lifetime max event time (timeout monotonicity — see
@@ -354,9 +395,7 @@ object StreamingIngest {
     * (recorded in its manifest as canon_version).
     */
   def sinkResolvedTriplesRefreshing(tagged: Dataset[TaggedRow], canonDir: String,
-      outDir: String,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      outDir: String, trigger: Option[Trigger] = None): StreamingQuery = {
     val triples = graft.pipeline.KgPipeline.tripleRows(tagged)
     val cache = new CanonMapCache(canonDir)
     val writer = triples.writeStream
@@ -366,7 +405,7 @@ object StreamingIngest {
         writeBatch(resolved, outDir, batchId, version)
       }
       .option("checkpointLocation", s"$outDir/_checkpoint_resolved")
-    trigger.fold(writer)(writer.trigger).start()
+    start(tagged.sparkSession, trigger.fold(writer)(writer.trigger))
   }
 
   /** One batch commit (factored out so the idempotence spec can replay
@@ -392,7 +431,10 @@ object StreamingIngest {
       count(lit(1)).as("rows"),
       expr("bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj))").as("fp"))
     val batchDir = new Path(s"$outDir/resolved_triples/batch=$batchId")
-    observed.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(batchDir.toString)
+    // no `_SUCCESS` marker: the manifest below is the batch's commit record
+    observed.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(batchDir.toString)
     val (rows, fp) = observedStats(obs.get, hfs, batchDir)
     hfs.mkdirs(manifest.getParent)
     // a failed commit throws, so Structured Streaming retries the batch
@@ -426,14 +468,13 @@ object StreamingIngest {
   def runOnce(spark: SparkSession, inputDir: String, model: Broadcast[NerModel],
       queryName: String): DataFrame = {
     val tagged = tagStream(readTurns(spark, inputDir), model)
-    val q = tagged
+    val q = start(spark, tagged
       .select(col("conv_id"), col("turn_idx"), size(col("mentions")).as("n_mentions"),
         size(col("triples")).as("n_triples"))
       .writeStream
       .outputMode(OutputMode.Append)
       .format("memory")
-      .queryName(queryName)
-      .start()
+      .queryName(queryName))
     q.processAllAvailable()
     q.stop()
     spark.table(queryName)

@@ -76,35 +76,29 @@ object StreamingScale {
       .toDF("doc_id", "text", "ts")
       .coalesce(1).write.parquet(s"$dir/drop3")
 
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // changelog checkpointing: each batch uploads the state DELTA instead
-    // of a full RocksDB snapshot — at 100-TB scale snapshot upload time
-    // grows with total state while the changelog grows with the batch's
-    // updates (VERDICT r3 item 7); recovery from it is proven by
-    // StreamingRecoverySpec
-    val prevChangelog = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    // the two sentinel files can still share a micro-batch (the file
-    // source packs up to maxFilesPerTrigger files per trigger), so the
-    // final timeouts may fire in a no-data batch — pin that behavior on
-    // explicitly rather than riding its default (ADVICE r3)
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    // RocksDB with changelog checkpointing: each batch uploads the state
+    // DELTA instead of a full RocksDB snapshot — at 100-TB scale snapshot
+    // upload time grows with total state while the changelog grows with
+    // the batch's updates (VERDICT r3 item 7); recovery from it is proven
+    // by StreamingRecoverySpec. The two sentinel files can still share a
+    // micro-batch (the file source packs up to maxFilesPerTrigger files
+    // per trigger), so the final timeouts may fire in a no-data batch —
+    // that behavior is pinned on rather than riding its default (ADVICE r3)
+    val confs = Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "true")
     try {
       val tW = System.nanoTime()
       val stream = spark.readStream
         .schema("doc_id LONG, text STRING, ts TIMESTAMP")
         .option("maxFilesPerTrigger", "4")
         .parquet(s"$dir/drop*")
-      val q = StreamingIngest.nearDupCandidatesExpiring(stream)
+      val q = StreamingIngest.start(spark, StreamingIngest.nearDupCandidatesExpiring(stream)
         .writeStream.outputMode(OutputMode.Append)
         .format("memory").queryName("stream_scale")
-        .option("checkpointLocation", s"$dir/_ckpt")
-        .start()
+        .option("checkpointLocation", s"$dir/_ckpt"), confs)
       q.processAllAvailable()
       val progresses = q.recentProgress.toSeq
       q.stop()
@@ -121,13 +115,6 @@ object StreamingScale {
         batchMs.length,
         if (batchMs.isEmpty) 0L else batchMs(batchMs.length / 2))
     } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      prev.foreach(spark.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      prevNoData.foreach(spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", _))
-      spark.conf.unset("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-      prevChangelog.foreach(spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", _))
       spark.catalog.dropTempView("stream_scale")
       // ~hundreds of MB of generated parquet + RocksDB checkpoint per
       // run — recursive delete so repeated bench rounds don't fill /tmp

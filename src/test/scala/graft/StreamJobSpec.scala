@@ -238,6 +238,71 @@ class StreamJobSpec extends AnyFunSuite {
     assert(manifest(keep).contains(s""""canon_version":"$v1""""), manifest(keep))
   }
 
+  test("StreamJob writes its checkpoint through the FileSystem manager, scoped to its query") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+      ChecksumCheckpointFileManager, FileContextBasedCheckpointFileManager,
+      FileSystemBasedCheckpointFileManager, HDFSMetadataLog}
+    import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSource,
+      StreamingExecutionRelation, StreamingQueryWrapper}
+    val dir = java.nio.file.Files.createTempDirectory("streamjob_ckpt").toString
+    val modelPath = s"$dir/model"
+    val canonDir = s"$dir/canon"
+    val labeled = Transcripts.generateLabeled(spark, N).cache()
+    NerTraining.save(NerTraining.trainModel(Transcripts.trainSplit(labeled)), spark, modelPath)
+    val all = Transcripts.generate(spark, N).cache()
+    all.where($"conv_id" < "c0000010").coalesce(1).write.parquet(s"$dir/drops/drop1")
+    StreamingIngest.publishCanonMap(Seq(("acme", "ORG", 1L, "acme"))
+      .toDF("norm", "tag", "entity_id", "canonical_norm"), canonDir)
+
+    def field[T](cls: Class[_], name: String, of: AnyRef): T = {
+      val f = cls.getDeclaredField(name)
+      f.setAccessible(true)
+      f.get(of).asInstanceOf[T]
+    }
+    // the manager that creates and renames a log's files, past the
+    // wrapper that adds checksum files
+    def manager(log: HDFSMetadataLog[_]): CheckpointFileManager =
+      field[CheckpointFileManager](classOf[HDFSMetadataLog[_]], "fileManager", log) match {
+        case c: ChecksumCheckpointFileManager =>
+          field[CheckpointFileManager](classOf[ChecksumCheckpointFileManager], "underlyingFileMgr", c)
+        case m => m
+      }
+
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val other = classOf[FileContextBasedCheckpointFileManager].getName
+    // the caller's session, unset and then holding another manager
+    for ((callerValue, run) <- Seq(None -> "unset", Some(other) -> "set")) {
+      callerValue.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val output = s"$dir/out-$run"
+      val q = StreamJob.run(spark, s"$dir/drops/drop*", modelPath, canonDir, output)
+      try {
+        q.processAllAvailable()
+        val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        assert(manager(exec.offsetLog).isInstanceOf[FileSystemBasedCheckpointFileManager],
+          s"$run: offset log written through ${manager(exec.offsetLog).getClass.getName}")
+        val sources = exec.logicalPlan.collect {
+          case r: StreamingExecutionRelation => r.source.asInstanceOf[FileStreamSource]
+        }
+        assert(sources.length == 1, s"$run: $sources")
+        val sourceLog = field[HDFSMetadataLog[_]](classOf[FileStreamSource], "metadataLog", sources.head)
+        assert(manager(sourceLog).isInstanceOf[FileSystemBasedCheckpointFileManager],
+          s"$run: file-source log written through ${manager(sourceLog).getClass.getName}")
+        assert(spark.conf.getOption(key) == callerValue, s"$run: caller's $key changed")
+      } finally {
+        q.stop()
+        spark.conf.unset(key)
+      }
+      // a committed batch directory holds only part files and their
+      // `.crc` shadows: the manifest is the commit record, not `_SUCCESS`
+      val batchDirs = new java.io.File(s"$output/resolved_triples").listFiles()
+      assert(batchDirs.nonEmpty, s"$run: nothing committed")
+      for (b <- batchDirs; f <- b.list())
+        assert(f.startsWith("part-") || (f.startsWith(".part-") && f.endsWith(".crc")),
+          s"$run: ${b.getName} holds $f")
+    }
+  }
+
   test("a batch that wrote data but reported no metrics is never committed as zero rows") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path

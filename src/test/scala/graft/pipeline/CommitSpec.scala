@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.SourceGuard
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
@@ -60,37 +61,21 @@ class CommitSpec extends AnyFunSuite {
     assert(!f.exists(new Path(dst, "edges_new")), "the source must not land inside the destination")
   }
 
-  /** `file:line: text` of every program source line outside `allowed`
-    * that contains one of `needles`.
-    */
-  private def sourceLines(allowed: Set[String], needles: String*): Seq[String] = {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    for {
-      file <- walk(root) if file.getName.endsWith(".scala") && !allowed(file.getName)
-      src = scala.io.Source.fromFile(file, "UTF-8")
-      (line, i) <- (try src.getLines().toList finally src.close()).zipWithIndex
-      if needles.exists(line.contains)
-    } yield s"${file.getPath}:${i + 1}: ${line.trim}"
-  }
-
   test("no program source outside Commit.scala renames or builds a .tmp path") {
-    val offenders = sourceLines(Set("Commit.scala"), ".rename(", ".tmp")
+    val offenders = SourceGuard.lines(Set("Commit.scala"), ".rename(", ".tmp")
     assert(offenders.isEmpty,
       s"commit protocol bypassed — route these through graft.pipeline.Commit:\n${offenders.mkString("\n")}")
   }
 
   test("no program source outside Records.scala and Commit.scala reads a durable file") {
-    val offenders = sourceLines(Set("Records.scala", "Commit.scala"),
+    val offenders = SourceGuard.lines(Set("Records.scala", "Commit.scala"),
       "Commit.read(", "FileSystem.get(", ".open(")
     assert(offenders.isEmpty,
       s"record format bypassed — read through graft.pipeline.Records:\n${offenders.mkString("\n")}")
   }
 
   test("no program source outside GraphSink.scala builds a bucket manifest path") {
-    val offenders = sourceLines(Set("GraphSink.scala"), "_manifests/bucket-").filterNot { l =>
+    val offenders = SourceGuard.lines(Set("GraphSink.scala"), "_manifests/bucket-").filterNot { l =>
       val text = l.split(": ", 2)(1)
       l.contains("/Records.scala:") && (text.startsWith("/**") || text.startsWith("*"))
     }

@@ -27,6 +27,16 @@ class StreamingSpec extends AnyFunSuite {
     */
   private val constTs = org.apache.spark.sql.functions.lit(new java.sql.Timestamp(1700000000000L))
 
+  test("no program source starts a streaming query outside StreamingIngest.start") {
+    val starts = graft.SourceGuard.lines(Set.empty, ".start(")
+      .filter(l => "(?<!StreamingIngest)\\.start\\(".r.findFirstIn(l.split(": ", 2)(1)).nonEmpty)
+    val (helper, offenders) = starts.partition(l =>
+      l.contains("/StreamingIngest.scala:") && l.endsWith(": val q = writer.start()"))
+    assert(helper.length == 1, s"the helper's own start was not found:\n${starts.mkString("\n")}")
+    assert(offenders.isEmpty,
+      s"query started without its checkpoint manager — use StreamingIngest.start:\n${offenders.mkString("\n")}")
+  }
+
   test("streaming tag over file drops equals batch tagging") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("stream_in").toString
