@@ -101,13 +101,7 @@ object KgIncrementalJob {
 
   // ------------------------------------------------------------ the job
 
-  /** `failAfter` is a crash-injection hook for the resume specs: throw
-    * AFTER the named phase commits ("staged" | "invalidated" |
-    * "triples"), in whichever apply the run is rolling forward.
-    * Production callers leave it None.
-    */
-  def run(spark: SparkSession, output: String, input: String, modelPath: String,
-      failAfter: Option[String] = None): IncrMetrics = {
+  def run(spark: SparkSession, output: String, input: String, modelPath: String): IncrMetrics = {
     import spark.implicits._
     val incr = s"$output/_incr"
     val f = Commit.fs(spark, output)
@@ -116,9 +110,6 @@ object KgIncrementalJob {
     // scale is "batch-proportional + fixed planning" — the walls make the
     // split attributable (IncrScale reports the total as kg_incr_job)
     val phase = new PhaseRecorder("kgincr")
-    def crashPoint(phase: String): Unit =
-      if (failAfter.contains(phase))
-        throw new RuntimeException(s"[test hook] injected crash after phase '$phase'")
 
     /** Everything after the marker, from staging alone and idempotent, so
       * any later invocation can finish an interrupted apply: a rewritten
@@ -129,10 +120,8 @@ object KgIncrementalJob {
         s"$incr/linkstate_new lost its commit marker — staging is torn; restore the output " +
           "from backup or re-run the full KgJob")
       GraphSink.invalidateBuckets(spark, output, marker.buckets)
-      crashPoint("invalidated")
       val wm = GraphSink.writeTriples(spark, spark.read.parquet(s"$incr/rewrite"), output,
         marker.layout.nBuckets, marker.layout.dayPartition)
-      crashPoint("triples")
       val (nEntities, nEdges) = finishTail(spark, f, output)
       (wm, nEntities, nEdges)
     }
@@ -272,7 +261,6 @@ object KgIncrementalJob {
     // must not depend on re-reading manifests it is about to delete)
     val marker = IncrMarker(token, bucketsB, layout)
     Commit.write(f, new Path(s"$incr/marker.json"), marker.json)
-    crashPoint("staged")
     val (wm, nEntities, nEdges) = rollForward(marker)
     phase("roll_forward")
     IncrMetrics(nTurns, nNewTriples, nChanged, wm.buckets, wm.skippedBuckets,

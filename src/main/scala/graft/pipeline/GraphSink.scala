@@ -101,8 +101,8 @@ object GraphSink {
   /** Write triples for all buckets not yet committed; returns metrics
     * observed on the actual write pass (`Observation` — executor→driver
     * metric channel, SURVEY.md §3.3 step 10).
-    */
-  /** `dayPartition = true` adds `day(ts)` as a SECOND partition level
+    *
+    * `dayPartition = true` adds `day(ts)` as a SECOND partition level
     * under the conv bucket (SURVEY.md §7.5: `bucket(conv_id)[, day(ts)]`
     * — the layout time-range scans prune on). Purely a layout change:
     * manifests, fingerprints and resume stay per-BUCKET (a bucket's
@@ -132,9 +132,12 @@ object GraphSink {
     // (ADVICE r5): a crashed day-partitioned run that committed ZERO
     // bucket manifests leaves every bucket dir uncommitted — a resume
     // with drifted input would otherwise keep pre-drift day dirs inside
-    // rewritten buckets and the read-back fingerprint would bless them
+    // rewritten buckets and the read-back fingerprint would bless them.
+    // A killed write's `.spark-staging-<job>` dir, never reused, goes too
     val triplesDir = new Path(s"$outDir/triples")
-    uncommittedBuckets(f, triplesDir, done).foreach(f.delete(_, true))
+    val staging = if (!f.exists(triplesDir)) Nil
+      else f.listStatus(triplesDir).toSeq.map(_.getPath).filter(_.getName.startsWith(".spark-staging-"))
+    (uncommittedBuckets(f, triplesDir, done) ++ staging).foreach(f.delete(_, true))
     val all = bucketed(resolvedTriples, nBuckets)
     val pending = if (done.isEmpty) all else all.where(!col("conv_bucket").isin(done.toSeq: _*))
 

@@ -190,12 +190,6 @@ object KgPipeline {
     spark.createDataset(rows).toDF("node_id", "component")
   }
 
-  /** Iterative DataFrame connected components (min-label propagation,
-    * SURVEY.md §2 row 48 — GraphX is RDD-based, excluded by input_hint).
-    * Returns (node_id, component) where component = min node_id in the
-    * connected component. localCheckpoint() per iteration truncates
-    * lineage; convergence via changed-count.
-    */
   /** One min-label-propagation step: neighbor-min join + least-label
     * update. Returns the new (node_id, component) frontier — already
     * localCheckpoint'ed (lineage cut) — and the number of labels that
@@ -242,6 +236,12 @@ object KgPipeline {
     nodes.select($"node_id", $"node_id".as("component")).localCheckpoint()
   }
 
+  /** Iterative DataFrame connected components (min-label propagation,
+    * SURVEY.md §2 row 48 — GraphX is RDD-based, excluded by input_hint).
+    * Returns (node_id, component) where component = min node_id in the
+    * connected component. localCheckpoint() per iteration truncates
+    * lineage; convergence via changed-count.
+    */
   def connectedComponentsLoop(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
@@ -288,16 +288,11 @@ object KgPipeline {
     * silently propagating another graph's labels. The superseded
     * previous frontier is pruned after each commit, so storage stays
     * O(|nodes|), not O(iters·|nodes|).
-    *
-    * `failAfterIters` is a test hook: throw AFTER committing iteration k
-    * (crash injection for the resume spec; production callers leave it
-    * at MaxValue).
     */
   def connectedComponentsLoopDurable(
       nodes: DataFrame,
       edges: DataFrame,
-      checkpointDir: String,
-      failAfterIters: Int = Int.MaxValue): DataFrame = {
+      checkpointDir: String): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
     val dirPath = new Path(checkpointDir)
@@ -335,7 +330,9 @@ object KgPipeline {
       f.delete(new Path(s"$checkpointDir/iter-${m.iter}"), true)
       f.delete(new Path(s"$checkpointDir/iter-${m.iter}.done.json"), false)
     }
-    lastResumedFrom = last.map(_.iter).getOrElse(0)
+    // a local: the shared var only reports, and another loop may overwrite it
+    val resumedFrom = last.map(_.iter).getOrElse(0)
+    lastResumedFrom = resumedFrom
 
     // empty node set (fingerprint guard above already vetted it against
     // any committed checkpoint): converges trivially, nothing to persist
@@ -358,7 +355,7 @@ object KgPipeline {
         spark.read.parquet(s"$checkpointDir/iter-${m.iter}").localCheckpoint()
       case None => initialLabels(nodes)
     }
-    var iter = lastResumedFrom
+    var iter = resumedFrom
     var converged = false
     while (!converged && iter < CC_MAX_ITERS) {
       val (next, changed) = ccStep(spark, sym, labels)
@@ -377,15 +374,12 @@ object KgPipeline {
         f.delete(new Path(s"$checkpointDir/iter-${iter - 1}"), true)
         f.delete(new Path(s"$checkpointDir/iter-${iter - 1}.done.json"), false)
       }
-      if (iter >= failAfterIters && !converged)
-        throw new RuntimeException(
-          s"[test hook] injected crash after committing CC iteration $iter")
       labels = next
     }
     require(converged,
       s"connectedComponentsLoopDurable did not converge within $CC_MAX_ITERS iterations")
     System.err.println(s"[kg] durable CC converged after $lastIterations iterations " +
-      s"(resumed from $lastResumedFrom)")
+      s"(resumed from $resumedFrom)")
     labels
   }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 
 /** Incremental/streaming ingestion (SURVEY.md §2 row 60, optional M7):
   * transcript drops land as parquet files; a Structured Streaming query
@@ -323,20 +323,17 @@ object StreamingIngest {
     version
   }
 
-  /** Current canon-map version token: the `_canon_version` marker when
-    * the producer committed one, else a fingerprint of the file listing
-    * (name, length, mtime) so maps published without the marker still
-    * refresh on any rewrite.
+  /** Current canon-map version token: the `_canon_version` marker that
+    * [[publishCanonMap]] commits. A map without one was not published
+    * through it, so nothing tells a rewrite from the map already loaded:
+    * it is refused.
     */
   def canonSnapshotVersion(spark: SparkSession, canonDir: String): String = {
-    val dir = new Path(canonDir)
     val hfs = Commit.fs(spark, canonDir)
     val marker = new Path(s"$canonDir/_canon_version")
-    if (hfs.exists(marker)) CanonVersion.read(hfs, marker).token
-    else if (!hfs.exists(dir)) "absent"
-    else hfs.listStatus(dir).toSeq
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|").hashCode.toString
+    require(hfs.exists(marker), s"$marker does not exist: publish the canonical map " +
+      "with StreamingIngest.publishCanonMap, which commits its _canon_version marker")
+    CanonVersion.read(hfs, marker).token
   }
 
   /** Driver-side cache of the latest canonical-map snapshot, swapped
@@ -398,15 +395,26 @@ object StreamingIngest {
       outDir: String, trigger: Option[Trigger] = None): StreamingQuery = {
     val triples = graft.pipeline.KgPipeline.tripleRows(tagged)
     val cache = new CanonMapCache(canonDir)
+    val checkpoint = s"$outDir/_checkpoint_resolved"
+    dropUnstartedOffsets(Commit.fs(tagged.sparkSession, checkpoint), new Path(s"$checkpoint/offsets"))
     val writer = triples.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         val (canon, version) = cache.current(batch.sparkSession)
         val resolved = graft.pipeline.KgPipeline.resolveTriplesBroadcast(batch, canon)
         writeBatch(resolved, outDir, batchId, version)
       }
-      .option("checkpointLocation", s"$outDir/_checkpoint_resolved")
+      .option("checkpointLocation", checkpoint)
     start(tagged.sparkSession, trigger.fold(writer)(writer.trigger))
   }
+
+  /** A kill during the first offset commit leaves only Spark's temp file in
+    * `offsets/`, and Spark refuses that checkpoint on every restart
+    * (`STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY`); no batch ran, so it goes. */
+  private def dropUnstartedOffsets(f: FileSystem, offsets: Path): Unit =
+    if (f.exists(offsets)) {
+      val entries = f.listStatus(offsets).toSeq.map(_.getPath)
+      if (entries.forall(_.getName.startsWith("."))) entries.foreach(f.delete(_, false))
+    }
 
   /** One batch commit (factored out so the idempotence spec can replay
     * a batchId directly): skip if manifested, else overwrite the batch
@@ -416,12 +424,15 @@ object StreamingIngest {
     * a batch is either fully committed (manifest present) or fully
     * re-written (directory overwritten), never duplicated. The table is
     * the union of batch=* directories.
+    * A committed batch still drains into the `noop` sink: Spark refuses a
+    * replay whose stateful operators did not commit their state again
+    * (`STATE_STORE_COMMIT_VALIDATION_FAILED`, on every later restart too).
     */
   def writeBatch(batch: DataFrame, outDir: String, batchId: Long,
       canonVersion: String): Unit = {
     val hfs = Commit.fs(batch.sparkSession, outDir)
     val manifest = new Path(s"$outDir/_manifests/stream-resolved-batch-$batchId.json")
-    if (hfs.exists(manifest)) return // already committed — replay is a no-op
+    if (hfs.exists(manifest)) return batch.write.format("noop").mode(SaveMode.Overwrite).save()
     // manifest stats observed ON the write pass (r6, guide §1/§5): a
     // separate stats agg would execute the batch's ENTIRE lineage — the
     // NLP tagging + resolve join — a second time per micro-batch

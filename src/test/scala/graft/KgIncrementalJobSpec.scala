@@ -1,8 +1,10 @@
 package graft
 
-import graft.pipeline.{Commit, GraphSink, NerTraining, Transcripts}
+import graft.pipeline.{Commit, GraphSink, NerTraining, Records, Transcripts}
+import graft.testkit.CrashFs.{Kind, Mutation, at, under}
+import graft.testkit.{CrashFs, Snapshot}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end gates for the incremental maintenance job: applying
@@ -51,31 +53,10 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     (dir, s"$dir/model")
   }
 
-  private def sortedRows(df: DataFrame, cols: Seq[String]): Seq[String] =
-    df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("")).toSeq.sorted
-
-  private val tripleCols = Seq("conv_id", "turn_idx", "subj", "pred", "obj",
-    "subj_tag", "obj_tag", "subj_id", "obj_id", "subj_canonical", "obj_canonical")
-
+  /** `got` and `want` are local output directories. */
   private def assertGraphsEqual(got: String, want: String, what: String): Unit = {
-    assert(sortedRows(spark.read.parquet(s"$got/triples"), tripleCols) ==
-      sortedRows(spark.read.parquet(s"$want/triples"), tripleCols),
-      s"$what: triples (incl. resolution columns) diverged")
-    val eCols = Seq("entity_id", "canonical", "entity_type", "n_mentions")
-    assert(sortedRows(spark.read.parquet(s"$got/entities"), eCols) ==
-      sortedRows(spark.read.parquet(s"$want/entities"), eCols),
-      s"$what: entities diverged")
-    val gCols = Seq("src", "dst", "pred", "weight")
-    assert(sortedRows(spark.read.parquet(s"$got/edges"), gCols) ==
-      sortedRows(spark.read.parquet(s"$want/edges"), gCols),
-      s"$what: edges diverged (delta-merge != full aggregate)")
-    val nCols = Seq("node_id", "norm", "tag", "surface", "n_mentions")
-    assert(sortedRows(spark.read.parquet(s"$got/_linkstate/nodes"), nCols) ==
-      sortedRows(spark.read.parquet(s"$want/_linkstate/nodes"), nCols),
-      s"$what: link-state nodes diverged")
-    assert(sortedRows(spark.read.parquet(s"$got/_linkstate/labels"), Seq("node_id", "component")) ==
-      sortedRows(spark.read.parquet(s"$want/_linkstate/labels"), Seq("node_id", "component")),
-      s"$what: link-state labels diverged")
+    val diff = Snapshot.graph(spark, got).diff(Snapshot.graph(spark, want))
+    assert(diff.isEmpty, s"$what: ${diff.mkString(", ")} diverged")
   }
 
   private def bucketFiles(output: String, buckets: Set[Int]): Map[Int, Set[String]] =
@@ -129,30 +110,29 @@ class KgIncrementalJobSpec extends AnyFunSuite {
 
   test("kill at every commit point; the next run of any batch finishes the committed apply first") {
     val (dir, model) = staged
-    val out = s"$dir/g2"
+    val local = s"$dir/g2"
+    val out = CrashFs.on(spark, local)
     KgJob.run(spark, s"$dir/in_a2", model, out, buckets = 8)
     def turnCount(batch: String): Long = spark.read.parquet(s"$dir/$batch").count()
-    def killedAfter(phase: String, batch: String): Unit = {
-      val e = intercept[RuntimeException] {
-        KgIncrementalJob.run(spark, out, s"$dir/$batch", model, failAfter = Some(phase))
-      }
-      assert(e.getMessage.contains(s"injected crash after phase '$phase'"), e.getMessage)
-    }
+    def killedAfter(point: CrashFs.Point, batch: String): Unit =
+      CrashFs.kill(spark, local, point)(KgIncrementalJob.run(spark, out, s"$dir/$batch", model))
 
     // kill after B's marker commits, before anything live is mutated
-    killedAfter("staged", "in_b")
-    // the next run rolls B forward and is killed mid-write: B's manifests
-    // are invalidated, its buckets not yet rewritten
-    killedAfter("invalidated", "in_c")
+    killedAfter(CrashFs.Point("marker rename",
+      m => m.op == "rename" && m.to == "_incr/marker.json"), "in_b")
+    // the next run rolls B forward and is killed mid-write: one of B's
+    // manifests is invalidated, its buckets not yet rewritten
+    killedAfter(CrashFs.Point("first invalidation", at("delete", "_manifests/bucket-")), "in_c")
     // a DIFFERENT batch completes the interrupted apply of B from its
     // staging, then applies its own batch
     val mC = KgIncrementalJob.run(spark, out, s"$dir/in_c", model)
     assert(mC.newTurns == turnCount("in_c") && mC.changedSurfaces >= 0 && mC.rewrittenBuckets > 0,
       s"C must apply as its own batch after B's roll-forward, got $mC")
 
-    // kill after D's triples commit, before the entities/edges/link-state
-    // swaps: re-running B finishes D's apply, then refuses B itself
-    killedAfter("triples", "in_d")
+    // kill after D's triples commit, as the entities rewrite starts and
+    // before the edges/link-state swaps: re-running B finishes D's apply,
+    // then refuses B itself
+    killedAfter(CrashFs.Point("entities delete", m => m.op == "delete" && m.path == "entities"), "in_d")
     val eB = intercept[IllegalArgumentException] {
       KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
     }
@@ -162,11 +142,11 @@ class KgIncrementalJobSpec extends AnyFunSuite {
       KgIncrementalJob.run(spark, out, s"$dir/in_d", model)
     }
     assert(eD.getMessage.contains("already applied"), eD.getMessage)
-    assert(!new java.io.File(s"$out/_incr").exists(), "a finished apply leaves no staging")
+    assert(CrashFs.leftovers(local).isEmpty, s"a finished apply left ${CrashFs.leftovers(local)}")
 
     val want = s"$dir/g2_full"
     KgJob.run(spark, s"$dir/in_abc", model, want, buckets = 8)
-    assertGraphsEqual(out, want, "A2+B+C+D after kills vs full")
+    assertGraphsEqual(local, want, "A2+B+C+D after kills vs full")
   }
 
   test("apply order commutes: A+C+B equals A+B+C equals full") {
@@ -279,5 +259,76 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     val applied = """"applied":\[([^\]]*)\]""".r.findFirstMatchIn(ledger()).get.group(1)
       .split(",").toSeq
     assert(applied.size == 1 && applied.head.startsWith("\"" + KgIncrementalJob.TokenFormat), ledger())
+  }
+
+  test("KgIncrementalJob killed at each commit point re-runs to the clean apply, applied once") {
+    val (dir, model) = staged
+    val prior = s"$dir/kill_prior"
+    KgJob.run(spark, s"$dir/in_a", model, prior, buckets = 4)
+    def run(local: String) = KgIncrementalJob.run(spark, CrashFs.on(spark, local), s"$dir/in_b", model)
+    def ledger(local: String): Seq[String] = Records.LinkStateMarker.read(Commit.fs(spark, local),
+      new org.apache.hadoop.fs.Path(s"$local/_linkstate/_committed.json")).applied
+    val clean = s"$dir/kill_clean"
+    CrashFs.reset(clean, Some(prior))
+    val (_, trace) = CrashFs.record(clean)(run(clean))
+    val want = Snapshot.graph(spark, clean)
+    val wantLedger = ledger(clean)
+    val token = wantLedger.last
+
+    def swap(dst: String): Mutation => Boolean =
+      m => (m.op == "delete" && m.path == dst) || (m.op == "rename" && m.to == dst)
+    val markerRename = Kind("marker rename", at("rename", "_incr/.marker.json.tmp"))
+    // everything the roll-forward mutates; the swaps come first, since
+    // a swap renames a staged directory
+    val rollForward = Seq(markerRename,
+      Kind("edges swap", swap("edges")),
+      Kind("link-state swap", swap("_linkstate")),
+      Kind("marker delete", m => m.op == "delete" && m.path == "_incr/marker.json"),
+      Kind("staging delete", m => m.op == "delete" && m.path == "_incr", crash = false),
+      Kind("invalidation", at("delete", "_manifests/bucket-")),
+      Kind("triples write", under("triples")),
+      Kind("manifests dir", at("mkdirs", "_manifests"), crash = false),
+      Kind("bucket manifest temp create", at("create", "_manifests/.bucket-")),
+      Kind("bucket manifest rename", at("rename", "_manifests/.bucket-")),
+      Kind("entities write", under("entities")))
+    val staging = Seq(
+      Kind("staged link-state marker withdraw", at("delete", "_incr/linkstate_new/_committed.json"),
+        crash = false),
+      Kind("staged link-state nodes write", under("_incr/linkstate_new/nodes")),
+      Kind("staged link-state labels write", under("_incr/linkstate_new/labels")),
+      Kind("staged link-state marker temp create", at("create", "_incr/linkstate_new/._committed")),
+      Kind("staged link-state marker rename", at("rename", "_incr/linkstate_new/._committed")),
+      Kind("rewrite rows write", under("_incr/rewrite")),
+      Kind("staged edges write", under("_incr/edges_new")),
+      Kind("marker temp create", at("create", "_incr/.marker.json.tmp")))
+    val points = CrashFs.points(trace, rollForward ++ staging)
+
+    // The mutations after the marker are the roll-forward's, whichever
+    // run makes them: a point after the marker is reached by rolling the
+    // committed apply forward from a copy of the state the marker commit
+    // leaves, instead of tagging and linking the batch again.
+    val committed = s"$dir/kill_committed"
+    CrashFs.reset(committed, Some(prior))
+    CrashFs.kill(spark, committed, points.find(_.kind == markerRename.label).get)(run(committed))
+    CrashFs.forEach(points) { (p, i) =>
+      val local = s"$dir/kill_apply-$i"
+      if (p.kind == markerRename.label) CrashFs.reset(local, Some(committed))
+      else {
+        val rollsForward = rollForward.exists(_.label == p.kind)
+        CrashFs.reset(local, Some(if (rollsForward) committed else prior))
+        CrashFs.kill(spark, local, p)(run(local))
+      }
+      // once the marker is committed the batch counts as applied: the
+      // re-run finishes it from staging, then refuses the batch itself
+      if (new java.io.File(s"$local/_incr/marker.json").exists() || ledger(local).contains(token)) {
+        val e = intercept[IllegalArgumentException](run(local))
+        assert(e.getMessage.contains("already applied"), s"$p: ${e.getMessage}")
+      } else run(local)
+      val got = Snapshot.graph(spark, local)
+      assert(got == want, s"$p: the re-run differs from the clean apply in ${got.diff(want).mkString(", ")}")
+      assert(ledger(local) == wantLedger && ledger(local).count(_ == token) == 1,
+        s"$p: ledger ${ledger(local)}, clean ledger $wantLedger")
+      assert(CrashFs.leftovers(local).isEmpty, s"$p: left ${CrashFs.leftovers(local)}")
+    }
   }
 }

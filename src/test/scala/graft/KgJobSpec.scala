@@ -1,14 +1,16 @@
 package graft
 
 import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining, Transcripts}
+import graft.testkit.CrashFs.{Kind, at, under}
+import graft.testkit.{CrashFs, Snapshot}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end gate for the spark-submit entry point: parquet transcripts
   * + persisted model in, materialized graph + manifests out; a re-run
   * against a completed output is a pure resume (all buckets skipped, no
-  * data change); a partially-lost output recovers exactly the missing
-  * bucket.
+  * data change); a run killed at any commit point re-runs to the clean
+  * output, rewriting exactly the buckets it had not committed.
   */
 class KgJobSpec extends AnyFunSuite {
 
@@ -22,18 +24,21 @@ class KgJobSpec extends AnyFunSuite {
 
   private val N = 30L
 
+  /** Inputs staged once for all tests: the turn table and a persisted
+    * model (the deploy-time shape). */
+  private lazy val staged: (String, String, String) = {
+    val dir = java.nio.file.Files.createTempDirectory("kgjob").toString
+    val labeled = Transcripts.generateLabeled(spark, N).cache()
+    graft.pipeline.LabeledRow.turns(labeled).write.parquet(s"$dir/transcripts")
+    NerTraining.save(NerTraining.trainModel(Transcripts.trainSplit(labeled)), spark, s"$dir/model")
+    labeled.unpersist()
+    (dir, s"$dir/transcripts", s"$dir/model")
+  }
+
   test("KgJob: transcripts parquet -> materialized graph, resume-safe") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("kgjob").toString
-    val input = s"$dir/transcripts"
-    val modelPath = s"$dir/model"
+    val (dir, input, modelPath) = staged
     val output = s"$dir/graph"
-
-    // stage inputs: turn table + persisted model (the deploy-time shape)
-    val labeled = Transcripts.generateLabeled(spark, N).cache()
-    graft.pipeline.LabeledRow.turns(labeled)
-      .write.parquet(input)
-    NerTraining.save(NerTraining.trainModel(Transcripts.trainSplit(labeled)), spark, modelPath)
 
     // a finished job holds nothing cached: in-process callers (tests,
     // benches) would otherwise keep its tagged set and nodes alive
@@ -62,20 +67,7 @@ class KgJobSpec extends AnyFunSuite {
       s"expected pure resume, got $m2")
     assert(spark.read.parquet(s"$output/triples").count() == m1.triples)
 
-    // lose one bucket's manifest (the crash window): the next run must
-    // re-materialize exactly that bucket and leave the table identical
-    val done = GraphSink.doneBuckets(spark, output)
-    val victim = done.head
-    val fs = new org.apache.hadoop.fs.Path(output)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$output/_manifests/bucket-$victim.json"), false)
-    val m3 = KgJob.run(spark, input, modelPath, output, buckets = 8)
-    assert(m3.bucketsWritten == 1 && m3.bucketsSkipped == done.size - 1,
-      s"expected single-bucket recovery, got $m3")
-    val after = spark.read.parquet(s"$output/triples")
-      .select("conv_id", "turn_idx", "subj", "pred", "obj").collect()
-      .map(_.toSeq).sortBy(_.toString)
-    assert(after.sameElements(want), "resume changed the materialized table")
+    val fs = Commit.fs(spark, output)
 
     // an incompatible resume is refused before any work: no tagging
     // phase runs and nothing is left cached in the caller's session
@@ -141,5 +133,38 @@ class KgJobSpec extends AnyFunSuite {
       bucketDirs.forall(_.listFiles().exists(_.getName.startsWith("day="))))
     val eDay = refusedResume(output2, buckets = 8)
     assert(eDay.contains("day_partition"), eDay)
+  }
+
+  test("KgJob killed at each commit point re-runs to the clean output") {
+    val (dir, input, modelPath) = staged
+    def run(local: String) = KgJob.run(spark, input, modelPath, CrashFs.on(spark, local), buckets = 4)
+    val clean = s"$dir/killed-clean"
+    val (cleanRun, trace) = CrashFs.record(clean)(run(clean))
+    val want = Snapshot.graph(spark, clean)
+    val points = CrashFs.points(trace, Seq(
+      Kind("triples write", under("triples")),
+      Kind("manifests dir", at("mkdirs", "_manifests"), crash = false),
+      Kind("bucket manifest temp create", at("create", "_manifests/.bucket-")),
+      Kind("bucket manifest rename", at("rename", "_manifests/.bucket-")),
+      Kind("entities write", under("entities")),
+      Kind("edges write", under("edges")),
+      Kind("link-state marker withdraw", at("delete", "_linkstate/_committed.json"), crash = false),
+      Kind("link-state nodes write", under("_linkstate/nodes")),
+      Kind("link-state labels write", under("_linkstate/labels")),
+      Kind("link-state marker temp create", at("create", "_linkstate/._committed.json.tmp")),
+      Kind("link-state marker rename", at("rename", "_linkstate/._committed.json.tmp"))))
+    CrashFs.forEach(points) { (p, i) =>
+      val local = s"$dir/killed-$i"
+      CrashFs.kill(spark, local, p)(run(local))
+      // the re-run resumes: every bucket committed before the kill is
+      // skipped, and only the rest is written
+      val committed = GraphSink.doneBuckets(spark, local).size
+      val m = run(local)
+      assert(m.bucketsSkipped == committed && m.bucketsWritten + committed == cleanRun.bucketsWritten,
+        s"$p: $committed bucket(s) committed at the kill, re-run $m")
+      val got = Snapshot.graph(spark, local)
+      assert(got == want, s"$p: the re-run differs from the clean run in ${got.diff(want).mkString(", ")}")
+      assert(CrashFs.leftovers(local).isEmpty, s"$p: left ${CrashFs.leftovers(local)}")
+    }
   }
 }

@@ -2,8 +2,11 @@ package graft
 
 import graft.pipeline.{KgPipeline, NerTraining, Transcripts}
 import graft.streaming.StreamingIngest
+import graft.testkit.CrashFs.{Kind, Mutation, at, under}
+import graft.testkit.{CrashFs, Snapshot}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end gates for the streaming spark-submit entry point (VERDICT
@@ -144,7 +147,8 @@ class StreamJobSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("streamjob_crash").toString
     val input = s"$dir/drops"
     val canonDir = s"$dir/canon"
-    val output = s"$dir/out"
+    val local = s"$dir/out"
+    val output = CrashFs.on(spark, local)
 
     val labeled = Transcripts.generateLabeled(spark, N).cache()
     val model = NerTraining.trainAndBroadcast(spark, Transcripts.trainSplit(labeled))
@@ -152,77 +156,44 @@ class StreamJobSpec extends AnyFunSuite {
     val bo = KgPipeline.run(spark, all, model)
     val fullMap = KgPipeline.canonicalize(bo.nodes, bo.components).cache()
 
-    // v1: EMPTY map — both batches of run 1 resolve nothing
+    // v1: EMPTY map — every batch before the re-publish resolves nothing
     val v1 = StreamingIngest.publishCanonMap(
       fullMap.where(org.apache.spark.sql.functions.lit(false)), canonDir)
-    all.where($"conv_id" < "c0000010").coalesce(1).write.parquet(s"$input/drop1")
-    def startQuery() = StreamingIngest.sinkResolvedTriplesRefreshing(
+    def runQuery(): Unit = StreamingIngest.sinkResolvedTriplesRefreshing(
       StreamingIngest.tagStream(StreamingIngest.readTurns(spark, s"$input/drop*"), model),
-      canonDir, output)
-    val q1 = startQuery()
-    q1.processAllAvailable()
-    all.where($"conv_id" >= "c0000010").coalesce(1).write.parquet(s"$input/drop2")
-    q1.processAllAvailable()
-    q1.stop()
-    q1.awaitTermination() // fully release the checkpoint before restart
-
-    def dataBatches(): Seq[Long] = new java.io.File(s"$output/_manifests").listFiles()
-      .filter(_.getName.startsWith("stream-resolved-batch-"))
-      .map(_.getName.stripPrefix("stream-resolved-batch-").stripSuffix(".json").toLong)
-      .filter(b => spark.read.parquet(s"$output/resolved_triples/batch=$b").count() > 0)
-      .sorted.toSeq
-    val batches = dataBatches()
-    assert(batches.size >= 2, s"need two data batches, got $batches")
-    val keep = batches.init.last // stays committed
-    val victim = batches.last // crash window: data written, commit lost
-    def rows(b: Long) = spark.read.parquet(s"$output/resolved_triples/batch=$b")
-    val victimRowsBefore = rows(victim).count()
-
-    // simulate the crash BETWEEN our manifest rename and the streaming
-    // commit... strongest variant: BOTH the sink manifest and the
-    // streaming commit marker for the last batch are lost, so the
-    // restarted query replays batchId=victim and the sink rewrites it
-    assert(new java.io.File(s"$output/_manifests/stream-resolved-batch-$victim.json").delete())
-    // rewind the streaming commit log to BEFORE the victim: every commit
-    // marker >= victim goes (a no-data micro-batch may have committed
-    // after the last data batch; leaving its marker would stop the
-    // replay — the log's latest id is what restart resumes from). The
-    // offsets log stays, so the replayed batches carry identical data.
-    // (each marker's Hadoop local-FS `.N.crc` shadow must go with it, or
-    // the re-commit's rename fails as already-exists)
-    def trimLog(dir: String, keepBelow: Long): Unit = {
-      val d = new java.io.File(s"$output/_checkpoint_resolved/$dir")
-      for (f <- d.listFiles()
-           if f.getName.forall(_.isDigit) && f.getName.toLong >= keepBelow) {
-        assert(f.delete(), s"could not delete $f")
-        val crc = new java.io.File(d, s".${f.getName}.crc")
-        if (crc.exists()) crc.delete()
-      }
+      canonDir, output, Some(Trigger.AvailableNow())).awaitTermination()
+    def manifest(b: Long): String = {
+      val src = scala.io.Source.fromFile(s"$local/_manifests/stream-resolved-batch-$b.json")
+      try src.mkString finally src.close()
     }
-    trimLog("commits", victim)
-    // Spark 4 validates offsets-latest == commits-latest (+1): trim the
-    // offsets log past the victim too, leaving exactly the in-flight
-    // batch (offsets present, commit missing) a real crash would leave
-    trimLog("offsets", victim + 1)
+    def committed(): Set[Long] = new java.io.File(s"$local/_manifests").list().toSet
+      .filter(_.startsWith("stream-resolved-batch-"))
+      .map((n: String) => n.stripPrefix("stream-resolved-batch-").stripSuffix(".json").toLong)
+    def rows(b: Long) = spark.read.parquet(s"$output/resolved_triples/batch=$b")
+
+    all.where($"conv_id" < "c0000010").coalesce(1).write.parquet(s"$input/drop1")
+    runQuery()
+    val keep = committed().filterNot(b => manifest(b).contains(""""rows":0""")).max
+    // the next drop's batch is killed after its data is written, before
+    // its manifest commits: neither the sink nor Spark's commit log holds it
+    all.where($"conv_id" >= "c0000010").coalesce(1).write.parquet(s"$input/drop2")
+    CrashFs.kill(spark, local,
+      CrashFs.Point("stream manifest temp create", at("create", "_manifests/.stream-resolved-batch-")))(
+      runQuery())
+    val victim = new java.io.File(s"$local/resolved_triples").list()
+      .map(_.stripPrefix("batch=").toLong).toSet.diff(committed()).toSeq match {
+        case Seq(b) => b
+        case bs => fail(s"expected one uncommitted batch directory, got $bs")
+      }
+    val victimRowsBefore = rows(victim).count()
+    assert(victimRowsBefore > 0, "the killed batch wrote no rows")
 
     // the canonical map grew between crash and restart (the documented
     // refresh deploy shape): the REPLAYED batch must resolve against v2
     // wholesale, while the still-committed batch keeps its v1 result
     val v2 = StreamingIngest.publishCanonMap(fullMap, canonDir)
     assert(v2 != v1)
-    // the replayed batch re-commits an ALREADY-EXISTING dedup-state
-    // version (the exact on-disk shape a crash after the state commit
-    // leaves); Spark 4's per-batch state-commit count validation flags
-    // that re-commit on the local checksum FS, so it is disabled for the
-    // restarted query — the exactly-once property under test is the
-    // SINK's (manifest protocol), not the state store's bookkeeping
-    spark.conf.set("spark.sql.streaming.stateStore.commitValidation.enabled", "false")
-    try {
-      val q2 = startQuery()
-      q2.processAllAvailable()
-      q2.stop()
-      q2.awaitTermination()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.commitValidation.enabled")
+    runQuery()
 
     assert(rows(victim).count() == victimRowsBefore,
       "replayed batch duplicated or dropped rows")
@@ -230,12 +201,66 @@ class StreamJobSpec extends AnyFunSuite {
       "replayed batch must be re-resolved under the refreshed map")
     assert(rows(keep).where(col("subj_id").isNotNull).count() == 0,
       "a committed batch must NOT be rewritten by the replay")
-    def manifest(b: Long): String = {
-      val src = scala.io.Source.fromFile(s"$output/_manifests/stream-resolved-batch-$b.json")
-      try src.mkString finally src.close()
-    }
     assert(manifest(victim).contains(s""""canon_version":"$v2""""), manifest(victim))
     assert(manifest(keep).contains(s""""canon_version":"$v1""""), manifest(keep))
+  }
+
+  test("StreamJob --once killed at each commit point restarts to the clean output") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("streamjob_kill").toString
+    val modelPath = s"$dir/model"
+    val canonDir = s"$dir/canon"
+    val local = s"$dir/out"
+    val out = CrashFs.on(spark, local)
+    val labeled = Transcripts.generateLabeled(spark, N).cache()
+    NerTraining.save(NerTraining.trainModel(Transcripts.trainSplit(labeled)), spark, modelPath)
+    val all = Transcripts.generate(spark, N).cache()
+    all.coalesce(1).write.parquet(s"$dir/drops/drop1")
+    val model = spark.sparkContext.broadcast(NerTraining.load(spark, modelPath))
+    val bo = KgPipeline.run(spark, all, model)
+    StreamingIngest.publishCanonMap(KgPipeline.canonicalize(bo.nodes, bo.components), canonDir)
+    def run(): Unit =
+      StreamJob.run(spark, s"$dir/drops/drop*", modelPath, canonDir, out, once = true).awaitTermination()
+
+    val (_, trace) = CrashFs.record(local)(run())
+    val want = Snapshot.stream(spark, local)
+    val ck = "_checkpoint_resolved"
+    def log(name: String): Mutation => Boolean = m => m.op != "mkdirs" && m.path.startsWith(s"$ck/$name/")
+    val points = CrashFs.points(trace, Seq(
+      Kind("offset log entry", log("offsets")),
+      Kind("file-source log entry", log("sources")),
+      Kind("state store delta", m => m.op != "mkdirs" && m.path.matches(s"$ck/state/\\d+/\\d+/\\..*")),
+      Kind("commit log entry", log("commits")),
+      Kind("checkpoint metadata", under(ck), crash = false),
+      Kind("batch write", under("resolved_triples")),
+      Kind("manifests dir", at("mkdirs", "_manifests"), crash = false),
+      Kind("stream manifest temp create", at("create", "_manifests/.stream-resolved-batch-")),
+      Kind("stream manifest rename", at("rename", "_manifests/.stream-resolved-batch-"))))
+    assert(points.exists(_.label == "first stream manifest rename"), points)
+    for (p <- points) {
+      CrashFs.reset(local)
+      CrashFs.kill(spark, local, p)(run())
+      run()
+      val got = Snapshot.stream(spark, local)
+      assert(got == want, s"$p: the restart differs from the clean run in ${got.diff(want).mkString(", ")}")
+      // a killed query's own checkpoint temp files stay behind; Spark
+      // never reads them, and they are not the program's to clean
+      val left = CrashFs.leftovers(local).filterNot(_.startsWith(s"$local/$ck/"))
+      assert(left.isEmpty, s"$p: left $left")
+    }
+  }
+
+  test("a canonical map without its _canon_version marker is refused, naming the publisher") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("streamjob_canon").toString
+    // written straight to parquet, and a directory that does not exist
+    Seq(("acme", "ORG", 1L, "acme")).toDF("norm", "tag", "entity_id", "canonical_norm")
+      .write.parquet(s"$dir/unpublished")
+    for (canonDir <- Seq(s"$dir/unpublished", s"$dir/absent")) {
+      val e = intercept[IllegalArgumentException](StreamingIngest.canonSnapshotVersion(spark, canonDir))
+      assert(e.getMessage.contains(s"$canonDir/_canon_version") &&
+        e.getMessage.contains("StreamingIngest.publishCanonMap"), e.getMessage)
+    }
   }
 
   test("StreamJob writes its checkpoint through the FileSystem manager, scoped to its query") {

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import graft.testkit.CrashFs
+import graft.testkit.CrashFs.{Kind, at}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,17 +42,33 @@ class DurableCcSpec extends AnyFunSuite {
       .where(col("ca").isNull || col("cb").isNull || col("ca") =!= col("cb"))
       .count()
 
+  /** A fresh checkpoint directory: its local path and its `crashfs:` URI. */
+  private def ccDir(): (String, String) = {
+    val local = Files.createTempDirectory("cc_spec_").toString
+    (local, CrashFs.on(spark, local))
+  }
+
+  /** Runs the durable loop into `local` (its URI `dir`), killed right after `point`. */
+  private def killedAt(nodes: DataFrame, edges: DataFrame, local: String, dir: String,
+      point: CrashFs.Point): Unit =
+    CrashFs.kill(spark, local, point)(KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir))
+
+  /** The prune of iteration `k`'s marker, the last mutation iteration k+1 makes. */
+  private def prunedMarker(k: Int) = CrashFs.Point(s"prune iter-$k marker",
+    m => m.op == "delete" && m.path == s"iter-$k.done.json")
+
+  /** The rename that commits iteration `k`'s marker. */
+  private def committedMarker(k: Int) = CrashFs.Point(s"iter-$k marker rename",
+    m => m.op == "rename" && m.to == s"iter-$k.done.json")
+
   test("crash after iteration 2 resumes from the committed frontier, not iteration 0") {
     val (nodes, edges) = chainGraph()
-    val dir = Files.createTempDirectory("cc_spec_").toString
+    val (local, dir) = ccDir()
 
-    val crashed = intercept[RuntimeException] {
-      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir, failAfterIters = 2)
-    }
-    assert(crashed.getMessage.contains("injected crash"))
+    killedAt(nodes, edges, local, dir, prunedMarker(1))
     // iteration 2 is committed on disk; iteration 1 was pruned
-    assert(new java.io.File(s"$dir/iter-2.done.json").exists())
-    assert(!new java.io.File(s"$dir/iter-1.done.json").exists())
+    assert(new java.io.File(s"$local/iter-2.done.json").exists())
+    assert(!new java.io.File(s"$local/iter-1.done.json").exists())
 
     val resumed = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
     assert(KgPipeline.lastResumedFrom == 2,
@@ -76,31 +94,24 @@ class DurableCcSpec extends AnyFunSuite {
 
   test("resume sweeps a frontier stranded by a crash in the commit-then-prune window") {
     val (nodes, edges) = chainGraph()
-    val dir = Files.createTempDirectory("cc_spec_").toString
-    intercept[RuntimeException] {
-      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir, failAfterIters = 3)
-    }
-    // recreate the crash-in-window state: iter-2 marker + dir survive
-    // alongside the committed iter-3 (the crash landed between iter-3's
-    // marker rename and iter-2's prune)
-    val iter3 = java.nio.file.Path.of(s"$dir/iter-3.done.json")
-    val stale = Files.readString(iter3).replace("\"iter\":3", "\"iter\":2")
-    Files.writeString(java.nio.file.Path.of(s"$dir/iter-2.done.json"), stale)
-    Files.createDirectories(java.nio.file.Path.of(s"$dir/iter-2"))
+    val (local, dir) = ccDir()
+    // the crash lands between iter-3's marker rename and iter-2's prune:
+    // iter-2's marker and frontier survive alongside the committed iter-3
+    killedAt(nodes, edges, local, dir, committedMarker(3))
+    assert(new java.io.File(s"$local/iter-2.done.json").exists() &&
+      new java.io.File(s"$local/iter-2").isDirectory, "the crash must strand iteration 2")
 
     val resumed = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
     assert(KgPipeline.lastResumedFrom == 3, "must resume from the max committed iteration")
-    assert(!new java.io.File(s"$dir/iter-2.done.json").exists(), "stale marker must be swept")
-    assert(!new java.io.File(s"$dir/iter-2").exists(), "stale frontier dir must be swept")
+    assert(!new java.io.File(s"$local/iter-2.done.json").exists(), "stale marker must be swept")
+    assert(!new java.io.File(s"$local/iter-2").exists(), "stale frontier dir must be swept")
     assert(mismatches(resumed, KgPipeline.connectedComponentsLoop(nodes, edges)) == 0)
   }
 
   test("resuming a checkpoint against a different node set fails loudly") {
     val (nodes, edges) = chainGraph()
-    val dir = Files.createTempDirectory("cc_spec_").toString
-    intercept[RuntimeException] {
-      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir, failAfterIters = 1)
-    }
+    val (local, dir) = ccDir()
+    killedAt(nodes, edges, local, dir, committedMarker(1))
     val (otherNodes, otherEdges) = chainGraph(150)
     val e = intercept[IllegalArgumentException] {
       KgPipeline.connectedComponentsLoopDurable(otherNodes, otherEdges, dir)
@@ -110,10 +121,8 @@ class DurableCcSpec extends AnyFunSuite {
 
   test("a committed marker with a missing field fails loudly, naming the file") {
     val (nodes, edges) = chainGraph()
-    val dir = Files.createTempDirectory("cc_spec_").toString
-    intercept[RuntimeException] {
-      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir, failAfterIters = 2)
-    }
+    val (local, dir) = ccDir()
+    killedAt(nodes, edges, local, dir, prunedMarker(1))
     // a marker without its node-set fingerprint: skipping it would also
     // skip the node-set guard and restart or resume unchecked
     val f = Commit.fs(spark, dir)
@@ -126,5 +135,36 @@ class DurableCcSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("iter-2.done.json") && e.getMessage.contains("nodes_fp"),
       e.getMessage)
+  }
+
+  test("killed at each commit point, the loop resumes from its last committed iteration to the clean labels") {
+    val (nodes, edges) = chainGraph()
+    val (clean, _) = ccDir()
+    def run(local: String) = KgPipeline.connectedComponentsLoopDurable(nodes, edges, CrashFs.on(spark, local))
+    val (labels, trace) = CrashFs.record(clean)(run(clean))
+    val want = labels.collect().toSet
+    val points = CrashFs.points(trace, Seq(
+      Kind("frontier prune", m => m.op == "delete" && m.path.matches("iter-\\d+")),
+      Kind("frontier write", m => m.path.matches("iter-\\d+(/.*)?")),
+      Kind("marker temp create", at("create", ".iter-")),
+      Kind("marker rename", at("rename", ".iter-")),
+      Kind("marker prune", m => m.op == "delete" && m.path.matches("iter-\\d+\\.done\\.json"))))
+    def iterations(dir: String, suffix: String) = new java.io.File(dir).list().toSeq
+      .filter(n => n.startsWith("iter-") && n.endsWith(suffix))
+      .map(_.stripPrefix("iter-").stripSuffix(suffix).toInt)
+    val converged = iterations(clean, ".done.json").max
+    val frontier = "iter-(\\d+)/.*".r
+    CrashFs.forEach(points) { (p, i) =>
+      val local = Files.createTempDirectory("cc_kill_").toString
+      CrashFs.kill(spark, local, p)(run(local))
+      val committed = iterations(local, ".done.json").maxOption.getOrElse(0)
+      val (resumed, rerun) = CrashFs.record(local)(run(local))
+      // the resume writes the iterations after the last committed one, and only those
+      val written = rerun.collect { case CrashFs.Mutation(_, frontier(k), _) => k.toInt }.distinct
+      assert(written == (committed + 1 to converged), s"$p: committed $committed, re-run wrote $written")
+      assert(resumed.collect().toSet == want, s"$p: resumed labels diverged from the clean run")
+      assert(iterations(local, ".done.json") == Seq(converged), s"$p: committed frontiers left")
+      assert(CrashFs.leftovers(local).isEmpty, s"$p: left ${CrashFs.leftovers(local)}")
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.testkit.CrashFs
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * parquet commit but BEFORE its manifest rename must NOT duplicate that
   * bucket's rows on resume. With dynamic partition overwrite the
   * re-written bucket REPLACES the stale files, so resumed output equals
-  * a clean one-shot write exactly.
+  * a clean one-shot write exactly. The crashes are real: the sink writes
+  * through [[CrashFs]], killed at its first manifest rename.
   */
 class GraphSinkCrashSpec extends AnyFunSuite {
 
@@ -29,36 +31,40 @@ class GraphSinkCrashSpec extends AnyFunSuite {
     }.toDF("conv_id", "turn_idx", "ts", "subj", "pred", "obj")
   }
 
+  /** The sink killed after its data commit, at its first manifest rename:
+    * one bucket committed, the others written but not manifested. */
+  private def killedAtFirstManifest(triples: DataFrame, local: String, dayPartition: Boolean): Unit =
+    CrashFs.kill(spark, local, CrashFs.Point("first bucket manifest rename",
+      CrashFs.at("rename", "_manifests/.bucket-")))(
+      GraphSink.writeTriples(spark, triples, CrashFs.on(spark, local), 8, dayPartition))
+
+  private def committedBuckets(local: String): Set[Int] =
+    new java.io.File(s"$local/_manifests").list().toSet.filter(_.startsWith("bucket-"))
+      .map((n: String) => n.stripPrefix("bucket-").stripSuffix(".json").toInt)
+
   test("resume after crash between data commit and manifest rename does not duplicate rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_crash").toString
+    val local = java.nio.file.Files.createTempDirectory("graft_sink_crash").toString
+    val dir = CrashFs.on(spark, local)
     val triples = sampleTriples()
     val nBuckets = 8
-
-    // full write (all manifests committed)
-    GraphSink.writeTriples(spark, triples, dir, nBuckets)
-    val clean = spark.read.parquet(s"$dir/triples")
+    val clean = GraphSink.bucketed(triples, nBuckets)
       .groupBy(col("conv_bucket")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
-    // simulate the crash window: bucket data IS committed, manifest is NOT
-    val manifests = new java.io.File(s"$dir/_manifests").listFiles()
-      .filter(_.getName.startsWith("bucket-")).sortBy(_.getName)
-    val victim = manifests.head
-    val victimBucket = victim.getName.stripPrefix("bucket-").stripSuffix(".json").toInt
-    assert(victim.delete())
-
-    // resume: bucket `victimBucket` is pending again and gets re-written
-    GraphSink.writeTriples(spark, triples, dir, nBuckets)
+    killedAtFirstManifest(triples, local, dayPartition = false)
+    assert(committedBuckets(local).size == 1)
+    // resume: the written but unmanifested buckets are pending again and re-written
+    val m = GraphSink.writeTriples(spark, triples, dir, nBuckets)
+    assert(m.buckets == nBuckets - 1 && m.skippedBuckets == 1, m)
 
     val resumed = spark.read.parquet(s"$dir/triples")
       .groupBy(col("conv_bucket")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(resumed == clean,
-      s"resume duplicated rows: victim=$victimBucket clean=$clean resumed=$resumed")
-    // manifest restored and row count correct
-    val m = spark.read.json(s"$dir/_manifests")
-      .where(col("bucket") === victimBucket).select(col("rows")).first().getLong(0)
-    assert(m == clean(victimBucket))
+    assert(resumed == clean, s"resume duplicated rows: clean=$clean resumed=$resumed")
+    // every manifest committed, each with its bucket's row count
+    val manifested = spark.read.json(s"$dir/_manifests").select(col("bucket"), col("rows"))
+      .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    assert(manifested == clean)
   }
 
   test("every bucket manifest is read strictly: damaging any one refuses the resume, naming it") {
@@ -119,18 +125,15 @@ class GraphSinkCrashSpec extends AnyFunSuite {
   }
 
   test("day layout: drifted resume of a pending bucket leaves no stale day dirs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_drift").toString
+    val local = java.nio.file.Files.createTempDirectory("graft_sink_drift").toString
+    val dir = CrashFs.on(spark, local)
     // 3-day spread so each bucket holds several day dirs
     val triples = sampleTriples()
       .withColumn("ts",
         expr("timestamp_millis(1700000000000 + CAST(turn_idx AS BIGINT) * 43200000)"))
-    GraphSink.writeTriples(spark, triples, dir, 8, dayPartition = true)
-
-    // crash window: one bucket's data committed, manifest lost
-    val victim = new java.io.File(s"$dir/_manifests").listFiles()
-      .filter(_.getName.startsWith("bucket-")).map(_.getName)
-      .map(_.stripPrefix("bucket-").stripSuffix(".json").toInt).min
-    assert(new java.io.File(s"$dir/_manifests/bucket-$victim.json").delete())
+    // crash window: the data of every bucket committed, one manifest
+    killedAtFirstManifest(triples, local, dayPartition = true)
+    val victim = ((0 until 8).toSet -- committedBuckets(local)).min
 
     // the resumed run sees DRIFTED input (ts shifted +30 days — a day
     // set disjoint from the crashed run's). ADVICE r4: dynamic overwrite
@@ -146,7 +149,7 @@ class GraphSinkCrashSpec extends AnyFunSuite {
       .where(col("conv_bucket") === victim)
       .select(GraphSink.utcDay(col("ts")).cast("string")).distinct()
       .collect().map(_.getString(0)).toSet
-    val onDisk = new java.io.File(s"$dir/triples/conv_bucket=$victim").listFiles()
+    val onDisk = new java.io.File(s"$local/triples/conv_bucket=$victim").listFiles()
       .filter(_.getName.startsWith("day=")).map(_.getName.stripPrefix("day=")).toSet
     assert(oldDays.nonEmpty && onDisk.intersect(oldDays).isEmpty,
       s"stale pre-drift day dirs survived the resume: ${onDisk.intersect(oldDays)}")
