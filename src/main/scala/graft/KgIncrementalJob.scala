@@ -25,9 +25,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *      plus buckets containing a changed surface — every other bucket
   *      (the overwhelming majority, once the graph matures) keeps its
   *      committed data and manifest untouched;
-  *   4. update edges by EXACT delta arithmetic (old − affected-rows'
-  *      old-canon contribution + rewritten-rows' new-canon
-  *      contribution) instead of re-aggregating the whole table;
+  *   4. update edges by one signed sum over stored rows (old − the
+  *      affected rows' stored contribution + the rewritten rows'), with
+  *      no re-aggregation of the whole table;
   *   5. entities and link state are alias-scale — rewritten outright.
   *
   * Crash safety follows the repo's one protocol (stage → commit marker
@@ -149,8 +149,6 @@ object KgIncrementalJob {
 
     // ---- fresh path
     // no marker.json ⇒ no live mutation happened; any leftover staging
-    // (including a durable-CC frontier from a pre-marker crash of a
-    // DIFFERENT batch, which would trip the node-set fingerprint guard)
     // is safe to discard
     if (exists(incr)) f.delete(new Path(incr), true)
     val st = GraphSink.readLinkState(spark, s"$output/_linkstate").getOrElse(
@@ -175,8 +173,7 @@ object KgIncrementalJob {
     val mentions = KgPipeline.mentionRows(tagged)
     val newRaw = KgPipeline.tripleRows(tagged).select(RAW.map(col): _*)
 
-    val inc = KgPipeline.incrementalLink(st.nodes, st.labels, mentions,
-      ccCheckpointDir = Some(s"$incr/_cc_checkpoints"))
+    val inc = KgPipeline.incrementalLink(st.nodes, st.labels, mentions)
     // stage the merged link state FIRST and re-read it: every later
     // stage consumes the STAGED copy, so the tail never depends on the
     // live _linkstate/edges/triples dirs it is about to mutate
@@ -186,43 +183,40 @@ object KgIncrementalJob {
     val canonNew = KgPipeline.canonicalize(staged.nodes, staged.labels).cache()
     val canonOld = KgPipeline.canonicalize(st.nodes, st.labels)
 
-    // surfaces whose entity assignment changed — their old triples are
-    // stale; everything else's resolution is provably unchanged
+    // surfaces whose entity assignment changed, by their OLD entity id:
+    // everything else's resolution is provably unchanged
     val changed = canonOld.select($"norm", $"tag", $"entity_id".as("old_id"))
       .join(canonNew.select($"norm", $"tag", $"entity_id"), Seq("norm", "tag"))
       .where($"old_id" =!= $"entity_id")
-      .select($"norm", $"tag").cache()
+      .select($"old_id").cache()
     val nChanged = changed.count()
     phase("tag_link_diff")
 
     // bucket set to rewrite: new convs' buckets + buckets holding a
-    // changed surface. The changed-surface probe is the apply's ONLY
-    // corpus-proportional cost, so (a) it is SKIPPED outright in the
-    // common mature-graph case (no surface changed assignment), and
-    // (b) when it must run, both triple endpoints are checked in ONE
-    // column-pruned scan (exploded (norm, tag) pairs semi-joined against
-    // the broadcast merge-event-sized `changed` set), not one scan each
+    // changed surface, found by the STORED ids of both endpoints (an
+    // object can be a node its conv never mentions) in one column-pruned
+    // scan against the broadcast `changed` set. An old entity changes
+    // whole (components only merge), so its stored id finds every stale
+    // row. The scan is the apply's only corpus-proportional cost, and is
+    // skipped when no surface changed assignment
     val oldTriples = spark.read.parquet(s"$output/triples")
-    import graft.functions.NativeFunctions.normalize_surface
     val newBucketsDf = turns.toDF()
       .select(pmod(xxhash64($"conv_id"), lit(layout.nBuckets)).cast("int").as("conv_bucket"))
     val changedBuckets =
       if (nChanged == 0) spark.emptyDataset[Int].toDF("conv_bucket")
       else oldTriples
-        .select($"conv_bucket", explode(array(
-          struct(normalize_surface($"subj").as("n"), $"subj_tag".as("t")),
-          struct(normalize_surface($"obj").as("n"), $"obj_tag".as("t")))).as("e"))
-        .select($"conv_bucket".cast("int").as("conv_bucket"), $"e.n", $"e.t")
-        .join(broadcast(changed.toDF("n", "t")), Seq("n", "t"), "left_semi")
+        .select($"conv_bucket".cast("int").as("conv_bucket"),
+          explode(array($"subj_id", $"obj_id")).as("old_id"))
+        .join(broadcast(changed), Seq("old_id"), "left_semi")
         .select($"conv_bucket")
     val bucketsB = changedBuckets
       .unionByName(newBucketsDf)
       .distinct().as[Int].collect().toSeq.sorted
     phase("bucket_select")
 
-    // the affected buckets' rows come from the live table: nothing live
-    // changes before the marker
-    val affected = oldTriples.where($"conv_bucket".isin(bucketsB: _*)).select(RAW.map(col): _*)
+    // the affected buckets' rows as stored in the live table: nothing
+    // live changes before the marker
+    val affected = oldTriples.where($"conv_bucket".isin(bucketsB: _*))
     // conv-disjointness guard — complete, because an overlapping conv's
     // bucket is in B by construction, so its old rows are in `affected`
     val overlap = affected.select($"conv_id")
@@ -234,23 +228,18 @@ object KgIncrementalJob {
     // stage the bucket rewrite: every row the affected buckets will hold,
     // resolved against the new map. It feeds BOTH the added-edges term and
     // the rewrite, and lets a recovery roll forward without re-tagging
-    KgPipeline.resolveTriples(affected.unionByName(newRaw), canonNew)
+    KgPipeline.resolveTriples(affected.select(RAW.map(col): _*).unionByName(newRaw), canonNew)
       .write.mode(SaveMode.Overwrite).parquet(s"$incr/rewrite")
     val rewrite = spark.read.parquet(s"$incr/rewrite")
     phase("guard_stage_rewrite")
 
-    // delta-merged edges, staged (reads prior edges BEFORE any mutation)
-    val oldE = spark.read.parquet(s"$output/edges")
-      .select($"src", $"dst", $"pred", $"weight".as("w_old"))
-    val removed = KgPipeline.edgesTable(KgPipeline.resolveTriples(affected, canonOld))
-      .select($"src", $"dst", $"pred", $"weight".as("w_rm"))
-    val added = KgPipeline.edgesTable(rewrite)
-      .select($"src", $"dst", $"pred", $"weight".as("w_add"))
-    oldE.join(removed, Seq("src", "dst", "pred"), "full_outer")
-      .join(added, Seq("src", "dst", "pred"), "full_outer")
-      .select($"src", $"dst", $"pred",
-        (coalesce($"w_old", lit(0.0)) - coalesce($"w_rm", lit(0.0))
-          + coalesce($"w_add", lit(0.0))).as("weight"))
+    // edges by one signed sum, staged before any mutation: live weights
+    // count the live rows' stored ids, so subtracting the affected rows'
+    // stored contribution removes exactly what they added
+    spark.read.parquet(s"$output/edges")
+      .unionByName(KgPipeline.edgesTable(affected).withColumn("weight", -$"weight"))
+      .unionByName(KgPipeline.edgesTable(rewrite))
+      .groupBy($"src", $"dst", $"pred").agg(sum($"weight").as("weight"))
       .where($"weight" > 0)
       .write.mode(SaveMode.Overwrite).partitionBy("pred").parquet(s"$incr/edges_new")
     val nNewTriples = newRaw.count()

@@ -1,7 +1,9 @@
 package graft
 
-import graft.pipeline.NerTraining
+import graft.pipeline.{Commit, NerTraining}
 import graft.streaming.StreamingIngest
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.sum
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
@@ -58,17 +60,18 @@ object StreamJob {
       .getOrCreate()
     val q = run(spark, input, modelPath, canonDir, output, watermark, once)
     q.awaitTermination()
-    if (once) {
-      // bounded run finished: report what the manifests committed — the
-      // same observability contract as KgJob's one-line JSON
-      val m = spark.read.json(s"$output/_manifests")
-      val agg = m.agg(
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.sum("rows")).collect()(0)
-      println(s"""{"job":"kg_stream","batches":${agg.getLong(0)},""" +
-        s""""rows":${if (agg.isNullAt(1)) 0L else agg.getLong(1)}}""")
-    }
+    if (once) println(onceReport(spark, output))
     spark.stop()
+  }
+
+  /** The `--once` JSON line, from what the manifests committed (none
+    * for an input with no files). */
+  def onceReport(spark: SparkSession, output: String): String = {
+    val manifests = Option(Commit.fs(spark, output).globStatus(new Path(s"$output/_manifests/*.json")))
+      .toSeq.flatten.map(_.getPath.toString)
+    val rows = if (manifests.isEmpty) 0L
+      else spark.read.json(manifests: _*).agg(sum("rows")).first().getLong(0)
+    s"""{"job":"kg_stream","batches":${manifests.size},"rows":$rows}"""
   }
 
   /** The job body, callable from tests with an existing session. */

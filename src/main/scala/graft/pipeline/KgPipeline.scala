@@ -541,6 +541,7 @@ object KgPipeline {
     *      nodes, so the final labels are IDENTICAL to a full recompute
     *      (gated by SparkParitySpec/KgIncrementalSpec and by the
     *      kg_incr_entities oracle, which re-derives the full-run answer).
+    *      CC keeps no durable frontier: a failed apply re-links anyway.
     *
     * Monotonicity caveat (documented semantics, not a bug): if new
     * surfaces push a block PAST the overflow cap, the full recompute
@@ -553,13 +554,13 @@ object KgPipeline {
       priorNodes: DataFrame,
       priorLabels: DataFrame,
       newMentions: DataFrame,
-      maxBlock: Int = MAX_BLOCK_SIZE,
-      ccCheckpointDir: Option[String] = None): IncrementalLink = {
+      maxBlock: Int = MAX_BLOCK_SIZE): IncrementalLink = {
     // both node tables are alias-scale but their lineage (explode +
     // two-level groupBy over the mention stream) is re-executed by every
     // downstream reference — merged alone feeds blockKeyed twice and the
     // pair self-join twice. localCheckpoint materializes each ONCE and
-    // cuts the lineage (no exchange exists for Spark to reuse here)
+    // cuts the lineage (no exchange exists for Spark to reuse here);
+    // `proj` likewise, since connectedComponents runs three actions on it
     val newNodes = surfaceNodes(newMentions).localCheckpoint()
     val merged = mergeNodes(priorNodes, newNodes).localCheckpoint()
     // surfaces first seen in this batch. Left-anti on the prior ALIAS
@@ -583,12 +584,13 @@ object KgPipeline {
         coalesce(col("dst_c"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
+      .localCheckpoint()
     // CC over the touched super-nodes only; everything untouched keeps
     // its prior label (isolated super-nodes are fixed points of
     // min-label propagation, so skipping them changes nothing)
     val touched = proj.select(col("src").as("node_id"))
       .unionByName(proj.select(col("dst").as("node_id"))).distinct()
-    val ccLabels = connectedComponents(touched, proj, ccCheckpointDir)
+    val ccLabels = connectedComponents(touched, proj)
     val oldFinal = priorLabels.select(col("node_id"), col("component"))
       .join(ccLabels.toDF("component", "new_c"), Seq("component"), "left")
       .select(col("node_id"), coalesce(col("new_c"), col("component")).as("component"))

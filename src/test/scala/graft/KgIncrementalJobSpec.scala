@@ -1,10 +1,10 @@
 package graft
 
-import graft.pipeline.{Commit, GraphSink, NerTraining, Records, Transcripts}
+import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining, Records, Transcripts}
 import graft.testkit.CrashFs.{Kind, Mutation, at, under}
 import graft.testkit.{CrashFs, Snapshot}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end gates for the incremental maintenance job: applying
@@ -59,6 +59,17 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     assert(diff.isEmpty, s"$what: ${diff.mkString(", ")} diverged")
   }
 
+  /** Live edges are the edge table of the live triples, weight for
+    * weight: the invariant the apply's signed edge sum keeps. */
+  private def assertEdgesOfTriples(output: String, what: String): Unit = {
+    def rows(df: DataFrame): Seq[String] =
+      df.select("src", "dst", "pred", "weight").collect().map(_.mkString("\u0001")).toSeq.sorted
+    val live = rows(spark.read.parquet(s"$output/edges"))
+    val derived = rows(KgPipeline.edgesTable(spark.read.parquet(s"$output/triples")))
+    assert(live == derived, s"$what: ${live.size} live edges, ${derived.size} from the live " +
+      s"triples; live-only ${live.diff(derived).take(3)}, derived-only ${derived.diff(live).take(3)}")
+  }
+
   private def bucketFiles(output: String, buckets: Set[Int]): Map[Int, Set[String]] =
     buckets.map { b =>
       val d = new java.io.File(s"$output/triples/conv_bucket=$b")
@@ -83,6 +94,7 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     val doneBefore = GraphSink.doneBuckets(spark, out)
     val filesBefore = bucketFiles(out, doneBefore)
     val m = KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
+    assertEdgesOfTriples(out, "A+B")
     assert(m.newTurns > 0 && m.newTriples > 0 && m.changedSurfaces > 0,
       s"batch B must add turns and trigger at least one entity merge, got $m")
     assert(m.untouchedBuckets > 0,
@@ -143,6 +155,7 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     }
     assert(eD.getMessage.contains("already applied"), eD.getMessage)
     assert(CrashFs.leftovers(local).isEmpty, s"a finished apply left ${CrashFs.leftovers(local)}")
+    assertEdgesOfTriples(local, "A2+B+C+D after kills")
 
     val want = s"$dir/g2_full"
     KgJob.run(spark, s"$dir/in_abc", model, want, buckets = 8)
@@ -159,7 +172,9 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     val out = s"$dir/g3"
     KgJob.run(spark, s"$dir/in_a", model, out, buckets = 8)
     KgIncrementalJob.run(spark, out, s"$dir/in_c", model)
+    assertEdgesOfTriples(out, "A then C")
     KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
+    assertEdgesOfTriples(out, "A then C then B")
     val want = s"$dir/g3_full"
     KgJob.run(spark, s"$dir/in_abc", model, want, buckets = 8)
     assertGraphsEqual(out, want, "A then C then B vs full A+B+C")
@@ -272,6 +287,7 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     CrashFs.reset(clean, Some(prior))
     val (_, trace) = CrashFs.record(clean)(run(clean))
     val want = Snapshot.graph(spark, clean)
+    assertEdgesOfTriples(clean, "clean apply")
     val wantLedger = ledger(clean)
     val token = wantLedger.last
 
@@ -326,6 +342,7 @@ class KgIncrementalJobSpec extends AnyFunSuite {
       } else run(local)
       val got = Snapshot.graph(spark, local)
       assert(got == want, s"$p: the re-run differs from the clean apply in ${got.diff(want).mkString(", ")}")
+      assertEdgesOfTriples(local, p.toString)
       assert(ledger(local) == wantLedger && ledger(local).count(_ == token) == 1,
         s"$p: ledger ${ledger(local)}, clean ledger $wantLedger")
       assert(CrashFs.leftovers(local).isEmpty, s"$p: left ${CrashFs.leftovers(local)}")

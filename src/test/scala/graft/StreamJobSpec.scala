@@ -73,6 +73,24 @@ class StreamJobSpec extends AnyFunSuite {
     val manifests = new java.io.File(s"$output/_manifests").listFiles()
       .filter(_.getName.startsWith("stream-resolved-batch-"))
     assert(manifests.length >= 2, s"expected >=2 committed batches, got ${manifests.length}")
+    assert(StreamJob.onceReport(spark, output) ==
+      s"""{"job":"kg_stream","batches":${manifests.length},"rows":${want.count()}}""")
+  }
+
+  test("StreamJob --once over a drop directory with no files reports zero batches") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("streamjob_empty").toString
+    val modelPath = s"$dir/model"
+    val canonDir = s"$dir/canon"
+    val output = s"$dir/out"
+    val labeled = Transcripts.generateLabeled(spark, N).cache()
+    NerTraining.save(NerTraining.trainModel(Transcripts.trainSplit(labeled)), spark, modelPath)
+    StreamingIngest.publishCanonMap(Seq(("acme", "ORG", 1L, "acme"))
+      .toDF("norm", "tag", "entity_id", "canonical_norm"), canonDir)
+    new java.io.File(s"$dir/drops").mkdirs()
+    StreamJob.run(spark, s"$dir/drops", modelPath, canonDir, output, once = true).awaitTermination()
+    assert(!new java.io.File(s"$output/_manifests").exists(), "an empty input committed a manifest")
+    assert(StreamJob.onceReport(spark, output) == """{"job":"kg_stream","batches":0,"rows":0}""")
   }
 
   test("canonical-map re-publish is picked up between batches without restart") {

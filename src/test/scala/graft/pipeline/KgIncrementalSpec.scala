@@ -1,6 +1,10 @@
 package graft.pipeline
 
+import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -99,6 +103,38 @@ class KgIncrementalSpec extends AnyFunSuite {
       .select(countDistinct(col("entity_id"))).head().getLong(0) == 1L,
       "the bridge must collapse all three surfaces into one entity")
     assertFrameEqual(inc.nodes, fn, "bridge-merge nodes")
+  }
+
+  test("incrementalLink runs its candidate-pair plan once") {
+    // connectedComponents runs three actions on the projected pairs (a
+    // count, then the local path's two collects): each would re-run the
+    // block self-join if the pairs were not materialized first
+    val (pn, pl) = fullLink(mentionsOf(Seq("Gamestation" -> "TOOL", "Gamestation 5 Pro" -> "TOOL")))
+    val pairPlans = new AtomicInteger
+    val sentinels = new LinkedBlockingQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (plan.contains("block_key")) pairPlans.incrementAndGet()
+        "pair-plan-sentinel-\\d".r.findFirstIn(plan).foreach(sentinels.put)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the listener bus is asynchronous but ordered: once a sentinel
+    // query's event arrives, every earlier execution's has
+    def drain(n: Int): Unit = {
+      spark.range(1).select(lit(s"pair-plan-sentinel-$n")).collect()
+      assert(sentinels.poll(60, TimeUnit.SECONDS) == s"pair-plan-sentinel-$n")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      drain(1)
+      pairPlans.set(0)
+      val inc = KgPipeline.incrementalLink(pn, pl, mentionsOf(Seq("Gamestation 5" -> "TOOL")))
+      inc.labels.collect()
+      drain(2)
+      assert(pairPlans.get == 1, s"the pair plan ran ${pairPlans.get} times")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("a batch with no first-seen surfaces changes nothing but the counts") {
