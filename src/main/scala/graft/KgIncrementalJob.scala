@@ -114,7 +114,7 @@ object KgIncrementalJob {
     /** Everything after the marker, from staging alone and idempotent, so
       * any later invocation can finish an interrupted apply: a rewritten
       * bucket is replaced whole, and the swaps skip what already moved. */
-    def rollForward(marker: IncrMarker): (GraphSink.WriteMetrics, Long, Long) = {
+    def rollForward(marker: IncrMarker): (GraphSink.WriteMetrics, Long) = {
       // staged link state is either committed or already swapped in
       require(!exists(s"$incr/linkstate_new") || exists(s"$incr/linkstate_new/_committed.json"),
         s"$incr/linkstate_new lost its commit marker — staging is torn; restore the output " +
@@ -122,8 +122,7 @@ object KgIncrementalJob {
       GraphSink.invalidateBuckets(spark, output, marker.buckets)
       val wm = GraphSink.writeTriples(spark, spark.read.parquet(s"$incr/rewrite"), output,
         marker.layout.nBuckets, marker.layout.dayPartition)
-      val (nEntities, nEdges) = finishTail(spark, f, output)
-      (wm, nEntities, nEdges)
+      (wm, finishTail(spark, f, output))
     }
 
     val turns = spark.read.parquet(input).as[Turn]
@@ -177,7 +176,7 @@ object KgIncrementalJob {
     // stage the merged link state FIRST and re-read it: every later
     // stage consumes the STAGED copy, so the tail never depends on the
     // live _linkstate/edges/triples dirs it is about to mutate
-    GraphSink.writeLinkState(spark, inc.nodes, inc.labels, s"$incr/linkstate_new",
+    val nNodes = GraphSink.writeLinkState(spark, inc.nodes, inc.labels, s"$incr/linkstate_new",
       appliedTokens = st.appliedTokens :+ token)
     val staged = GraphSink.readLinkState(spark, s"$incr/linkstate_new").get
     val canonNew = KgPipeline.canonicalize(staged.nodes, staged.labels).cache()
@@ -228,20 +227,19 @@ object KgIncrementalJob {
     // stage the bucket rewrite: every row the affected buckets will hold,
     // resolved against the new map. It feeds BOTH the added-edges term and
     // the rewrite, and lets a recovery roll forward without re-tagging
-    KgPipeline.resolveTriples(affected.select(RAW.map(col): _*).unionByName(newRaw), canonNew)
-      .write.mode(SaveMode.Overwrite).parquet(s"$incr/rewrite")
+    KgPipeline.resolveTriples(affected.select(RAW.map(col): _*).unionByName(newRaw), canonNew,
+      mapRows = Some(nNodes)).write.mode(SaveMode.Overwrite).parquet(s"$incr/rewrite")
     val rewrite = spark.read.parquet(s"$incr/rewrite")
     phase("guard_stage_rewrite")
 
     // edges by one signed sum, staged before any mutation: live weights
     // count the live rows' stored ids, so subtracting the affected rows'
     // stored contribution removes exactly what they added
-    spark.read.parquet(s"$output/edges")
+    val nEdges = GraphSink.writeEdges(spark.read.parquet(s"$output/edges")
       .unionByName(KgPipeline.edgesTable(affected).withColumn("weight", -$"weight"))
       .unionByName(KgPipeline.edgesTable(rewrite))
       .groupBy($"src", $"dst", $"pred").agg(sum($"weight").as("weight"))
-      .where($"weight" > 0)
-      .write.mode(SaveMode.Overwrite).partitionBy("pred").parquet(s"$incr/edges_new")
+      .where($"weight" > 0), incr, "edges_new")
     val nNewTriples = newRaw.count()
     tagged.unpersist(); changed.unpersist(); canonNew.unpersist()
     phase("edges_delta")
@@ -250,7 +248,7 @@ object KgIncrementalJob {
     // must not depend on re-reading manifests it is about to delete)
     val marker = IncrMarker(token, bucketsB, layout)
     Commit.write(f, new Path(s"$incr/marker.json"), marker.json)
-    val (wm, nEntities, nEdges) = rollForward(marker)
+    val (wm, nEntities) = rollForward(marker)
     phase("roll_forward")
     IncrMetrics(nTurns, nNewTriples, nChanged, wm.buckets, wm.skippedBuckets,
       nEntities, nEdges)
@@ -260,16 +258,17 @@ object KgIncrementalJob {
     * Entities are rebuilt from whichever committed link state survives
     * (staged if the swap hasn't happened, live if it has). The marker is
     * deleted before the rest of the staging, so a crash mid-cleanup
-    * reads as "no marker" and the leftovers are discarded.
+    * reads as "no marker" and the leftovers are discarded. Returns the
+    * entity count its write observed.
     */
-  private def finishTail(spark: SparkSession, f: FileSystem, output: String): (Long, Long) = {
+  private def finishTail(spark: SparkSession, f: FileSystem, output: String): Long = {
     val incr = s"$output/_incr"
     def exists(p: String) = f.exists(new Path(p))
     val state = GraphSink.readLinkState(spark, s"$incr/linkstate_new")
       .orElse(GraphSink.readLinkState(spark, s"$output/_linkstate"))
       .getOrElse(sys.error(s"no committed link state under $incr/linkstate_new or " +
         s"$output/_linkstate — the output is torn; restore from backup or re-run the full job"))
-    GraphSink.writeEntities(KgPipeline.entitiesTable(state.nodes, state.labels), output)
+    val nEntities = GraphSink.writeEntities(KgPipeline.entitiesTable(state.nodes, state.labels), output)
     if (exists(s"$incr/edges_new"))
       Commit.swapDir(f, new Path(s"$incr/edges_new"), new Path(s"$output/edges"))
     if (exists(s"$incr/linkstate_new/_committed.json"))
@@ -280,7 +279,6 @@ object KgIncrementalJob {
     // listings (the global FileStatusCache has no TTL)
     Seq("entities", "edges", "triples", "_linkstate/nodes", "_linkstate/labels")
       .foreach(d => spark.catalog.refreshByPath(s"$output/$d"))
-    (spark.read.parquet(s"$output/entities").count(),
-      spark.read.parquet(s"$output/edges").count())
+    nEntities
   }
 }

@@ -26,8 +26,8 @@ import org.apache.spark.sql.SparkSession
   *     --output hdfs://.../graph      \
   *     [--buckets 64]
   *
-  * Prints one JSON metrics line (rows, convs, buckets written/skipped,
-  * entity/edge counts) — the job's observability contract.
+  * Prints one JSON metrics line (turns, triples, entities, edges, buckets
+  * written/skipped) — the job's observability contract.
   */
 object KgJob {
 
@@ -88,8 +88,10 @@ object KgJob {
     val wm = GraphSink.writeTriples(spark, out.resolvedTriples, output, buckets,
       dayPartition = dayPartition)
     phase("resolve_write_triples_manifests")
-    GraphSink.writeEntities(out.entities, output)
-    GraphSink.writeEdges(out.edges, output)
+    // each count comes from its own write; triples are the committed
+    // manifests' row sum (a resume included), turns the cached tagged set
+    val nEntities = GraphSink.writeEntities(out.entities, output)
+    val nEdges = GraphSink.writeEdges(out.edges, output)
     // link state makes the output INCREMENTAL-READY: KgIncrementalJob
     // merges later transcript batches against these nodes/labels instead
     // of relinking the whole corpus (alias-scale tables — two small
@@ -97,10 +99,7 @@ object KgJob {
     GraphSink.writeLinkState(spark, out.nodes, out.components, s"$output/_linkstate")
     phase("write_entities_edges_linkstate")
     val nTurns = out.tagged.count()
-    val nEntities = out.entities.count()
-    val nEdges = out.edges.count()
-    val nTriples = out.resolvedTriples.count()
-    phase("metrics_counts")
+    val nTriples = GraphSink.committedRows(spark, output)
     out.resolvedTriples.unpersist(); out.tagged.unpersist(); out.nodes.unpersist()
     // the CC frontier checkpoint exists only to resume a KILLED linking
     // phase; once the job's final manifests are committed it is dead

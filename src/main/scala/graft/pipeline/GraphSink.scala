@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.pipeline.Records.{BucketManifest, Layout, LinkStateMarker}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 
 /** Graph materialization with per-partition lineage manifests and
@@ -25,8 +26,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSess
   */
 object GraphSink {
 
-  final case class WriteMetrics(
-      buckets: Int, skippedBuckets: Int, rows: Long, distinctConvs: Long)
+  final case class WriteMetrics(buckets: Int, skippedBuckets: Int, rows: Long)
 
   /** THE day definition — UTC epoch-day arithmetic, never `to_date(ts)`:
     * to_date applies spark.sql.session.timeZone, so the same row could
@@ -46,6 +46,10 @@ object GraphSink {
   /** The buckets whose manifest is committed. */
   def doneBuckets(spark: SparkSession, outDir: String): Set[Int] =
     committed(spark, outDir).map(_.bucket).toSet
+
+  /** The rows of every committed bucket, from the manifests alone. */
+  def committedRows(spark: SparkSession, outDir: String): Long =
+    committed(spark, outDir).map(_.rows).sum
 
   /** The layout of a committed table; None when no bucket manifest has
     * been committed. */
@@ -98,9 +102,8 @@ object GraphSink {
     ms.map(_._2)
   }
 
-  /** Write triples for all buckets not yet committed; returns metrics
-    * observed on the actual write pass (`Observation` — executor→driver
-    * metric channel, SURVEY.md §3.3 step 10).
+  /** Write triples for all buckets not yet committed; returns the
+    * metrics observed on the write pass ([[writeObserved]]).
     *
     * `dayPartition = true` adds `day(ts)` as a SECOND partition level
     * under the conv bucket (SURVEY.md §7.5: `bucket(conv_id)[, day(ts)]`
@@ -119,21 +122,14 @@ object GraphSink {
     val layout = Layout(nBuckets, dayPartition)
     val done = resumableBuckets(spark, outDir, layout)
     val f = Commit.fs(spark, outDir)
-    // whole-bucket replace on resume (ADVICE r4): dynamic overwrite only
-    // replaces the LEAF partitions present in the resumed data. Under the
-    // day layout, if a pending (uncommitted) bucket's resumed rows split
-    // into a different day set than the crashed run's (input drift the
-    // manifests cannot detect), a stale day dir would survive inside the
-    // "replaced" bucket and the read-back fingerprint would bless it into
-    // the manifest. Deleting every UNCOMMITTED bucket directory up front
-    // restores the flat layout's whole-bucket-replace guarantee — the
-    // committed (manifested) buckets are exactly the ones kept.
-    // runs whenever the triples dir exists, NOT only when manifests do
-    // (ADVICE r5): a crashed day-partitioned run that committed ZERO
-    // bucket manifests leaves every bucket dir uncommitted — a resume
-    // with drifted input would otherwise keep pre-drift day dirs inside
-    // rewritten buckets and the read-back fingerprint would bless them.
-    // A killed write's `.spark-staging-<job>` dir, never reused, goes too
+    // whole-bucket replace on resume: dynamic overwrite replaces only the
+    // LEAF partitions present in the resumed data, so under the day layout
+    // a pending bucket whose resumed rows split into other days (input
+    // drift) would keep a stale day dir, and the read-back fingerprint
+    // would bless it. Every UNCOMMITTED bucket dir is deleted up front,
+    // whether or not any manifest exists yet; the committed buckets are
+    // exactly the ones kept. A killed write's `.spark-staging-<job>` dir,
+    // never reused, goes too
     val triplesDir = new Path(s"$outDir/triples")
     val staging = if (!f.exists(triplesDir)) Nil
       else f.listStatus(triplesDir).toSeq.map(_.getPath).filter(_.getName.startsWith(".spark-staging-"))
@@ -141,69 +137,43 @@ object GraphSink {
     val all = bucketed(resolvedTriples, nBuckets)
     val pending = if (done.isEmpty) all else all.where(!col("conv_bucket").isin(done.toSeq: _*))
 
-    val obs = Observation(s"kg_write_${System.identityHashCode(resolvedTriples)}")
-    val observed = pending.observe(obs,
-      count(lit(1)).as("rows"),
-      approx_count_distinct(col("conv_id")).as("convs"),
-      // the set of bucket ids THIS run actually wrote, collected on the
-      // write pass itself (no extra execution): the manifest read-back
-      // below is restricted to it, so a stale unmanifested bucket
-      // directory from an earlier crashed run with different data can
-      // never be blessed with a manifest it did not earn
-      collect_set(col("conv_bucket")).as("written_buckets"))
+    // DYNAMIC partition overwrite, not Append: a crash after the parquet
+    // commit but before the manifest rename leaves an unmanifested bucket,
+    // which a resumed Append would duplicate; an overwrite replaces it, so
+    // the write is idempotent and the manifest rename stays the single
+    // commit point. Repartitioning by the FULL partition tuple gives one
+    // file per leaf dir and spreads a bucket's day dirs across tasks. The
+    // day comes from the TZ-proof utcDay, so a resume under another
+    // session TZ splits rows into the same day dirs
+    val o = writeObserved(pending, f, uncommittedBuckets(f, triplesDir, done),
+      // the set of bucket ids THIS run actually wrote: the manifest
+      // read-back below is restricted to it, so a stale unmanifested
+      // bucket directory from an earlier crashed run with different data
+      // can never be blessed with a manifest it did not earn
+      collect_set(col("conv_bucket")).as("written_buckets")) { observed =>
+      val (toWrite, partCols) =
+        if (dayPartition) (observed.withColumn("day", utcDay(col("ts"))), Seq("conv_bucket", "day"))
+        else (observed, Seq("conv_bucket"))
+      toWrite.repartition(partCols.map(col): _*).write
+        .mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partCols: _*)
+        .parquet(triplesDir.toString)
+    }
+    val written = o.ints("written_buckets")
 
-    // repartition by the partition column first: one file per bucket
-    // instead of (#tasks × #buckets) fragments.
-    // DYNAMIC partition overwrite (not Append): a crash AFTER the parquet
-    // job commit but BEFORE the manifest rename would otherwise leave a
-    // committed-but-unmanifested bucket that the resumed run re-appends,
-    // silently duplicating every row in it (the manifest would then
-    // describe one copy while the data holds two). With dynamic
-    // overwrite, re-processing a pending bucket REPLACES its partition
-    // directory, so the write is idempotent and the manifest rename stays
-    // the single commit point.
-    // day derived by the shared TZ-proof utcDay expression (see its doc):
-    // a resume under a different session TZ must not re-split
-    // near-midnight rows into different day dirs — dynamic overwrite
-    // would then leave the stale day dir alive inside a "replaced"
-    // bucket and the manifest would bless duplicated rows.
-    // repartition by the FULL partition tuple (r6): under the day layout
-    // a bucket-only repartition made one task write all ~30 of its
-    // bucket's day directories sequentially — write parallelism capped
-    // at the bucket count. Partitioning by (bucket, day) spreads the
-    // leaf directories across the executor pool; file count per leaf is
-    // one either way.
-    val (toWrite, partCols) =
-      if (dayPartition) (observed.withColumn("day", utcDay(col("ts"))), Seq("conv_bucket", "day"))
-      else (observed, Seq("conv_bucket"))
-    toWrite.repartition(partCols.map(col): _*).write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*)
-      .parquet(triplesDir.toString)
-
-    val (rows, convs, written) = observedWrite(obs.get, f, triplesDir, done)
-
-    // per-bucket manifest: rows + order-independent content fingerprint,
-    // computed by READING BACK the just-written partition files — NOT by
-    // re-running the resolvedTriples lineage. Locally a cache hid the
-    // difference, but at 100 TB the cache won't hold and a lineage-based
-    // manifest pass re-executes the entire pipeline (VERDICT r2 "what's
-    // wrong" #4); a scan of freshly-written parquet costs one read of the
-    // data just produced. Manifesting from the files also makes the
-    // fingerprint describe what is actually ON DISK — the stronger
-    // integrity statement for the resume protocol.
-    // restrict to the buckets this run wrote (see the observe above) —
-    // this also makes a zero-row write skip the scan entirely (a triples
-    // dir holding only _SUCCESS would fail schema inference)
+    // per-bucket manifest: rows + fingerprint READ BACK from the written
+    // files, not from the resolvedTriples lineage, which at scale would
+    // re-run the whole pipeline; it also makes the manifest describe what
+    // is ON DISK, the integrity statement the resume relies on. Only the
+    // buckets this run wrote are read, so a zero-row write scans nothing
     val perBucket =
       if (written.isEmpty || !f.exists(triplesDir)) Array.empty[org.apache.spark.sql.Row]
       else spark.read.parquet(triplesDir.toString)
         .where(col("conv_bucket").isin(written.toSeq: _*))
         .groupBy(col("conv_bucket").cast("int").as("conv_bucket"))
         .agg(count(lit(1)).as("rows"),
-          // bit_xor: order-independent content fingerprint, no ANSI overflow
-          expr("bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj))").as("fingerprint"))
+          tripleFingerprint.as("fingerprint"))
         .collect()
 
     f.mkdirs(new Path(s"$outDir/_manifests"))
@@ -214,28 +184,65 @@ object GraphSink {
       // idempotent, but the failure must surface)
       Commit.write(f, manifestPath(outDir, m.bucket), m.json)
     }
-    WriteMetrics(perBucket.length, done.size, rows, convs)
+    WriteMetrics(perBucket.length, done.size, o.rows)
   }
 
-  /** (rows, convs, buckets written) observed on the write pass. No
-    * metrics reads as zero only when no `conv_bucket=` dir outside `done`
-    * exists (one listing); any other missing or mistyped metric throws
-    * rather than leave written data unmanifested (ADVICE r3). */
-  private[graft] def observedWrite(metrics: Map[String, Any], f: FileSystem,
-      triplesDir: Path, done: Set[Int]): (Long, Long, Set[Int]) =
-    if (metrics.nonEmpty)
-      (metrics("rows").asInstanceOf[Long], metrics("convs").asInstanceOf[Long],
-        metrics("written_buckets").asInstanceOf[Seq[Any]].map(_.asInstanceOf[Int]).toSet)
-    else {
-      val uncommitted = uncommittedBuckets(f, triplesDir, done).map(_.getName)
-      require(uncommitted.isEmpty, s"$triplesDir holds uncommitted bucket dir(s) " +
-        s"${uncommitted.mkString(", ")} but the write reported no metrics — refusing to " +
-        "commit with zero rows")
-      (0L, 0L, Set.empty)
+  /** THE content fingerprint of triple rows, shared by the bucket and the
+    * stream manifests (stream == batch compares the two): bit_xor of
+    * xxhash64, order-independent and free of ANSI overflow. */
+  def tripleFingerprint: Column = expr("bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj))")
+
+  /** What one write observed on its own pass, by aggregate name (`rows`
+    * always): zero when it reported no metrics at all (see [[observed]]);
+    * a missing or mistyped metric throws. */
+  final class Observed private[GraphSink] (metrics: Map[String, Any]) {
+    private def get[T](name: String, zero: T)(typed: PartialFunction[Any, T]): T =
+      if (metrics.isEmpty) zero
+      else typed.applyOrElse(
+        metrics.getOrElse(name, sys.error(s"the write reported no metric '$name'")),
+        (v: Any) => throw new IllegalStateException(s"metric '$name' is mistyped: $v"))
+    def long(name: String): Long = get(name, 0L) { case v: Long => v }
+    def rows: Long = long("rows")
+    /** A `bit_xor` fingerprint: NULL over zero rows reads as 0. */
+    def fingerprint(name: String): Long = get(name, 0L) { case null => 0L; case v: Long => v }
+    def ints(name: String): Set[Int] = get(name, Set.empty[Int]) {
+      case v: Seq[_] if v.forall(_.isInstanceOf[Int]) => v.map(_.asInstanceOf[Int]).toSet
     }
+  }
+
+  /** Runs `write` on `df` with its `rows` and `aggs` observed on that same
+    * pass (`Observation`, the executor→driver metric channel, SURVEY.md
+    * §3.3 step 10), so a write is the one source of its own counts and nothing
+    * re-reads or re-runs what it wrote. `write` must be the action that
+    * runs `df`'s plan (NOTES sharp edge 22). `fresh` lists where the write
+    * puts its data files, for the guard in [[observed]]. */
+  private[graft] def writeObserved(df: DataFrame, f: FileSystem, fresh: => Seq[Path],
+      aggs: Column*)(write: DataFrame => Unit): Observed = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows"), aggs: _*))
+    observed(obs.get, f, fresh)
+  }
+
+  /** The one silent-zero guard. A plan that processed no rows may report
+    * no metrics at all; that reads as zero rows only when no location in
+    * `fresh` holds a data file (a listing, no Spark job). Otherwise the
+    * write is refused rather than committed as zero rows (ADVICE r3). */
+  private[graft] def observed(metrics: Map[String, Any], f: FileSystem,
+      fresh: => Seq[Path]): Observed = {
+    if (metrics.isEmpty) {
+      val data = fresh.filter(f.exists).flatMap { dir =>
+        val it = f.listFiles(dir, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+          .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith(".")).toSeq
+      }
+      require(data.isEmpty, s"the write reported no metrics but left ${data.size} data " +
+        s"file(s), e.g. ${data.headOption.orNull} — refusing to count it as zero rows")
+    }
+    new Observed(metrics)
+  }
 
   /** The `conv_bucket=<b>` dirs under `triplesDir` whose bucket is not in `done`. */
-  private def uncommittedBuckets(f: FileSystem, triplesDir: Path, done: Set[Int]): Seq[Path] =
+  private[graft] def uncommittedBuckets(f: FileSystem, triplesDir: Path, done: Set[Int]): Seq[Path] =
     if (!f.exists(triplesDir)) Nil
     else f.listStatus(triplesDir).toSeq.filter(_.isDirectory).map(_.getPath).filter(p =>
       p.getName.startsWith("conv_bucket=") && !done(p.getName.stripPrefix("conv_bucket=").toInt))
@@ -255,17 +262,25 @@ object GraphSink {
 
   private def linkStateMarker(dir: String) = new Path(s"$dir/_committed.json")
 
+  /** The link-state tables as written and read back: a read with the
+    * schema runs no footer job to infer it. */
+  private val NodesSchema =
+    StructType.fromDDL("norm STRING, tag STRING, n_mentions BIGINT, surface STRING, node_id BIGINT")
+  private val LabelsSchema = StructType.fromDDL("node_id BIGINT, component BIGINT")
+
+  /** Returns the node count its marker records, observed on the nodes write. */
   def writeLinkState(spark: SparkSession, nodes: DataFrame, labels: DataFrame,
-      dir: String, appliedTokens: Seq[String] = Nil): Unit = {
+      dir: String, appliedTokens: Seq[String] = Nil): Long = {
     val f = Commit.fs(spark, dir)
     // invalidate first: a crash below leaves no marker, not a stale one
     f.delete(linkStateMarker(dir), false)
-    nodes.select(col("norm"), col("tag"), col("n_mentions"), col("surface"), col("node_id"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/nodes")
-    labels.select(col("node_id"), col("component"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/labels")
-    val n = spark.read.parquet(s"$dir/nodes").count()
+    def table(df: DataFrame, schema: StructType) = df.select(schema.fieldNames.map(col): _*)
+    val n = writeObserved(table(nodes, NodesSchema), f, Seq(new Path(s"$dir/nodes"))) {
+      _.write.mode(SaveMode.Overwrite).parquet(s"$dir/nodes")
+    }.rows
+    table(labels, LabelsSchema).write.mode(SaveMode.Overwrite).parquet(s"$dir/labels")
     Commit.write(f, linkStateMarker(dir), LinkStateMarker(n, appliedTokens).json)
+    n
   }
 
   /** None when the directory holds no COMMITTED link state. The node
@@ -282,14 +297,16 @@ object GraphSink {
     spark.catalog.refreshByPath(s"$dir/nodes")
     spark.catalog.refreshByPath(s"$dir/labels")
     val marker = LinkStateMarker.read(f, linkStateMarker(dir))
-    val nodes = spark.read.parquet(s"$dir/nodes")
-    require(nodes.count() == marker.nNodes,
-      s"link state in $dir holds ${nodes.count()} nodes but its marker recorded " +
+    val nodes = spark.read.schema(NodesSchema).parquet(s"$dir/nodes")
+    val n = nodes.count()
+    require(n == marker.nNodes,
+      s"link state in $dir holds $n nodes but its marker recorded " +
         s"${marker.nNodes} — the table is torn; re-run the full KgJob to rebuild it")
-    Some(LinkState(nodes, spark.read.parquet(s"$dir/labels"), marker.applied))
+    Some(LinkState(nodes, spark.read.schema(LabelsSchema).parquet(s"$dir/labels"), marker.applied))
   }
 
-  /** Both dimension-table writes repartition by their partition column
+  /** Both dimension-table writes return the rows they wrote, observed on
+    * the write pass, and repartition by their partition column
     * first (r6, guide §6): without it every task writes a fragment into
     * every partition directory — ~(tasks × preds) tiny files for the
     * edges table — paying file-open and commit-rename overhead per
@@ -302,15 +319,19 @@ object GraphSink {
     * distinct values, and the largest value's rows land on one task.
     * A fact-sized table here would need a salt in the partition key.
     */
-  def writeEntities(entities: DataFrame, outDir: String): Unit =
-    entities.repartition(col("entity_type")).write.mode(SaveMode.Overwrite)
-      .partitionBy("entity_type")
-      .parquet(s"$outDir/entities")
+  def writeEntities(entities: DataFrame, outDir: String): Long =
+    writeTable(entities, s"$outDir/entities", "entity_type")
 
-  def writeEdges(edges: DataFrame, outDir: String): Unit =
-    edges.repartition(col("pred")).write.mode(SaveMode.Overwrite)
-      .partitionBy("pred")
-      .parquet(s"$outDir/edges")
+  /** `table` names the directory under `outDir`: an apply stages its edges
+    * beside the live table before swapping them in. */
+  def writeEdges(edges: DataFrame, outDir: String, table: String = "edges"): Long =
+    writeTable(edges, s"$outDir/$table", "pred")
+
+  /** One partitioned overwrite; returns the rows it wrote. */
+  private def writeTable(df: DataFrame, dir: String, partCol: String): Long =
+    writeObserved(df, Commit.fs(df.sparkSession, dir), Seq(new Path(dir))) {
+      _.repartition(col(partCol)).write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(dir)
+    }.rows
 
   /** Time-range read over the triples table. On a day-partitioned
     * layout the filter lands on the PARTITION column, so the scan

@@ -154,14 +154,14 @@ object KgPipeline {
     * smaller than the corpus, and the fixed cost of k join iterations
     * dominates small inputs); above it, the iterative DataFrame
     * min-label propagation loop. Both produce identical labels (gated by
-    * SparkParitySpec against the oracle for both paths).
+    * SparkParitySpec against the oracle for both paths). A caller that
+    * already knows the node count passes `nNodes` to skip the count job.
     */
   val CC_LOCAL_THRESHOLD = 200000L
 
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val n = nodes.count()
-    if (n <= CC_LOCAL_THRESHOLD) connectedComponentsLocal(nodes, edges)
+      checkpointDir: Option[String] = None, nNodes: Option[Long] = None): DataFrame = {
+    if (nNodes.getOrElse(nodes.count()) <= CC_LOCAL_THRESHOLD) connectedComponentsLocal(nodes, edges)
     else checkpointDir match {
       case Some(dir) => connectedComponentsLoopDurable(nodes, edges, dir)
       case None      => connectedComponentsLoop(nodes, edges)
@@ -413,12 +413,14 @@ object KgPipeline {
     * the explicitly SALTED shuffle join (north rule: hot entities make
     * `norm` skewed — the salt spreads each hot key over LINK_SALT
     * partitions; AQE skew-join stays on as the second line of defense).
-    * Both paths are proven equal in SparkParitySpec.
+    * Both paths are proven equal in SparkParitySpec. A caller that knows
+    * the map's rows (one per surface node) passes `mapRows`, like `gazRows`.
     */
   val BROADCAST_MAP_THRESHOLD = 2000000L
 
-  def resolveTriples(triples: DataFrame, canonMap: DataFrame): DataFrame =
-    if (canonMap.count() <= BROADCAST_MAP_THRESHOLD)
+  def resolveTriples(triples: DataFrame, canonMap: DataFrame,
+      mapRows: Option[Long] = None): DataFrame =
+    if (mapRows.getOrElse(canonMap.count()) <= BROADCAST_MAP_THRESHOLD)
       resolveTriplesBroadcast(triples, canonMap)
     else resolveTriplesSalted(triples, canonMap)
 
@@ -626,11 +628,12 @@ object KgPipeline {
     val mentions = mentionRows(tagged)
     val triples = tripleRows(tagged)
     val nodes = surfaceNodes(mentions).cache()
+    val nNodes = nodes.count() // both dispatches: the canonical map has one row per node
     val (edges0, overflow) = candidateEdges(nodes)
-    val labels = connectedComponents(nodes, edges0, ccCheckpointDir)
+    val labels = connectedComponents(nodes, edges0, ccCheckpointDir, Some(nNodes))
     val canonMap = canonicalize(nodes, labels)
     val entities = entitiesTable(nodes, labels)
-    val resolved = resolveTriples(triples, canonMap)
+    val resolved = resolveTriples(triples, canonMap, Some(nNodes))
     val kgEdges = edgesTable(resolved)
     KgOutput(tagged, mentions, triples, nodes, edges0, labels, entities, resolved, kgEdges, overflow)
   }

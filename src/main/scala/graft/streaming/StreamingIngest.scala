@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.corpus.Turn
 import graft.pipeline.Records.{CanonVersion, StreamManifest}
-import graft.pipeline.{Commit, KgPipeline, TaggedRow}
+import graft.pipeline.{Commit, GraphSink, KgPipeline, TaggedRow}
 import graft.semantics.NerModel
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
@@ -309,14 +309,14 @@ object StreamingIngest {
     */
   def publishCanonMap(canonMap: DataFrame, canonDir: String): String = {
     val spark = canonMap.sparkSession
-    val cm = canonMap.select(col("norm"), col("tag"), col("entity_id"), col("canonical_norm"))
-    cm.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(canonDir)
-    val r = spark.read.parquet(canonDir)
-      .agg(count(lit(1)).as("n"),
-        expr("bit_xor(xxhash64(norm, tag, entity_id, canonical_norm))").as("fp"))
-      .collect()(0)
-    val version = CanonVersion(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)).token
     val hfs = Commit.fs(spark, canonDir)
+    val o = GraphSink.writeObserved(
+      canonMap.select(col("norm"), col("tag"), col("entity_id"), col("canonical_norm")),
+      hfs, Seq(new Path(canonDir)),
+      expr("bit_xor(xxhash64(norm, tag, entity_id, canonical_norm))").as("fp")) {
+      _.write.mode(SaveMode.Overwrite).parquet(canonDir)
+    }
+    val version = CanonVersion(o.rows, o.fingerprint("fp")).token
     val dst = new Path(s"$canonDir/_canon_version")
     if (hfs.exists(dst)) hfs.delete(dst, false)
     Commit.write(hfs, dst, version)
@@ -436,42 +436,19 @@ object StreamingIngest {
     // manifest stats observed ON the write pass (r6, guide §1/§5): a
     // separate stats agg would execute the batch's ENTIRE lineage — the
     // NLP tagging + resolve join — a second time per micro-batch
-    val obs = org.apache.spark.sql.Observation(
-      s"stream_write_${batchId}_${System.nanoTime()}")
-    val observed = batch.observe(obs,
-      count(lit(1)).as("rows"),
-      expr("bit_xor(xxhash64(conv_id, turn_idx, subj, pred, obj))").as("fp"))
     val batchDir = new Path(s"$outDir/resolved_triples/batch=$batchId")
-    // no `_SUCCESS` marker: the manifest below is the batch's commit record
-    observed.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(batchDir.toString)
-    val (rows, fp) = observedStats(obs.get, hfs, batchDir)
+    val o = GraphSink.writeObserved(batch, hfs, Seq(batchDir), GraphSink.tripleFingerprint.as("fp")) {
+      // no `_SUCCESS` marker: the manifest below is the batch's commit record
+      _.write.mode(SaveMode.Overwrite)
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(batchDir.toString)
+    }
     hfs.mkdirs(manifest.getParent)
     // a failed commit throws, so Structured Streaming retries the batch
     // idempotently instead of leaving its parquet unmanifested
-    Commit.write(hfs, manifest, StreamManifest(batchId, rows, fp, canonVersion).json)
+    Commit.write(hfs, manifest,
+      StreamManifest(batchId, o.rows, o.fingerprint("fp"), canonVersion).json)
   }
-
-  /** (rows, fingerprint) for a batch manifest. A plan that processed no
-    * rows may report no metrics at all; 0 is committed only then, and
-    * only when the batch directory holds no data files (one listing, no
-    * Spark job). Any other missing or mistyped metric throws rather than
-    * commit a silent zero for a batch that wrote data.
-    */
-  private[graft] def observedStats(metrics: Map[String, Any], hfs: FileSystem,
-      batchDir: Path): (Long, Long) =
-    if (metrics.nonEmpty) {
-      // bit_xor over zero rows is NULL: the empty batch's fingerprint is 0
-      val fp = metrics("fp") match { case null => 0L; case v: Long => v }
-      (metrics("rows").asInstanceOf[Long], fp)
-    } else {
-      val data = hfs.listStatus(batchDir).map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      require(data.isEmpty, s"batch $batchDir wrote ${data.length} data file(s) but the " +
-        "write reported no metrics — refusing to commit a manifest with zero rows")
-      (0L, 0L)
-    }
 
   /** Run one synchronous pass over whatever files exist (memory sink) —
     * the local smoke path; production would use a real sink + trigger.

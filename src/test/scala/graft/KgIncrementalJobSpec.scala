@@ -70,6 +70,13 @@ class KgIncrementalJobSpec extends AnyFunSuite {
       s"triples; live-only ${live.diff(derived).take(3)}, derived-only ${derived.diff(live).take(3)}")
   }
 
+  /** An apply's entity and edge counts are the live tables' rows. */
+  private def assertCountsLive(m: KgIncrementalJob.IncrMetrics, output: String, what: String): Unit = {
+    def rows(table: String): Long = spark.read.parquet(s"$output/$table").count()
+    assert(m.entities == rows("entities") && m.edges == rows("edges"),
+      s"$what: reported $m, live tables hold ${rows("entities")} entities, ${rows("edges")} edges")
+  }
+
   private def bucketFiles(output: String, buckets: Set[Int]): Map[Int, Set[String]] =
     buckets.map { b =>
       val d = new java.io.File(s"$output/triples/conv_bucket=$b")
@@ -95,6 +102,7 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     val filesBefore = bucketFiles(out, doneBefore)
     val m = KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
     assertEdgesOfTriples(out, "A+B")
+    assertCountsLive(m, out, "A+B")
     assert(m.newTurns > 0 && m.newTriples > 0 && m.changedSurfaces > 0,
       s"batch B must add turns and trigger at least one entity merge, got $m")
     assert(m.untouchedBuckets > 0,
@@ -138,6 +146,7 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     // a DIFFERENT batch completes the interrupted apply of B from its
     // staging, then applies its own batch
     val mC = KgIncrementalJob.run(spark, out, s"$dir/in_c", model)
+    assertCountsLive(mC, local, "C after rolling B forward")
     assert(mC.newTurns == turnCount("in_c") && mC.changedSurfaces >= 0 && mC.rewrittenBuckets > 0,
       s"C must apply as its own batch after B's roll-forward, got $mC")
 
@@ -171,9 +180,9 @@ class KgIncrementalJobSpec extends AnyFunSuite {
     val (dir, model) = staged
     val out = s"$dir/g3"
     KgJob.run(spark, s"$dir/in_a", model, out, buckets = 8)
-    KgIncrementalJob.run(spark, out, s"$dir/in_c", model)
+    assertCountsLive(KgIncrementalJob.run(spark, out, s"$dir/in_c", model), out, "A then C")
     assertEdgesOfTriples(out, "A then C")
-    KgIncrementalJob.run(spark, out, s"$dir/in_b", model)
+    assertCountsLive(KgIncrementalJob.run(spark, out, s"$dir/in_b", model), out, "A then C then B")
     assertEdgesOfTriples(out, "A then C then B")
     val want = s"$dir/g3_full"
     KgJob.run(spark, s"$dir/in_abc", model, want, buckets = 8)

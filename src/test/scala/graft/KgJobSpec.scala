@@ -3,7 +3,13 @@ package graft
 import graft.pipeline.{Commit, GraphSink, KgPipeline, NerTraining, Transcripts}
 import graft.testkit.CrashFs.{Kind, at, under}
 import graft.testkit.{CrashFs, Snapshot}
+import java.util.concurrent.{ConcurrentLinkedQueue, LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions.{lit, sum}
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end gate for the spark-submit entry point: parquet transcripts
@@ -133,6 +139,50 @@ class KgJobSpec extends AnyFunSuite {
       bucketDirs.forall(_.listFiles().exists(_.getName.startsWith("day="))))
     val eDay = refusedResume(output2, buckets = 8)
     assert(eDay.contains("day_partition"), eDay)
+  }
+
+  test("KgJob reports the counts its writes observed, reading none of its own outputs back") {
+    val (dir, input, modelPath) = staged
+    val output = s"$dir/graph_observed"
+    val own = Seq("_linkstate", "entities", "edges").map(d => new java.io.File(s"$output/$d").getPath)
+    val scans = new ConcurrentLinkedQueue[String]
+    val sentinels = new LinkedBlockingQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        qe.analyzed.foreach {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation => h.location.rootPaths.foreach(p => scans.add(p.toUri.getPath))
+            case _ =>
+          }
+          case _ =>
+        }
+        "observed-sentinel-\\d".r.findFirstIn(qe.analyzed.toString).foreach(sentinels.put)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the listener bus is asynchronous but ordered: once a sentinel
+    // query's event arrives, every earlier execution's has
+    def drain(n: Int): Unit = {
+      spark.range(1).select(lit(s"observed-sentinel-$n")).collect()
+      assert(sentinels.poll(60, TimeUnit.SECONDS) == s"observed-sentinel-$n")
+    }
+    spark.listenerManager.register(listener)
+    val m = try {
+      drain(1)
+      scans.clear()
+      val m = KgJob.run(spark, input, modelPath, output, buckets = 8)
+      drain(2)
+      m
+    } finally spark.listenerManager.unregister(listener)
+    val readBack = scans.asScala.filter(p => own.exists(o => p == o || p.startsWith(s"$o/"))).toSeq
+    assert(readBack.isEmpty, s"KgJob.run read its own outputs back: ${readBack.distinct.mkString(", ")}")
+
+    def rows(table: String): Long = spark.read.parquet(s"$output/$table").count()
+    val manifested = spark.read.json(s"$output/_manifests").agg(sum("rows")).first().getLong(0)
+    assert(m.turns == spark.read.parquet(input).count(), m)
+    assert(m.triples == manifested && manifested == rows("triples"), s"$m, manifests hold $manifested")
+    assert(m.entities == rows("entities") && m.edges == rows("edges"), m)
+    assert(GraphSink.readLinkState(spark, s"$output/_linkstate").isDefined)
   }
 
   test("KgJob killed at each commit point re-runs to the clean output") {

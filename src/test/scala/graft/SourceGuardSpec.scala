@@ -8,4 +8,11 @@ class SourceGuardSpec extends AnyFunSuite {
     val hooks = SourceGuard.lines(Set.empty, "failAfter", "[test hook]", "injected crash")
     assert(hooks.isEmpty, s"crash hooks in the program:\n${hooks.mkString("\n")}")
   }
+
+  test("every observed write and the triple fingerprint live in GraphSink: one silent-zero guard") {
+    val offenders = SourceGuard.lines(Set("GraphSink.scala"),
+      "Observation(", ".observe(", "xxhash64(conv_id, turn_idx, subj, pred, obj))")
+    assert(offenders.isEmpty,
+      s"observed outside GraphSink.writeObserved:\n${offenders.mkString("\n")}")
+  }
 }

@@ -360,20 +360,21 @@ class StreamJobSpec extends AnyFunSuite {
     assert(m0 == """{"batch":0,"rows":0,"fingerprint":0,"canon_version":"v0"}""", m0)
 
     // no metrics reported: zero only for a batch directory without data
+    def read(metrics: Map[String, Any], batchDir: Path): (Long, Long) = {
+      val o = graft.pipeline.GraphSink.observed(metrics, hfs, Seq(batchDir))
+      (o.long("rows"), o.fingerprint("fp"))
+    }
     val empty = new Path(s"$dir/resolved_triples/batch=1")
     hfs.mkdirs(empty)
-    assert(StreamingIngest.observedStats(Map.empty, hfs, empty) == ((0L, 0L)))
-    val written = s"$dir/resolved_triples/batch=2"
-    Seq(("c1", 0, "Acme", "works_at", "Zed")).toDF(cols: _*).write.parquet(written)
-    val e = intercept[IllegalArgumentException] {
-      StreamingIngest.observedStats(Map.empty, hfs, new Path(written))
-    }
+    assert(read(Map.empty, empty) == ((0L, 0L)))
+    val written = new Path(s"$dir/resolved_triples/batch=2")
+    Seq(("c1", 0, "Acme", "works_at", "Zed")).toDF(cols: _*).write.parquet(written.toString)
+    val e = intercept[IllegalArgumentException](read(Map.empty, written))
     assert(e.getMessage.contains("batch=2"), e.getMessage)
     // a mistyped metric propagates (Structured Streaming retries the batch)
-    intercept[RuntimeException] {
-      StreamingIngest.observedStats(Map("rows" -> 1L, "fp" -> "?"), hfs, new Path(written))
-    }
-    assert(StreamingIngest.observedStats(Map("rows" -> 1L, "fp" -> 42L), hfs, new Path(written)) ==
-      ((1L, 42L)))
+    intercept[RuntimeException](read(Map("rows" -> 1L, "fp" -> "?"), written))
+    assert(read(Map("rows" -> 1L, "fp" -> 42L), written) == ((1L, 42L)))
+    // bit_xor over zero rows is NULL: an empty batch's fingerprint is 0
+    assert(read(Map("rows" -> 0L, "fp" -> null), empty) == ((0L, 0L)))
   }
 }

@@ -193,26 +193,47 @@ class GraphSinkCrashSpec extends AnyFunSuite {
   }
 
   test("a write that reports no metrics commits zero only when no uncommitted bucket dir exists") {
+    import org.apache.hadoop.fs.Path
     val base = java.nio.file.Files.createTempDirectory("graft_sink_obs")
-    val triplesDir = new org.apache.hadoop.fs.Path(base.resolve("triples").toUri)
+    val triplesDir = new Path(base.resolve("triples").toUri)
     val f = triplesDir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    // nothing written at all, then only committed buckets on disk
-    assert(GraphSink.observedWrite(Map.empty, f, triplesDir, Set.empty) == ((0L, 0L, Set.empty[Int])))
-    f.mkdirs(new org.apache.hadoop.fs.Path(triplesDir, "conv_bucket=1"))
-    assert(GraphSink.observedWrite(Map.empty, f, triplesDir, Set(1)) == ((0L, 0L, Set.empty[Int])))
-    // an uncommitted bucket dir holds data this write may have produced
-    f.mkdirs(new org.apache.hadoop.fs.Path(triplesDir, "conv_bucket=2"))
-    val e = intercept[IllegalArgumentException] {
-      GraphSink.observedWrite(Map.empty, f, triplesDir, Set(1))
+    def read(metrics: Map[String, Any], done: Set[Int]): (Long, Set[Int]) = {
+      val o = GraphSink.observed(metrics, f, GraphSink.uncommittedBuckets(f, triplesDir, done))
+      (o.long("rows"), o.ints("written_buckets"))
     }
+    // nothing written at all, then only committed buckets on disk
+    assert(read(Map.empty, Set.empty) == ((0L, Set.empty[Int])))
+    f.create(new Path(triplesDir, "conv_bucket=1/part-00000.parquet")).close()
+    assert(read(Map.empty, Set(1)) == ((0L, Set.empty[Int])))
+    // an uncommitted bucket dir without a data file holds nothing written
+    f.mkdirs(new Path(triplesDir, "conv_bucket=2"))
+    assert(read(Map.empty, Set(1)) == ((0L, Set.empty[Int])))
+    // one with a data file, at any depth, holds data this write may have produced
+    f.create(new Path(triplesDir, "conv_bucket=2/day=2024-01-01/part-00000.parquet")).close()
+    val e = intercept[IllegalArgumentException](read(Map.empty, Set(1)))
     assert(e.getMessage.contains("conv_bucket=2"), e.getMessage)
     // a reported metric is used as is; a missing or mistyped one throws
-    val good = Map[String, Any]("rows" -> 5L, "convs" -> 2L, "written_buckets" -> Seq(1, 2))
-    assert(GraphSink.observedWrite(good, f, triplesDir, Set.empty) == ((5L, 2L, Set(1, 2))))
-    intercept[RuntimeException](GraphSink.observedWrite(good - "convs", f, triplesDir, Set.empty))
-    intercept[RuntimeException](GraphSink.observedWrite(good + ("rows" -> 5), f, triplesDir, Set.empty))
-    intercept[RuntimeException] {
-      GraphSink.observedWrite(good + ("written_buckets" -> Seq("1")), f, triplesDir, Set.empty)
-    }
+    val good = Map[String, Any]("rows" -> 5L, "written_buckets" -> Seq(1, 2))
+    assert(read(good, Set.empty) == ((5L, Set(1, 2))))
+    intercept[RuntimeException](read(good - "rows", Set.empty))
+    intercept[RuntimeException](read(good + ("rows" -> 5), Set.empty))
+    intercept[RuntimeException](read(good + ("written_buckets" -> Seq("1")), Set.empty))
+  }
+
+  test("empty graph tables commit zero rows through the observed writes") {
+    val spark2 = spark
+    import spark2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_empty").toString
+    val nodes = Seq.empty[(String, String, Long, String, Long)]
+      .toDF("norm", "tag", "n_mentions", "surface", "node_id")
+    val labels = Seq.empty[(Long, Long)].toDF("node_id", "component")
+    assert(GraphSink.writeLinkState(spark, nodes, labels, s"$dir/_linkstate") == 0L)
+    assert(GraphSink.readLinkState(spark, s"$dir/_linkstate").get.nodes.count() == 0L)
+    assert(GraphSink.writeEntities(KgPipeline.entitiesTable(nodes, labels), dir) == 0L)
+    assert(GraphSink.writeEdges(Seq.empty[(Long, Long, String, Double)]
+      .toDF("src", "dst", "pred", "weight"), dir) == 0L)
+    val canon = graft.streaming.StreamingIngest.publishCanonMap(
+      KgPipeline.canonicalize(nodes, labels), s"$dir/canon")
+    assert(canon == "0-0", canon)
   }
 }
