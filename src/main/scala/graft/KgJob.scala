@@ -74,7 +74,7 @@ object KgJob {
     // CC frontier checkpoints live under the job output dir: a killed
     // linking phase resumes the label-propagation loop from its last
     // committed iteration instead of iteration 0 (engaged on the
-    // >CC_LOCAL_THRESHOLD loop path; see connectedComponentsLoopDurable)
+    // >CC_LOCAL_THRESHOLD loop path; see KgPipeline.connectedComponentsLoop)
     val out = KgPipeline.run(spark, turns, model, Some(s"$output/_cc_checkpoints"))
     // this wall covers what run() actually FORCES: the tagging pass
     // (cache fill via the CC-dispatch node count) + blocking join + CC.

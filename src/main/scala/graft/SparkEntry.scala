@@ -612,13 +612,10 @@ object SparkEntry {
       graft.pipeline.KgPipeline.candidateEdges(Kg.built(s, d).out.nodes, maxBlock = 3)._2
         .orderBy(col("block_key"), col("tag"))),
     // exploded blocking keys per node — input for the overflow oracle
-    "kg_block_keys" -> ((s, d) => {
-      val keysUdf = udf((norm: String) => graft.semantics.Linker.blockKeys(norm))
-      Kg.built(s, d).out.nodes
-        .withColumn("block_key", explode(keysUdf(col("norm"))))
+    "kg_block_keys" -> ((s, d) =>
+      graft.pipeline.KgPipeline.blockKeyed(Kg.built(s, d).out.nodes)
         .select(col("block_key"), col("tag"), col("node_id"))
-        .orderBy(col("block_key"), col("tag"), col("node_id"))
-    }),
+        .orderBy(col("block_key"), col("tag"), col("node_id"))),
     "kg_eval_prf" -> ((s, d) => Kg.evalPrf(s, d)),
     "kg_ner_errors" -> ((s, d) => Kg.nerErrors(s, d)),
     "kg_role_confusion" -> ((s, d) =>

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 
 /** The flagship KG-construction job (SURVEY.md §3.3, BASELINE.json
   * north_star): transcripts → stable turn ordering → batched
@@ -33,10 +33,13 @@ object KgPipeline {
   val CC_MAX_ITERS = 25
   val LINK_SALT = 8
 
-  /** Iterations the last connectedComponentsLoop call took (bench/scale
-    * evidence that the loop path actually ran — see VERDICT r1 item 3).
+  /** Iterations the last connectedComponentsLoop call took, and the
+    * committed iteration it resumed from (0 = fresh start): bench and
+    * spec evidence that the loop ran (VERDICT r1 item 3) and that a
+    * resumed loop skipped iterations 1..k.
     */
   @volatile var lastIterations: Int = 0
+  @volatile var lastResumedFrom: Int = 0
 
   // ------------------------------------------------------------ tagging
 
@@ -88,6 +91,10 @@ object KgPipeline {
 
   // ------------------------------------------------------- entity linking
 
+  /** xxhash64 of `tag|norm`: every surface node id and entity id, so the
+    * incremental apply can probe stored ids. */
+  def entityId(tag: Column, norm: Column): Column = xxhash64(concat(tag, lit("|"), norm))
+
   /** Distinct surfaces with stable node ids (xxhash64 of type|norm).
     * Two-stage aggregation: the BIG pass over the mention stream groups
     * by (norm, tag, value) with a pure count — a codegen'd HashAggregate
@@ -102,7 +109,7 @@ object KgPipeline {
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("norm"), col("tag"))
       .agg(sum(col("cnt")).as("n_mentions"), min(col("value")).as("surface"))
-      .withColumn("node_id", xxhash64(concat(col("tag"), lit("|"), col("norm"))))
+      .withColumn("node_id", entityId(col("tag"), col("norm")))
 
   /** Candidate same-entity pairs via blocking keys (rows 45–47): explode
     * block keys, self-join on (tag, key), residual `isMatch` theta
@@ -162,10 +169,7 @@ object KgPipeline {
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       checkpointDir: Option[String] = None, nNodes: Option[Long] = None): DataFrame = {
     if (nNodes.getOrElse(nodes.count()) <= CC_LOCAL_THRESHOLD) connectedComponentsLocal(nodes, edges)
-    else checkpointDir match {
-      case Some(dir) => connectedComponentsLoopDurable(nodes, edges, dir)
-      case None      => connectedComponentsLoop(nodes, edges)
-    }
+    else connectedComponentsLoop(nodes, edges, checkpointDir)
   }
 
   /** Driver-side union-find over the (small) collected node/edge sets. */
@@ -193,8 +197,8 @@ object KgPipeline {
   /** One min-label-propagation step: neighbor-min join + least-label
     * update. Returns the new (node_id, component) frontier — already
     * localCheckpoint'ed (lineage cut) — and the number of labels that
-    * changed (0 = converged). Shared by the in-memory and the durable
-    * loop so both propagate identically.
+    * changed (0 = converged). Called once per iteration of
+    * connectedComponentsLoop, with or without a durable frontier.
     */
   private def ccStep(spark: SparkSession, sym: DataFrame, labels: DataFrame): (DataFrame, Long) = {
     import spark.implicits._
@@ -241,46 +245,59 @@ object KgPipeline {
     * Returns (node_id, component) where component = min node_id in the
     * connected component. localCheckpoint() per iteration truncates
     * lineage; convergence via changed-count.
+    *
+    * With a `checkpointDir` the loop commits every iteration to a
+    * durable `CcFrontier` there and a killed loop resumes from its LAST
+    * COMMITTED iteration, not iteration 0 (SURVEY.md §7.5).
     */
-  def connectedComponentsLoop(nodes: DataFrame, edges: DataFrame): DataFrame = {
+  def connectedComponentsLoop(nodes: DataFrame, edges: DataFrame,
+      checkpointDir: Option[String] = None): DataFrame = {
     val spark = nodes.sparkSession
-    import spark.implicits._
-    val sym = symmetrized(edges)
-    var labels = initialLabels(nodes)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < CC_MAX_ITERS) {
-      lastIterations = iter + 1
-      val (next, changed) = ccStep(spark, sym, labels)
-      labels = next
-      converged = changed == 0
-      iter += 1
+    val frontier = checkpointDir.map(new CcFrontier(nodes, _))
+    // a local: the shared var only reports, and another loop may overwrite it
+    val resumedFrom = frontier.fold(0)(_.resumedFrom)
+    lastResumedFrom = resumedFrom
+    frontier.flatMap(_.finished) match {
+      case Some((labels, iters)) =>
+        lastIterations = iters
+        labels
+      case None =>
+        val sym = symmetrized(edges)
+        var labels = frontier.flatMap(_.resumed).getOrElse(initialLabels(nodes))
+        var iter = resumedFrom
+        var converged = false
+        while (!converged && iter < CC_MAX_ITERS) {
+          val (next, changed) = ccStep(spark, sym, labels)
+          iter += 1
+          lastIterations = iter
+          converged = changed == 0
+          frontier.foreach(_.commit(iter, next, changed, converged))
+          labels = next
+        }
+        // fail LOUDLY on non-convergence: a component with label-propagation
+        // diameter > CC_MAX_ITERS would otherwise flow mislabeled into
+        // canonicalization undetected (min-label propagation halves the
+        // effective diameter per iteration on the min side, so 25 iterations
+        // cover any realistic alias graph — if this fires, the edge set is
+        // pathological and must be inspected, not silently canonicalized)
+        require(converged,
+          s"connectedComponentsLoop did not converge within $CC_MAX_ITERS iterations")
+        System.err.println(s"[kg] connectedComponentsLoop converged after $iter iterations " +
+          s"(resumed from $resumedFrom)")
+        labels
     }
-    // fail LOUDLY on non-convergence: a component with label-propagation
-    // diameter > CC_MAX_ITERS would otherwise flow mislabeled into
-    // canonicalization undetected (min-label propagation halves the
-    // effective diameter per iteration on the min side, so 25 iterations
-    // cover any realistic alias graph — if this fires, the edge set is
-    // pathological and must be inspected, not silently canonicalized)
-    require(converged,
-      s"connectedComponentsLoop did not converge within $CC_MAX_ITERS iterations")
-    System.err.println(s"[kg] connectedComponentsLoop converged after $lastIterations iterations")
-    labels
   }
 
-  /** Iteration the last durable-loop call resumed from (0 = fresh start;
-    * spec evidence that a resumed loop skipped iterations 1..k).
-    */
-  @volatile var lastResumedFrom: Int = 0
+  /** The durable loop under the name the perfbench harness calls. */
+  def connectedComponentsLoopDurable(nodes: DataFrame, edges: DataFrame,
+      checkpointDir: String): DataFrame = connectedComponentsLoop(nodes, edges, Some(checkpointDir))
 
-  /** Durable-checkpoint variant of the CC loop (SURVEY.md §7.5; VERDICT
-    * r3 "what's missing" #2): every iteration PERSISTS its label frontier
-    * as parquet under `checkpointDir/iter-<k>` and then commits it with a
-    * temp-file→rename marker `iter-<k>.done.json` (the same commit-point
-    * protocol as GraphSink manifests). A killed linking phase resumes
-    * from the LAST COMMITTED frontier instead of iteration 0 — at
-    * 10^12-turn scale each iteration shuffles the full alias graph, so
-    * re-running 1..k-1 after a mid-loop executor loss is real money.
+  /** The durable frontier of one connectedComponentsLoop call: every
+    * iteration PERSISTS its label frontier as parquet under `dir/iter-<k>`
+    * and then commits it with a temp-file→rename marker
+    * `iter-<k>.done.json` (the same commit-point protocol as GraphSink
+    * manifests). At 10^12-turn scale each iteration shuffles the full
+    * alias graph, so re-running 1..k-1 after an executor loss is real money.
     *
     * The marker records an order-independent fingerprint of the input
     * node set (count + bit_xor of node ids); resuming a checkpoint
@@ -289,98 +306,81 @@ object KgPipeline {
     * previous frontier is pruned after each commit, so storage stays
     * O(|nodes|), not O(iters·|nodes|).
     */
-  def connectedComponentsLoopDurable(
-      nodes: DataFrame,
-      edges: DataFrame,
-      checkpointDir: String): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val dirPath = new Path(checkpointDir)
-    val f = Commit.fs(spark, checkpointDir)
+  private final class CcFrontier(nodes: DataFrame, dir: String) {
+    private val spark = nodes.sparkSession
+    private val f = Commit.fs(spark, dir)
 
     // identity of the input node set — one tiny agg over the (small)
     // alias-node table, NOT the corpus
-    val idRow = nodes.agg(count(lit(1)).as("n"),
+    private val idRow = nodes.agg(count(lit(1)).as("n"),
       expr("bit_xor(xxhash64(node_id))").as("fp")).first()
-    val nNodes = idRow.getLong(0)
+    private val nNodes = idRow.getLong(0)
     // bit_xor over zero rows is NULL; 0L stands in so the fingerprint
     // guard below still runs — an empty node set against a checkpoint
     // committed for a real graph must fail LOUDLY (wrong input path),
     // not return silent empty output
-    val nodesFp = if (idRow.isNullAt(1)) 0L else idRow.getLong(1)
+    private val nodesFp = if (idRow.isNullAt(1)) 0L else idRow.getLong(1)
 
-    // an unreadable marker fails here, naming its file: skipping it would skip the guard below
-    val committed: Seq[Records.CcMarker] =
-      if (!f.exists(dirPath)) Nil
-      else f.listStatus(dirPath).toSeq.map(_.getPath)
-        .filter(p => p.getName.startsWith("iter-") && p.getName.endsWith(".done.json"))
-        .map(p => Records.CcMarker.read(f, p))
-    val last = committed.sortBy(_.iter).lastOption
-    for (m <- last) require(m.nodes == nNodes && m.nodesFp == nodesFp,
-      s"CC checkpoint at $checkpointDir (iter ${m.iter}) was written for a different " +
-        s"node set (${m.nodes} nodes, fp ${m.nodesFp}; current: $nNodes, fp $nodesFp) — " +
-        s"delete the checkpoint directory (`rm -r $checkpointDir`, for a KgJob output " +
-        "that is `<output>/_cc_checkpoints`) or point the job at its original input")
-    // sweep frontiers superseded before a crash landed in the
-    // commit-then-prune window: without this, an iter-(k-1) surviving a
-    // crash between iter-k's marker rename and its prune is never
-    // deleted by later iterations (which only prune their immediate
-    // predecessor) — storage must stay O(|nodes|)
-    for (m <- committed; l <- last if m.iter < l.iter) {
-      f.delete(new Path(s"$checkpointDir/iter-${m.iter}"), true)
-      f.delete(new Path(s"$checkpointDir/iter-${m.iter}.done.json"), false)
-    }
-    // a local: the shared var only reports, and another loop may overwrite it
-    val resumedFrom = last.map(_.iter).getOrElse(0)
-    lastResumedFrom = resumedFrom
-
-    // empty node set (fingerprint guard above already vetted it against
-    // any committed checkpoint): converges trivially, nothing to persist
-    if (nNodes == 0L) {
-      lastIterations = 0
-      return nodes.select($"node_id", $"node_id".as("component"))
+    private val last: Option[Records.CcMarker] = {
+      val dirPath = new Path(dir)
+      // an unreadable marker fails here, naming its file: skipping it would skip the guard below
+      val committed: Seq[Records.CcMarker] =
+        if (!f.exists(dirPath)) Nil
+        else f.listStatus(dirPath).toSeq.map(_.getPath)
+          .filter(p => p.getName.startsWith("iter-") && p.getName.endsWith(".done.json"))
+          .map(p => Records.CcMarker.read(f, p))
+      val last = committed.sortBy(_.iter).lastOption
+      for (m <- last) require(m.nodes == nNodes && m.nodesFp == nodesFp,
+        s"CC checkpoint at $dir (iter ${m.iter}) was written for a different " +
+          s"node set (${m.nodes} nodes, fp ${m.nodesFp}; current: $nNodes, fp $nodesFp) — " +
+          s"delete the checkpoint directory (`rm -r $dir`, for a KgJob output " +
+          "that is `<output>/_cc_checkpoints`) or point the job at its original input")
+      // sweep frontiers superseded before a crash landed in the
+      // commit-then-prune window: without this, an iter-(k-1) surviving a
+      // crash between iter-k's marker rename and its prune is never
+      // deleted by later iterations (which only prune their immediate
+      // predecessor) — storage must stay O(|nodes|)
+      for (m <- committed; l <- last if m.iter < l.iter) drop(m.iter)
+      last
     }
 
-    // a checkpoint that already converged: the frontier IS the answer
-    for (m <- last if m.converged) {
-      lastIterations = m.iter
-      System.err.println(s"[kg] durable CC: converged checkpoint found at iteration ${m.iter}; no work")
-      return spark.read.parquet(s"$checkpointDir/iter-${m.iter}")
-    }
+    /** The last committed iteration (0 = fresh start). */
+    val resumedFrom: Int = last.map(_.iter).getOrElse(0)
 
-    val sym = symmetrized(edges)
-    var labels = last match {
-      case Some(m) =>
-        System.err.println(s"[kg] durable CC: resuming from committed iteration ${m.iter}")
-        spark.read.parquet(s"$checkpointDir/iter-${m.iter}").localCheckpoint()
-      case None => initialLabels(nodes)
-    }
-    var iter = resumedFrom
-    var converged = false
-    while (!converged && iter < CC_MAX_ITERS) {
-      val (next, changed) = ccStep(spark, sym, labels)
-      iter += 1
-      lastIterations = iter
-      converged = changed == 0
-      // persist-then-commit: parquet first, marker rename is the commit
-      // point; a crash between the two leaves an uncommitted directory
-      // that the overwrite below simply replaces on resume
-      next.write.mode(SaveMode.Overwrite).parquet(s"$checkpointDir/iter-$iter")
-      Commit.write(f, new Path(s"$checkpointDir/iter-$iter.done.json"),
-        Records.CcMarker(iter, changed, converged, nNodes, nodesFp).json)
-      // prune the superseded frontier AFTER the new commit (a crash in
-      // between leaves two markers; resume takes the max)
-      if (iter > 1) {
-        f.delete(new Path(s"$checkpointDir/iter-${iter - 1}"), true)
-        f.delete(new Path(s"$checkpointDir/iter-${iter - 1}.done.json"), false)
+    /** The labels and iteration count if nothing is left to propagate. */
+    def finished: Option[(DataFrame, Int)] =
+      // empty node set (the fingerprint guard already vetted it against
+      // any committed checkpoint): converges trivially, nothing to persist
+      if (nNodes == 0L) Some((nodes.select(col("node_id"), col("node_id").as("component")), 0))
+      // a checkpoint that already converged: the frontier IS the answer
+      else last.filter(_.converged).map { m =>
+        System.err.println(s"[kg] durable CC: converged checkpoint found at iteration ${m.iter}; no work")
+        (spark.read.parquet(s"$dir/iter-${m.iter}"), m.iter)
       }
-      labels = next
+
+    /** The last committed frontier, if any, to propagate from. */
+    def resumed: Option[DataFrame] = last.map { m =>
+      System.err.println(s"[kg] durable CC: resuming from committed iteration ${m.iter}")
+      spark.read.parquet(s"$dir/iter-${m.iter}").localCheckpoint()
     }
-    require(converged,
-      s"connectedComponentsLoopDurable did not converge within $CC_MAX_ITERS iterations")
-    System.err.println(s"[kg] durable CC converged after $lastIterations iterations " +
-      s"(resumed from $resumedFrom)")
-    labels
+
+    /** Persist-then-commit: parquet first, the marker rename is the
+      * commit point (a crash between the two leaves an uncommitted dir the
+      * overwrite replaces on resume); the superseded frontier is pruned
+      * AFTER the commit (a crash in between leaves two markers; resume
+      * takes the max).
+      */
+    def commit(iter: Int, labels: DataFrame, changed: Long, converged: Boolean): Unit = {
+      labels.write.mode(SaveMode.Overwrite).parquet(s"$dir/iter-$iter")
+      Commit.write(f, new Path(s"$dir/iter-$iter.done.json"),
+        Records.CcMarker(iter, changed, converged, nNodes, nodesFp).json)
+      if (iter > 1) drop(iter - 1)
+    }
+
+    private def drop(iter: Int): Unit = {
+      f.delete(new Path(s"$dir/iter-$iter"), true)
+      f.delete(new Path(s"$dir/iter-$iter.done.json"), false)
+    }
   }
 
   /** Canonicalization: component -> canonical surface (min norm, matching
@@ -390,7 +390,7 @@ object KgPipeline {
     val withComp = nodes.join(labels, "node_id")
     val canon = withComp.groupBy(col("component"), col("tag"))
       .agg(min(col("norm")).as("canonical_norm"))
-      .withColumn("entity_id", xxhash64(concat(col("tag"), lit("|"), col("canonical_norm"))))
+      .withColumn("entity_id", entityId(col("tag"), col("canonical_norm")))
     withComp.select(col("node_id"), col("norm"), col("tag"), col("component"))
       .join(canon.select(col("component"), col("tag"), col("canonical_norm"), col("entity_id")),
         Seq("component", "tag"))
@@ -403,7 +403,7 @@ object KgPipeline {
       .agg(min(col("norm")).as("canonical"),
         sort_array(collect_set(col("surface"))).as("aliases"),
         sum(col("n_mentions")).as("n_mentions"))
-      .withColumn("entity_id", xxhash64(concat(col("tag"), lit("|"), col("canonical"))))
+      .withColumn("entity_id", entityId(col("tag"), col("canonical")))
       .select(col("entity_id"), col("canonical"), col("tag").as("entity_type"),
         col("aliases"), col("n_mentions"))
 
@@ -424,65 +424,55 @@ object KgPipeline {
       resolveTriplesBroadcast(triples, canonMap)
     else resolveTriplesSalted(triples, canonMap)
 
+  /** The canonical-map columns both resolve joins read. */
+  private def canonProjection(canonMap: DataFrame): DataFrame =
+    canonMap.select(col("norm"), col("tag"), col("entity_id"), col("canonical_norm"))
+
+  /** The projected map renamed for one join side: `p_norm` key, `role_*`
+    * outputs, plus any `extra` join-key renames. */
+  private def canonSide(cm: DataFrame, p: String, role: String,
+      extra: (String, String)*): DataFrame =
+    cm.withColumnsRenamed(Map("norm" -> s"${p}_norm", "tag" -> s"${role}_tag",
+      "entity_id" -> s"${role}_id", "canonical_norm" -> s"${role}_canonical") ++ extra)
+
+  /** The resolved-triple columns both resolve joins return. */
+  private val resolvedColumns: Seq[Column] = Seq(
+    col("conv_id"), col("turn_idx"), col("ts"),
+    col("subj"), col("pred"), col("obj"),
+    col("subj_tag"), col("obj_tag"),
+    col("subj_id"), col("obj_id"),
+    coalesce(col("subj_canonical"), col("s_norm")).as("subj_canonical"),
+    coalesce(col("obj_canonical"), col("o_norm")).as("obj_canonical"))
+
   /** Broadcast path: one narrow stage over the triple stream. */
   def resolveTriplesBroadcast(triples: DataFrame, canonMap: DataFrame): DataFrame = {
     import graft.functions.NativeFunctions.normalize_surface
-    val cm = canonMap.select(col("norm"), col("tag"), col("entity_id"), col("canonical_norm"))
-    val withSubj = triples
+    val cm = canonProjection(canonMap)
+    triples
       .withColumn("s_norm", normalize_surface(col("subj")))
-      .join(broadcast(cm
-          .withColumnRenamed("norm", "s_norm").withColumnRenamed("tag", "subj_tag")
-          .withColumnRenamed("entity_id", "subj_id")
-          .withColumnRenamed("canonical_norm", "subj_canonical")),
-        Seq("s_norm", "subj_tag"), "left")
-    withSubj
+      .join(broadcast(canonSide(cm, "s", "subj")), Seq("s_norm", "subj_tag"), "left")
       .withColumn("o_norm", normalize_surface(col("obj")))
-      .join(broadcast(cm
-          .withColumnRenamed("norm", "o_norm").withColumnRenamed("tag", "obj_tag")
-          .withColumnRenamed("entity_id", "obj_id")
-          .withColumnRenamed("canonical_norm", "obj_canonical")),
-        Seq("o_norm", "obj_tag"), "left")
-      .select(
-        col("conv_id"), col("turn_idx"), col("ts"),
-        col("subj"), col("pred"), col("obj"),
-        col("subj_tag"), col("obj_tag"),
-        col("subj_id"), col("obj_id"),
-        coalesce(col("subj_canonical"), col("s_norm")).as("subj_canonical"),
-        coalesce(col("obj_canonical"), col("o_norm")).as("obj_canonical"))
+      .join(broadcast(canonSide(cm, "o", "obj")), Seq("o_norm", "obj_tag"), "left")
+      .select(resolvedColumns: _*)
   }
 
   /** Salted shuffle path for canonical maps too large to broadcast. */
   def resolveTriplesSalted(triples: DataFrame, canonMap: DataFrame): DataFrame = {
-    val canonSalted = canonMap
-      .select(col("norm"), col("tag"), col("entity_id"), col("canonical_norm"))
+    val canonSalted = canonProjection(canonMap)
       .withColumn("salt", explode(sequence(lit(0), lit(LINK_SALT - 1))))
-    def side(df: DataFrame, surfaceCol: String, tagCol: String, prefix: String): DataFrame = {
+    def side(df: DataFrame, surfaceCol: String, prefix: String): DataFrame = {
       df.withColumn(s"${prefix}_norm",
           graft.functions.NativeFunctions.normalize_surface(col(surfaceCol)))
         .withColumn(s"${prefix}_salt",
           pmod(xxhash64(col("conv_id"), col("turn_idx"), col(surfaceCol)), lit(LINK_SALT)).cast("int"))
     }
-    val withSubj = side(triples, "subj", "subj_tag", "s")
-      .join(canonSalted
-          .withColumnRenamed("norm", "s_norm").withColumnRenamed("tag", "subj_tag")
-          .withColumnRenamed("salt", "s_salt")
-          .withColumnRenamed("entity_id", "subj_id")
-          .withColumnRenamed("canonical_norm", "subj_canonical"),
+    val withSubj = side(triples, "subj", "s")
+      .join(canonSide(canonSalted, "s", "subj", "salt" -> "s_salt"),
         Seq("s_norm", "subj_tag", "s_salt"), "left")
-    val resolved = side(withSubj, "obj", "obj_tag", "o")
-      .join(canonSalted
-          .withColumnRenamed("norm", "o_norm").withColumnRenamed("tag", "obj_tag")
-          .withColumnRenamed("salt", "o_salt")
-          .withColumnRenamed("entity_id", "obj_id")
-          .withColumnRenamed("canonical_norm", "obj_canonical"),
+    side(withSubj, "obj", "o")
+      .join(canonSide(canonSalted, "o", "obj", "salt" -> "o_salt"),
         Seq("o_norm", "obj_tag", "o_salt"), "left")
-    resolved.select(
-      col("conv_id"), col("turn_idx"), col("ts"),
-      col("subj"), col("pred"), col("obj"),
-      col("subj_tag"), col("obj_tag"),
-      col("subj_id"), col("obj_id"),
-      coalesce(col("subj_canonical"), col("s_norm")).as("subj_canonical"),
-      coalesce(col("obj_canonical"), col("o_norm")).as("obj_canonical"))
+      .select(resolvedColumns: _*)
   }
 
   /** edges table: canonical src/dst with weights (D14). */

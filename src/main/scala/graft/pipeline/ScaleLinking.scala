@@ -44,7 +44,7 @@ object ScaleLinking {
           .when(col("v") === 1, concat(substring(col("fn"), 1, 1), lit(" "), col("ent")))
           .otherwise(concat(col("fn"), lit(" van "), col("ent"))))
       .withColumn("tag", lit("PER"))
-      .withColumn("node_id", xxhash64(concat(col("tag"), lit("|"), col("norm"))))
+      .withColumn("node_id", KgPipeline.entityId(col("tag"), col("norm")))
       .select(col("node_id"), col("norm"), col("tag"))
   }
 
@@ -133,15 +133,15 @@ object ScaleLinking {
         col("value").as("norm"))
   }
 
-  /** Run blocking → CC loop → canonicalize → SALTED resolve at scale.
-    * connectedComponentsLoop and resolveTriplesSalted are called
-    * directly: the point is to run the >threshold code paths at real
-    * size, not to re-test the adaptive dispatch (SparkParitySpec covers
-    * that both paths agree).
-    */
   /** Per-phase walls of the most recent run (bench artifact channel). */
   @volatile var lastPhaseWalls: List[(String, Double)] = Nil
 
+  /** Run blocking → CC loop → canonicalize → SALTED resolve at scale.
+    * connectedComponentsLoop (with a durable frontier) and
+    * resolveTriplesSalted are called directly, not through the adaptive
+    * dispatch: the point is to run the >threshold code paths at real
+    * size (SparkParitySpec covers that both paths agree).
+    */
   def run(spark: SparkSession, nEntities: Long = 150000L, nTriples: Long = 2000000L): Result = {
     // both temp dirs are bench scaffolding — cleaned in the finally so a
     // failed round (a require firing, a Spark action throwing) cannot
@@ -158,10 +158,10 @@ object ScaleLinking {
         val nEdges = edgesC.count()
         val overflowBlocks = overflow.count()
         phase("nodes_blocking_edges")
-        // the DURABLE loop variant (fresh checkpoint dir per run): the
-        // bench exercises the per-iteration frontier persist + marker
+        // the loop with a durable frontier (fresh checkpoint dir per run):
+        // the bench exercises the per-iteration frontier persist + marker
         // commit at 450k-node scale, not just the in-memory propagation
-        val labels = KgPipeline.connectedComponentsLoopDurable(nodes, edgesC, ccDir)
+        val labels = KgPipeline.connectedComponentsLoop(nodes, edgesC, Some(ccDir))
         require(KgPipeline.lastResumedFrom == 0, "fresh checkpoint dir must not resume")
         val nComponents = labels.select(col("component")).distinct().count()
         phase("durable_cc")

@@ -15,4 +15,13 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"observed outside GraphSink.writeObserved:\n${offenders.mkString("\n")}")
   }
+
+  test("one connected-components loop: ccStep has one call site and nothing calls the durable forwarder") {
+    def calls(name: String) = SourceGuard.lines(Set.empty, s"$name(").filterNot(_.contains(s"def $name("))
+    val steps = calls("ccStep")
+    assert(steps.size == 1, s"ccStep must be called from one loop only:\n${steps.mkString("\n")}")
+    val durable = calls("connectedComponentsLoopDurable")
+    assert(durable.isEmpty,
+      s"call connectedComponentsLoop(nodes, edges, Some(dir)) instead:\n${durable.mkString("\n")}")
+  }
 }

@@ -51,7 +51,7 @@ class DurableCcSpec extends AnyFunSuite {
   /** Runs the durable loop into `local` (its URI `dir`), killed right after `point`. */
   private def killedAt(nodes: DataFrame, edges: DataFrame, local: String, dir: String,
       point: CrashFs.Point): Unit =
-    CrashFs.kill(spark, local, point)(KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir))
+    CrashFs.kill(spark, local, point)(KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir)))
 
   /** The prune of iteration `k`'s marker, the last mutation iteration k+1 makes. */
   private def prunedMarker(k: Int) = CrashFs.Point(s"prune iter-$k marker",
@@ -70,7 +70,7 @@ class DurableCcSpec extends AnyFunSuite {
     assert(new java.io.File(s"$local/iter-2.done.json").exists())
     assert(!new java.io.File(s"$local/iter-1.done.json").exists())
 
-    val resumed = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+    val resumed = KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
     assert(KgPipeline.lastResumedFrom == 2,
       s"expected resume from committed iteration 2, got ${KgPipeline.lastResumedFrom}")
 
@@ -84,9 +84,9 @@ class DurableCcSpec extends AnyFunSuite {
   test("re-running after convergence takes the fast path (no propagation)") {
     val (nodes, edges) = chainGraph()
     val dir = Files.createTempDirectory("cc_spec_").toString
-    val first = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+    val first = KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
     val itersFirst = KgPipeline.lastIterations
-    val again = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+    val again = KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
     assert(KgPipeline.lastResumedFrom == itersFirst,
       "converged checkpoint should be picked up as the resume point")
     assert(mismatches(first, again) == 0)
@@ -101,7 +101,7 @@ class DurableCcSpec extends AnyFunSuite {
     assert(new java.io.File(s"$local/iter-2.done.json").exists() &&
       new java.io.File(s"$local/iter-2").isDirectory, "the crash must strand iteration 2")
 
-    val resumed = KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+    val resumed = KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
     assert(KgPipeline.lastResumedFrom == 3, "must resume from the max committed iteration")
     assert(!new java.io.File(s"$local/iter-2.done.json").exists(), "stale marker must be swept")
     assert(!new java.io.File(s"$local/iter-2").exists(), "stale frontier dir must be swept")
@@ -114,7 +114,7 @@ class DurableCcSpec extends AnyFunSuite {
     killedAt(nodes, edges, local, dir, committedMarker(1))
     val (otherNodes, otherEdges) = chainGraph(150)
     val e = intercept[IllegalArgumentException] {
-      KgPipeline.connectedComponentsLoopDurable(otherNodes, otherEdges, dir)
+      KgPipeline.connectedComponentsLoop(otherNodes, otherEdges, Some(dir))
     }
     assert(e.getMessage.contains("different"))
   }
@@ -131,7 +131,7 @@ class DurableCcSpec extends AnyFunSuite {
     f.delete(marker, false)
     Commit.write(f, marker, json.replaceAll(",\"nodes_fp\":-?\\d+", ""))
     val e = intercept[IllegalArgumentException] {
-      KgPipeline.connectedComponentsLoopDurable(nodes, edges, dir)
+      KgPipeline.connectedComponentsLoop(nodes, edges, Some(dir))
     }
     assert(e.getMessage.contains("iter-2.done.json") && e.getMessage.contains("nodes_fp"),
       e.getMessage)
@@ -140,7 +140,7 @@ class DurableCcSpec extends AnyFunSuite {
   test("killed at each commit point, the loop resumes from its last committed iteration to the clean labels") {
     val (nodes, edges) = chainGraph()
     val (clean, _) = ccDir()
-    def run(local: String) = KgPipeline.connectedComponentsLoopDurable(nodes, edges, CrashFs.on(spark, local))
+    def run(local: String) = KgPipeline.connectedComponentsLoop(nodes, edges, Some(CrashFs.on(spark, local)))
     val (labels, trace) = CrashFs.record(clean)(run(clean))
     val want = labels.collect().toSet
     val points = CrashFs.points(trace, Seq(
